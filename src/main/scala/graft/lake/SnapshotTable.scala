@@ -6236,9 +6236,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * [[merge]] ([[keyRewriteSet]]), survivors are a distributed
     * LEFT ANTI join of only the touched files against the distinct
     * source keys, and untouched files carry over by reference. This
-    * is the scale path [[graft.ops.Ivf.syncQuantizedIndex]] falls
-    * back to when a CDC batch's delete list exceeds its driver
-    * collect cap. Duplicate source keys are harmless (anti-join
+    * is the delete half of a key-set sync at any wave size.
+    * Duplicate source keys are harmless (anti-join
     * semantics); NULL key components never match (SQL equality).
     * Returns the new version, or the current one when no file can
     * contain any source key. */
@@ -7621,12 +7620,13 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       }
       else if (removed.isEmpty && dvDeltas.isEmpty) {
         // PURE APPEND: no file left and no DV grew, so every row of
-        // the added files is an insert — the general multiset diff
-        // below reduces to exactly this (exceptAll against an empty
-        // side keeps every row; the update-pair split against an
-        // empty key set tags them all 'insert'), but its plan carries
-        // two exceptAll subtrees + four joins PER VERSION. Append is
-        // the dominant CDC shape, so skipping the diff keeps a
+        // the added files is an insert — the general diff below
+        // ([[diffImages]]) reduces to exactly this (against an empty
+        // side every net count is positive, and no key has a removed
+        // side to pair with, so all rows tag 'insert'), but its plan
+        // still shuffles every added row through the net aggregate
+        // (and the key window on keyed versions) PER VERSION. Append
+        // is the dominant CDC shape, so skipping the diff keeps a
         // catch-up feed's plan (and its Catalyst analysis time)
         // proportional to the data actually diffed, not the history
         // length.
@@ -7675,57 +7675,15 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         val Seq(addDf, remDf) = sides.map(
           _.map(conform(_, target)).getOrElse(
             spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), target)))
-        // ONE multiset diff serves BOTH directions: Spark plans each
-        // exceptAll as union → per-row count aggregate → replicate
-        // (RewriteExceptAll), so the two directions used to shuffle
-        // the full-width touched rows TWICE. Tagging the union ±1 and
-        // netting once (the same rewrite as q133's convergence probe)
-        // halves that: net > 0 ⟺ exceptAll(add, rem) copies, net < 0
-        // ⟺ the other direction, multiplicities exactly reproduced by
-        // the sequence-explode (max(countA − countB, 0) per row).
-        // Grouping equality is the set-op equality (NULL-safe, NaN
-        // grouped) — map-typed columns are refused by both forms.
-        val sideC = "__graft_diff_side"
-        val netC = "__graft_diff_net"
-        val dataColsD = target.fieldNames.toSeq
-        val net = addDf.withColumn(sideC, lit(1L))
-          .unionByName(remDf.withColumn(sideC, lit(-1L)))
-          .groupBy(dataColsD.map(col): _*)
-          .agg(sum(col(sideC)).as(netC))
-          .filter(col(netC) =!= 0L)
-        def replicate(dir: Column): DataFrame = net.filter(dir > 0L)
-          .withColumn("__graft_diff_i", explode(sequence(lit(1L), dir)))
-          .select(dataColsD.map(col): _*)
-        val insRaw = replicate(col(netC))
-        val delRaw = replicate(-col(netC))
-        // UPDATE pre/post images (Delta CDF shape): a commit that
-        // RECORDS its key columns (#opKeys — merge does) lets the
-        // feed distinguish an update from an unrelated
-        // delete-then-insert: a key present on BOTH sides of the
-        // version's diff was updated — its old row emits
-        // `update_preimage`, its new row `update_postimage`;
-        // one-sided keys stay plain insert/delete. Keyless commits
-        // keep the raw two-row encoding. Cost: the semi+anti split
-        // reads each side's TOUCHED-file subtree twice — still
-        // scoped to the commit's files, never the table.
+        // The old diff (±1 net aggregate read by an insert and a
+        // delete replica, each split by a semi + anti join against
+        // the other side's distinct keys) planned 12 shuffle + 4
+        // broadcast exchanges per keyed version and 2 shuffles per
+        // unkeyed one; diffImages plans 2 shuffles (net aggregate +
+        // key window) and 1 shuffle respectively.
         val pairKeys = if (ridStep) Seq(RowIdCol) else m.opKeys
-        val tagged =
-          if (pairKeys.nonEmpty && pairKeys.forall(target.fieldNames.contains)) {
-            val ks = pairKeys
-            val insKeys = insRaw.select(ks.map(col): _*).distinct()
-            val delKeys = delRaw.select(ks.map(col): _*).distinct()
-            insRaw.join(delKeys, ks, "left_anti")
-              .withColumn("_change_type", lit("insert"))
-              .unionByName(insRaw.join(delKeys, ks, "left_semi")
-                .withColumn("_change_type", lit("update_postimage")))
-              .unionByName(delRaw.join(insKeys, ks, "left_anti")
-                .withColumn("_change_type", lit("delete")))
-              .unionByName(delRaw.join(insKeys, ks, "left_semi")
-                .withColumn("_change_type", lit("update_preimage")))
-          } else
-            insRaw.withColumn("_change_type", lit("insert"))
-              .unionByName(delRaw.withColumn("_change_type", lit("delete")))
-        Some(translate(tagged, m.colmap).withColumn("_commit_version", lit(v)))
+        Some(translate(diffImages(addDf, remDf, pairKeys), m.colmap)
+          .withColumn("_commit_version", lit(v)))
       }
     }
     val feed = steps.reduceOption(_.unionByName(_, allowMissingColumns = true))
@@ -7749,5 +7707,46 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // `_row_id` (used above for exact pairing) stays only on request
     feed.drop(feed.columns.filter(c => c.startsWith("__p_") ||
       (c == RowIdCol && !includeRowIds)).toSeq: _*)
+  }
+
+  /** One version's change rows from the rows its commit ADDED and
+    * REMOVED (same columns), each tagged `_change_type`: the
+    * multiset difference both ways. Carried-over rows cancel; a row
+    * with `n` more copies on one side is emitted `n` times (the
+    * EXCEPT ALL multiplicity `max(countA − countB, 0)`).
+    *
+    * With `pairKeys` (all present in the frame) the feed is
+    * Delta-CDF-shaped: a key with rows on BOTH sides was updated —
+    * new rows emit `update_postimage`, old rows `update_preimage`;
+    * one-sided keys stay insert/delete. A key with a NULL component
+    * never pairs (SQL equality); NaN and −0.0/0.0 pair as equi-join
+    * keys do, since window partitioning normalizes floats the same
+    * way. Plan: one ±1 aggregate over all columns (set-op equality:
+    * NULL-safe, NaN grouped; map columns refused), one window over
+    * the keys when keyed, one sequence-explode — two shuffles keyed,
+    * one unkeyed. */
+  private[lake] def diffImages(addDf: DataFrame, remDf: DataFrame,
+      pairKeys: Seq[String]): DataFrame = {
+    val netC = "__graft_diff_net"
+    val dataCols = addDf.columns.toSeq
+    val net = addDf.withColumn(netC, lit(1L))
+      .unionByName(remDf.withColumn(netC, lit(-1L)))
+      .groupBy(dataCols.map(col): _*)
+      .agg(sum(col(netC)).as(netC))
+      .filter(col(netC) =!= 0L)
+    val isIns = col(netC) > 0L
+    val changeType =
+      if (pairKeys.nonEmpty && pairKeys.forall(dataCols.contains)) {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(pairKeys.map(col): _*)
+        val pairable = pairKeys.map(col(_).isNotNull).reduce(_ && _)
+        when(isIns, when(pairable && max(col(netC) < 0L).over(w), "update_postimage")
+            .otherwise("insert"))
+          .otherwise(when(pairable && max(isIns).over(w), "update_preimage")
+            .otherwise("delete"))
+      } else when(isIns, "insert").otherwise("delete")
+    net.withColumn("_change_type", changeType)
+      .withColumn("__graft_diff_i", explode(sequence(lit(1L), abs(col(netC)))))
+      .select((dataCols :+ "_change_type").map(col): _*)
   }
 }

@@ -481,22 +481,16 @@ object Ivf {
     * state. Serve reads with `SnapshotTable.read(indexPath)` into
     * [[searchQuantizedIndexed]].
     *
-    * Deleted ids are collected to the driver for the delete
-    * predicate, capped at `deleteCollectCap`; a delete wave past the
-    * cap never reaches the driver — it routes through the
-    * distributed anti-join delete
-    * ([[graft.lake.SnapshotTable.deleteKeys]]) over the
-    * stats-pruned file set, so the sync job survives bulk
-    * retention waves without a rebuild. */
+    * Upserts and deletes land as one distributed clause-merge (see
+    * [[applyChangeBatch]]): deleted ids are never collected, so the
+    * sync job survives bulk retention waves without a rebuild. */
   def syncQuantizedIndex(spark: SparkSession, corpusPath: String,
       indexPath: String, checkpointDir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      deleteCollectCap: Int = 100000): Option[(Long, Long)] = {
+      vecCol: String = "embedding"): Option[(Long, Long)] = {
     import graft.lake.SnapshotIncremental
     SnapshotIncremental.processNew(spark, corpusPath, checkpointDir,
       SnapshotIncremental.Cdc) { (changes, _, _) =>
-      applyChangeBatch(spark, changes, indexPath, idCol, vecCol,
-        deleteCollectCap)
+      applyChangeBatch(spark, changes, indexPath, idCol, vecCol)
     }
   }
 
@@ -515,14 +509,12 @@ object Ivf {
     * table records merge keys, so its feed carries CDF update
     * images); update_preimage/delete as absence. Idempotent on
     * replay: merge upserts to the same state, deletes of
-    * already-absent ids are no-ops. `deleteCollectCap` is retained
-    * for signature compatibility: since r21 the steady-state batch
-    * applies upserts AND deletes as ONE distributed clause-merge
-    * (single rewrite + commit), so no delete list is ever collected
-    * at any wave size. */
+    * already-absent ids are no-ops. The steady-state batch applies
+    * upserts AND deletes as ONE distributed clause-merge (single
+    * rewrite + commit), so no delete list is ever collected at any
+    * wave size. */
   private[graft] def applyChangeBatch(spark: SparkSession, changes: DataFrame,
-      indexPath: String, idCol: String, vecCol: String,
-      deleteCollectCap: Int): Unit = {
+      indexPath: String, idCol: String, vecCol: String): Unit = {
     import graft.lake.SnapshotTable
     val present = col("_change_type").isin("insert", "update_postimage")
     val w = Window.partitionBy(col(idCol)).orderBy(
@@ -552,8 +544,8 @@ object Ivf {
         // ONE clause-merge applies the batch's upserts AND deletes in
         // a single stats-pruned rewrite + single commit (r20 did
         // merge-then-delete: two file findings, two rewrites, two
-        // commits per batch, plus a driver collect of the delete ids
-        // bounded by deleteCollectCap). The union source tags each
+        // commits per batch, plus a capped collect of the delete
+        // ids). The union source tags each
         // final-state row present/absent; matched-present updates,
         // matched-absent deletes, unmatched-present inserts — fully
         // distributed at ANY delete-wave size (the collect cap is
@@ -591,7 +583,7 @@ object Ivf {
     * bounds the bootstrap the same way it does for the raw source. */
   def syncQuantizedIndexStream(spark: SparkSession, corpusPath: String,
       indexPath: String, checkpointDir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding", deleteCollectCap: Int = 100000,
+      vecCol: String = "embedding",
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       maxVersionsPerTrigger: Option[Long] = None)
@@ -603,8 +595,7 @@ object Ivf {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (changes: DataFrame, _: Long) =>
-        applyChangeBatch(spark, changes, indexPath, idCol, vecCol,
-          deleteCollectCap)
+        applyChangeBatch(spark, changes, indexPath, idCol, vecCol)
         ()
       }
       .start()

@@ -62,7 +62,8 @@ import graft.lake.SnapshotTable
   *
   * V1-source note: this source returns each batch as a DataFrame
   * (`getBatch`), because the change diff is inherently a multi-way
-  * plan (per-commit multiset EXCEPT ALL + image pairing), not a file
+  * plan (per-commit net-count aggregate + key window for the image
+  * pairs, see `SnapshotTable.diffImages`), not a file
   * scan — the v1 `Source` API is the public seam Spark keeps for
   * exactly this; admission control and Trigger.AvailableNow are wired
   * through the same connector interfaces the DSv2 raw source uses.

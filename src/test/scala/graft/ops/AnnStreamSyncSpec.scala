@@ -134,12 +134,10 @@ class AnnStreamSyncSpec extends SparkTestBase {
     SnapshotTable.append(emb, corpus)
     assert(Ivf.syncQuantizedIndex(spark, corpus, index, syncCkpt).isDefined)
     assert(SnapshotTable.read(spark, index).count() === 300L)
-    // a retention wave deletes half the corpus: 150 ids ≫ the lowered
-    // cap — the sync must converge WITHOUT collecting them (the old
-    // behavior threw here)
+    // a retention wave deletes half the corpus: the sync must
+    // converge in one distributed clause-merge, collecting no ids
     SnapshotTable.delete(spark, corpus, col("vec_id") < 150)
-    assert(Ivf.syncQuantizedIndex(spark, corpus, index, syncCkpt,
-      deleteCollectCap = 50).isDefined)
+    assert(Ivf.syncQuantizedIndex(spark, corpus, index, syncCkpt).isDefined)
     val got = SnapshotTable.read(spark, index).select("vec_id", "scale", "qvec")
     val want = Similarity.quantize(
       SnapshotTable.read(spark, corpus).select("vec_id", "embedding"))
@@ -147,8 +145,7 @@ class AnnStreamSyncSpec extends SparkTestBase {
     assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0,
       "index != quantize(corpus) after the big-delete sync")
     // replaying the same drained batch is a no-op (cursor advanced)
-    assert(Ivf.syncQuantizedIndex(spark, corpus, index, syncCkpt,
-      deleteCollectCap = 50).isEmpty)
+    assert(Ivf.syncQuantizedIndex(spark, corpus, index, syncCkpt).isEmpty)
     assert(SnapshotTable.read(spark, index).count() === 150L)
   }
 }
