@@ -60,7 +60,8 @@ trait CommitLockProvider {
   * reason this interface exists).
   */
 class FileCommitLockProvider(leaseMs: Long = 60000L,
-    acquireTimeoutMs: Long = 60000L) extends CommitLockProvider {
+    acquireTimeoutMs: Long = 60000L) extends CommitLockProvider
+    with org.apache.spark.internal.Logging {
   import java.nio.charset.StandardCharsets.UTF_8
 
   override def withLock[T](tablePath: String)(body: => T): T = {
@@ -139,7 +140,12 @@ class FileCommitLockProvider(leaseMs: Long = 60000L,
     beat.scheduleAtFixedRate(() => {
       try if (readToken(lock).contains(token))
         fs.setTimes(lock, System.currentTimeMillis(), -1)
-      catch { case _: Throwable => () }
+      catch {
+        // keep beating: one failed touch is not fatal to the lease, but
+        // a run of them lets it go stale under a live holder
+        case scala.util.control.NonFatal(e) =>
+          logWarning(s"commit lock heartbeat failed at $lock: ${e.getMessage}")
+      }
     }, period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
     try body
     finally {

@@ -1203,16 +1203,16 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  private def listParquet(f: FileSystem, dir: Path): Seq[String] = {
-    val it = f.listFiles(dir, true)
-    val buf = scala.collection.mutable.ArrayBuffer[String]()
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet"))
-        buf += s.getPath.toString
+  /** Parquet files under `dir`, recursing into partition dirs.
+    * `listStatus`, not `listFiles`: the latter's `LocatedFileStatus`
+    * loads permissions, which the local file system does by forking
+    * `ls -ld` once per file. */
+  private def listParquet(f: FileSystem, dir: Path): Seq[String] =
+    f.listStatus(dir).toSeq.flatMap { s =>
+      if (s.isDirectory) listParquet(f, s.getPath)
+      else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getPath.toString)
+      else Nil
     }
-    buf.toSeq
-  }
 
   /** Manifest entries for a freshly written commit dir. Footer reads
     * (row count + per-column min/max) are driver-side metadata IO
@@ -5182,8 +5182,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   private def guardState(es: Seq[Entry]): Set[(String, Option[(String, Long)])] =
     es.map(e => (e.filePath, e.dv)).toSet
 
-  /** OCC carry-over shared by the rewriting DMLs (merge, clause
-    * merge, delete, deleteKeys, deleteRowIds, update, compact) —
+  /** OCC carry-over of every rewrite ([[Rewrite.commit]]) —
     * Delta's ConflictChecker shape at its default WRITE-SERIALIZABLE
     * isolation, at file granularity. When the CAS loses, the
     * carry-over re-diffs the new head against the snapshot this DML
@@ -5685,6 +5684,132 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     }
   }
 
+  // ---- the rewrite core ---------------------------------------------
+  // Every statement that replaces live files — merge, mergeClauses
+  // (deleteKeys through it), delete, deleteRowIds, update, compact,
+  // the clustering passes and auto-compaction — plans on one snapshot,
+  // reads the files it replaces and commits through the pieces below.
+  // A site states only how it finds its files and builds their rows.
+
+  /** The snapshot a rewrite plans on: version `base` of `path`. */
+  private[lake] final class Rewrite(val spark: SparkSession, val path: String,
+      val base: Long, val m: Manifest) {
+    requireWriterFeatures(m, path)
+    def entries: Seq[Entry] = m.entries
+    def ridTracked: Boolean = m.rowIdHigh.isDefined
+    lazy val generated: Seq[String] = generatedNamesOf(m)
+    /** Identity columns, each with whether it is GENERATED ALWAYS. */
+    lazy val identity: Seq[(String, Boolean)] =
+      m.schema.map(identityColumnsOf).getOrElse(Nil).map(t => (t._1.name, !t._4))
+    /** The table's columns as a reader sees them at `base`. */
+    lazy val fields: Seq[StructField] = read(spark, path, Some(base)).schema.fields.toSeq
+
+    /** Idempotent-write gate (Delta txnAppId/txnVersion): a replayed
+      * epoch skips even the file-finding jobs; commit() re-checks
+      * atomically, so a crash or race can never double-apply. */
+    def replayed(txn: Option[(String, Long)]): Boolean =
+      txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) }
+
+    /** The live rows of `es`; on a tracked table with the stable
+      * `__rid` the commit carries over. */
+    def readFiles(es: Seq[Entry]): DataFrame =
+      if (ridTracked) readGroupsWithRid(spark, es, m.schema, m.colmap)
+      else readGroups(spark, es, m.schema, m.colmap)
+
+    /** The files holding a row where `predicate` holds: one scan that
+      * tags `input_file_name()` on the matching rows, pruned by the
+      * manifest's stats like any [[readWhere]] — the exact minimal
+      * rewrite set. */
+    def filesWhere(predicate: Column, alias: Option[String],
+        withRowIds: Boolean = false): Seq[Entry] = {
+      val hit = readWhereImpl(spark, path, predicate, Some(base), alias, withRowIds)
+        .select(input_file_name()).distinct()
+        .collect().map(r => normInputFile(r.getString(0))).toSet
+      entries.filter(e => hit(normFile(e.filePath)))
+    }
+
+    /** `given`, else the hive layout of `layout`'s files: a rewrite
+      * must keep it, or [[overwritePartitions]] stops matching them. */
+    def partitionCols(given: Seq[String], layout: Seq[Entry] = entries): Seq[String] =
+      if (given.nonEmpty) given else inferPartitionCols(layout, m.colmap.map(_.swap))
+
+    /** Refuse the `names` a caller may not supply — a merge source's
+      * columns, or an assignment list's targets: the reserved `__rid`
+      * and `__graft_` columns, and those of `derived` (generated or
+      * identity columns) it names. `what` opens each message. */
+    def refuse(what: String, names: Seq[String], derived: Seq[String]): Unit = {
+      def hits(cs: Seq[String]) = names.filter(n => cs.exists(_.equalsIgnoreCase(n)))
+      require(hits(Seq(RidCol)).isEmpty, s"$what the reserved column '$RidCol'")
+      require(!names.exists(_.startsWith("__graft_")),
+        s"$what reserved '__graft_'-prefixed columns")
+      val gen = hits(derived.filter(generated.contains))
+      require(gen.isEmpty, s"$what GENERATED column(s) ${gen.mkString(", ")} — " +
+        "they derive from their expressions")
+      val ids = hits(derived.filterNot(generated.contains))
+      require(ids.isEmpty, s"$what IDENTITY column(s) ${ids.mkString(", ")} — " +
+        "the table assigns their values")
+    }
+
+    /** [[refuse]] for an assignment list, after its own checks: each
+      * column assigned once, and every one in the table. */
+    def refuseAssigns(what: String, assigns: Seq[(String, Column)],
+        derived: Seq[String]): Unit = {
+      val names = assigns.map(_._1)
+      val dup = names.groupBy(_.toLowerCase).collect { case (c, ns) if ns.size > 1 => c }
+      require(dup.isEmpty,
+        s"$what assigns the same column more than once: ${dup.mkString(", ")}")
+      val unknown = names.filterNot(n => fields.exists(_.name.equalsIgnoreCase(n)))
+      require(unknown.isEmpty,
+        s"$what names columns not in the table: ${unknown.mkString(", ")}")
+      refuse(s"$what targets", names, derived)
+    }
+
+    /** Commit `df` in place of `rewritten`; the other live files carry
+      * over by reference under the rebasing write-skew guard. The new
+      * files record stats for every column `statsFrom`'s files track,
+      * plus `moreStats`: the DML sites pass every live entry, so
+      * pruning stays effective across statements, and the maintenance
+      * sites the rewritten ones. With `dupKeys`, a failure raised by
+      * the in-pass duplicate-key guard (inside the rewrite job, before
+      * any publish) surfaces as the API-level error. */
+    def commit(df: DataFrame, op: String, rewritten: Seq[Entry],
+        partCols: Seq[String], statsFrom: Seq[Entry],
+        moreStats: Seq[String] = Nil, opKeys: Seq[String] = Nil,
+        txn: Option[(String, Long)] = None, dupKeys: Seq[String] = Nil,
+        clusterTag: Option[String] = None,
+        newClusterCols: Seq[String] = Nil): Long = {
+      val rev = m.colmap.map(_.swap)
+      val statsOut = ((statsFrom.flatMap(_.stats.map(_._1)) ++
+        statsFrom.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c))
+        ++ moreStats).distinct
+      def raisedDup(t: Throwable): Boolean =
+        t != null && (Option(t.getMessage).exists(_.contains("duplicate keys")) ||
+          raisedDup(t.getCause))
+      try SnapshotTable.commit(df, path, partCols,
+        rebasingCarryOver(path, op, entries, rewritten.map(_.filePath).toSet),
+        statsCols = statsOut, op = op, opKeys = opKeys,
+        ridCarried = ridTracked && rewritten.nonEmpty, txn = txn,
+        clusterTag = clusterTag, newClusterCols = newClusterCols)
+      catch {
+        case e: Throwable if dupKeys.nonEmpty && raisedDup(e) =>
+          throw new IllegalArgumentException(dupKeysMessage(dupKeys), e)
+      }
+    }
+  }
+
+  /** Rewrite prologue: the latest snapshot of `path`, or None when the
+    * table has no committed version. */
+  private[lake] def rewriteAt(spark: SparkSession, path: String): Option[Rewrite] =
+    latestVersion(spark, path).map(v => new Rewrite(spark, path, v, readManifestFull(spark, path, v)))
+
+  private def openRewrite(spark: SparkSession, path: String): Rewrite =
+    rewriteAt(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no committed version at $path"))
+
+  private def dupKeysMessage(keyCols: Seq[String]): String =
+    s"merge source has duplicate keys on (${keyCols.mkString(", ")}) — " +
+      "each target row may be matched by at most one source row"
+
   /** Row-level MERGE (upsert): a source row whose `keyCols` match an
     * existing row replaces it, the rest insert — `MERGE ... WHEN
     * MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`, the
@@ -5716,126 +5841,83 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * Concurrency: the rewrite set is computed against the latest
     * version; if another writer commits before this merge publishes,
     * the commit aborts (write-skew guard) — rerun the merge.
+    *
+    * Why merge keeps its own plan rather than delegating to
+    * [[mergeClauses]] (`UPDATE SET *` / `INSERT *`): measured on
+    * `ev_lake_dml` (`--seconds 8`, 4-core host, alternating runs) with
+    * merge delegating, `op_p50_s` went 1.04 → 1.91, 1.08 → 1.59 and
+    * 1.46 → 1.59 s (seeds 901-903; `wall_s` 14.9 → 23.8, 15.4 → 21.4,
+    * 20.1 → 20.7 s), and on traced seed 904 from 1.06 to 1.34 s, with
+    * `lake.merge_s` 5.09 → 7.67 s, jobs 45 → 50, tasks 77 → 97, shuffle
+    * bytes 122,502 → 344,382. The clause form joins full source rows to
+    * the target through a window count, then anti-joins the key files
+    * again for its inserts; this upsert needs only a key-count
+    * aggregate and a union. MergePlanSpec pins the frame's exchanges.
     */
   def merge(source: DataFrame, path: String, keyCols: Seq[String],
       partitionCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    // mirror the generated/identity source guards: on a tracked
-    // target the rewrite carries its own __rid, and a source column
-    // of that name would otherwise surface as a confusing
-    // duplicate-column AnalysisException deep in the inheritance
-    // join instead of this reserved-name error
-    require(!source.columns.exists(_.equalsIgnoreCase(RidCol)),
-      s"merge source must not contain the reserved column '$RidCol'")
     val spark = source.sparkSession
-    val dupMsg = s"merge source has duplicate keys on (${keyCols.mkString(", ")}) — " +
-      "each target row may be updated by at most one source row"
-    val base = latestVersion(spark, path) match {
-      case None    => return commit(source, path, partitionCols, identity,
-                        statsCols = keyCols, op = "merge", opKeys = keyCols,
-                        txn = txn)
-      case Some(v) => v
+    val rw = rewriteAt(spark, path) match {
+      case None => return commit(source, path, partitionCols, identity,
+        statsCols = keyCols, op = "merge", opKeys = keyCols, txn = txn)
+      case Some(rw) => rw
     }
-    val bm = readManifestFull(spark, path, base)
-    requireWriterFeatures(bm, path)
-    // idempotent-write gate (see mergeClauses): replayed epochs skip
-    // the file-finding jobs; commit() re-checks atomically
-    txn.foreach { case (app, ver) =>
-      if (bm.txns.get(app).exists(_ >= ver)) return base
-    }
-    val entries = bm.entries
+    // the source is the new row image: a generated column in it is
+    // refused (the rewritten frame drops them, so commit() recomputes
+    // from the post-merge values), and so is an ALWAYS identity value;
+    // a source `__rid` would otherwise surface as a duplicate-column
+    // error deep in the inheritance join
+    rw.refuse("merge source must not contain", source.columns.toSeq,
+      rw.generated ++ rw.identity.collect { case (n, true) => n })
+    if (rw.replayed(txn)) return rw.base
+    val (rewrite, newData) = mergeFrame(rw, source, keyCols)
+    rw.commit(newData.drop(rw.generated: _*), "merge", rewrite,
+      rw.partitionCols(partitionCols), statsFrom = rw.entries, moreStats = keyCols,
+      opKeys = keyCols, txn = txn, dupKeys = keyCols)
+  }
 
-    // a merge SOURCE must not carry generated columns — they are
-    // derived, and silently preferring either side would hide a bug;
-    // the rewritten frame drops them below so commit() recomputes
-    // from the post-merge source values
-    val genCols = generatedNamesOf(bm)
-    val genInSource = source.columns.filter(c =>
-      genCols.exists(_.equalsIgnoreCase(c)))
-    require(genInSource.isEmpty,
-      s"merge source must not contain GENERATED column(s) " +
-        s"${genInSource.mkString(", ")} — they derive from their expressions")
-    // GENERATED ALWAYS AS IDENTITY: the source may not provide values
-    // (BY DEFAULT may — its values flow through; inserted rows'
-    // NULLs are filled by the commit's identity pass either way)
-    val alwaysIds = bm.schema.map(identityColumnsOf).getOrElse(Nil)
-      .collect { case (f, _, _, false) => f.name }
-    val idInSource = source.columns.filter(c =>
-      alwaysIds.exists(_.equalsIgnoreCase(c)))
-    require(idInSource.isEmpty,
-      s"merge source must not contain GENERATED ALWAYS AS IDENTITY " +
-        s"column(s) ${idInSource.mkString(", ")}")
-
-    val rewrite: Set[String] = keyRewriteSet(spark, path, base, entries, source, keyCols)
-    val ridTracked = bm.rowIdHigh.isDefined
-
-    // survivors of the rewritten files = rows whose key matches no
-    // source key; everything else in those files is superseded. The
-    // join carries the per-key source count, so the ambiguity guard
-    // (a target row matched by >1 source rows) fires inside this same
-    // pass via raise_error — no separate source pre-scan job.
-    val newData =
-      if (rewrite.isEmpty) source
+  /** [[merge]]'s rewrite set and the frame that replaces it: survivors
+    * of the rewritten files are the rows whose key matches no source
+    * key, unioned with the source. The join carries the per-key
+    * source count, so the ambiguity guard (a target row matched by >1
+    * source rows) fires inside this same pass via raise_error — no
+    * separate source pre-scan job. */
+  private[lake] def mergeFrame(rw: Rewrite, source: DataFrame,
+      keyCols: Seq[String]): (Seq[Entry], DataFrame) = {
+    val keyFiles = keyRewriteSet(rw.spark, rw.path, rw.base, rw.entries, source, keyCols)
+    val touched = rw.entries.filter(e => keyFiles(e.filePath))
+    if (touched.isEmpty) return (Nil, source)
+    val current = rw.readFiles(touched)
+    // IDENTITY inheritance under replace-merge: a matched
+    // (updated) row KEEPS the target's identity value — the
+    // source row inherits it by key before the union; unmatched
+    // (inserted) rows stay NULL and the commit's identity pass
+    // assigns them fresh values. Only columns the source does not
+    // provide are inherited (BY DEFAULT may provide explicitly).
+    // ROW IDS inherit the same way: an updated row keeps the
+    // target row's stable id (Delta row tracking's update rule);
+    // inserted rows stay NULL and fall back to base + position.
+    val inherit = rw.identity.map(_._1)
+      .filterNot(n => source.columns.exists(_.equalsIgnoreCase(n))) ++
+      (if (rw.ridTracked) Seq(RidCol) else Nil)
+    val src =
+      if (inherit.isEmpty) source
       else {
-        val touched = entries.filter(e => rewrite(e.filePath))
-        val current =
-          if (ridTracked) readGroupsWithRid(spark, touched, bm.schema, bm.colmap)
-          else readGroups(spark, touched, bm.schema, bm.colmap)
-        // IDENTITY inheritance under replace-merge: a matched
-        // (updated) row KEEPS the target's identity value — the
-        // source row inherits it by key before the union; unmatched
-        // (inserted) rows stay NULL and the commit's identity pass
-        // assigns them fresh values. Only columns the source does not
-        // provide are inherited (BY DEFAULT may provide explicitly).
-        // ROW IDS inherit the same way: an updated row keeps the
-        // target row's stable id (Delta row tracking's update rule);
-        // inserted rows stay NULL and fall back to base + position.
-        val inheritIds = bm.schema.map(identityColumnsOf(_).map(_._1.name))
-          .getOrElse(Nil)
-          .filterNot(n => source.columns.exists(_.equalsIgnoreCase(n)))
-        val inherit = inheritIds ++ (if (ridTracked) Seq(RidCol) else Nil)
-        val src =
-          if (inherit.isEmpty) source
-          else {
-            val aggs = inherit.map(n => min(col(n)).as(n))
-            source.join(
-              current.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*),
-              keyCols.toSeq, "left")
-          }
-        val srcKeys = src.groupBy(keyCols.map(col): _*)
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("_graft_src_cnt"))
-        current.join(srcKeys, keyCols.toSeq, "left")
-          .filter(when(col("_graft_src_cnt") > 1,
-              raise_error(lit(dupMsg)).cast("boolean"))
-            .otherwise(col("_graft_src_cnt").isNull))
-          .drop("_graft_src_cnt")
-          .unionByName(src, allowMissingColumns = true)
+        val aggs = inherit.map(n => min(col(n)).as(n))
+        source.join(
+          current.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*),
+          keyCols.toSeq, "left")
       }
-
-    // keep pruning effective across merges: re-record stats for every
-    // column any live file tracks (numeric or string), plus the merge
-    // keys themselves
-    val rev = bm.colmap.map(_.swap)
-    val statsOut = ((entries.flatMap(_.stats.map(_._1)) ++
-      entries.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c))
-      ++ keyCols).distinct
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else inferPartitionCols(entries, rev)
-    def raisedDup(t: Throwable): Boolean =
-      t != null && (Option(t.getMessage).exists(_.contains("duplicate keys")) ||
-        raisedDup(t.getCause))
-    try commit(newData.drop(genCols: _*), path, partCols,
-      rebasingCarryOver(path, "merge", entries, rewrite),
-      statsCols = statsOut, op = "merge", opKeys = keyCols,
-      ridCarried = ridTracked && rewrite.nonEmpty, txn = txn)
-    catch {
-      // surface the in-pass ambiguity guard as the API-level error
-      // (the raise_error fires inside the rewrite job, wrapped in the
-      // job-failure exception; no manifest was published)
-      case e: Throwable if raisedDup(e) => throw new IllegalArgumentException(dupMsg, e)
-    }
+    val srcKeys = src.groupBy(keyCols.map(col): _*)
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("_graft_src_cnt"))
+    (touched, current.join(srcKeys, keyCols.toSeq, "left")
+      .filter(when(col("_graft_src_cnt") > 1,
+          raise_error(lit(dupKeysMessage(keyCols))).cast("boolean"))
+        .otherwise(col("_graft_src_cnt").isNull))
+      .drop("_graft_src_cnt")
+      .unionByName(src, allowMissingColumns = true))
   }
 
   /** Extended MERGE with the full SQL:2003 clause surface (the shape
@@ -5883,10 +5965,6 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     require(keyCols.nonEmpty, "mergeClauses needs at least one key column")
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "MERGE needs at least one WHEN clause")
-    require(!source.columns.exists(_.equalsIgnoreCase(RidCol)),
-      s"merge source must not contain the reserved column '$RidCol'")
-    require(!source.columns.exists(_.startsWith("__graft_")),
-      "merge source must not contain reserved '__graft_'-prefixed columns")
     val spark = source.sparkSession
     latestVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(
@@ -5906,48 +5984,35 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         .map(f => StructField(f.name, f.dataType, nullable = true))
       if (fresh.nonEmpty) addColumns(spark, path, fresh.toSeq)
     }
-    val base = latestVersion(spark, path).get
-    val bm = readManifestFull(spark, path, base)
-    requireWriterFeatures(bm, path)
-    // idempotent-write gate (Delta txnAppId/txnVersion): a replayed
-    // epoch skips even the file-finding jobs; commit() re-checks
-    // atomically so a crash/race can never double-apply
-    txn.foreach { case (app, ver) =>
-      if (bm.txns.get(app).exists(_ >= ver)) return base
-    }
-    val entries = bm.entries
-    val fields = read(spark, path, Some(base)).schema.fields
-    val genCols = generatedNamesOf(bm)
-    val idAll = bm.schema.map(identityColumnsOf(_)).getOrElse(Nil)
-    val idCols = idAll.map(_._1.name)
-    val alwaysIds = idAll.collect { case (f, _, _, false) => f.name }
+    clauseMerge(source, path, keyCols, matched, notMatched, notMatchedBySource,
+      targetAlias, sourceAlias, partitionCols, txn, "merge", keyCols, "merge")
+  }
+
+  /** [[mergeClauses]] after its schema evolution, under the commit's
+    * `op` and `opKeys`; `what` opens the source guard's message. */
+  private def clauseMerge(source: DataFrame, path: String, keyCols: Seq[String],
+      matched: Seq[MergeMatchedClause], notMatched: Seq[MergeInsert],
+      notMatchedBySource: Seq[MergeMatchedClause],
+      targetAlias: String, sourceAlias: String, partitionCols: Seq[String],
+      txn: Option[(String, Long)], op: String, opKeys: Seq[String],
+      what: String): Long = {
+    val spark = source.sparkSession
+    val rw = openRewrite(spark, path)
+    // source columns reach the table only through assignments, which
+    // check their own targets
+    rw.refuse(s"$what source must not contain", source.columns.toSeq, Nil)
+    if (rw.replayed(txn)) return rw.base
+    val entries = rw.entries
+    val allIds = rw.identity.map(_._1)
+    val alwaysIds = rw.identity.collect { case (n, true) => n }
     def qcol(alias: String, name: String): Column = col(s"$alias.`$name`")
 
-    def checkAssigns(what: String, assigns: Seq[(String, Column)],
-        bannedIds: Seq[String]): Unit = {
-      val dup = assigns.groupBy(_._1.toLowerCase).collect {
-        case (c, as) if as.size > 1 => c
-      }
-      require(dup.isEmpty,
-        s"$what assigns the same column more than once: ${dup.mkString(", ")}")
-      val unknown = assigns.map(_._1)
-        .filterNot(n => fields.exists(_.name.equalsIgnoreCase(n)))
-      require(unknown.isEmpty,
-        s"$what names columns not in the table: ${unknown.mkString(", ")}")
-      val gen = assigns.map(_._1).filter(n => genCols.exists(_.equalsIgnoreCase(n)))
-      require(gen.isEmpty,
-        s"$what targets GENERATED column(s) ${gen.mkString(", ")} — " +
-          "they derive from their expressions")
-      val id = assigns.map(_._1).filter(n => bannedIds.exists(_.equalsIgnoreCase(n)))
-      require(id.isEmpty,
-        s"$what targets IDENTITY column(s) ${id.mkString(", ")}")
-    }
     // `SET *` / `INSERT *`: every assignable target column with a
     // same-named source column, from the source
     val srcCols = source.columns.toSeq
     def starAssigns(what: String, bannedIds: Seq[String]): Seq[(String, Column)] = {
-      val as = fields.map(_.name).toSeq
-        .filterNot(n => genCols.exists(_.equalsIgnoreCase(n)))
+      val as = rw.fields.map(_.name)
+        .filterNot(n => rw.generated.exists(_.equalsIgnoreCase(n)))
         .filterNot(n => bannedIds.exists(_.equalsIgnoreCase(n)))
         .flatMap(n => srcCols.find(_.equalsIgnoreCase(n))
           .map(sc => n -> qcol(sourceAlias, sc)))
@@ -5956,9 +6021,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       as
     }
     val matchedX: Seq[MergeMatchedClause] = matched.map {
-      case MergeUpdate(c, Nil) => MergeUpdate(c, starAssigns("UPDATE SET", idCols))
+      case MergeUpdate(c, Nil) => MergeUpdate(c, starAssigns("UPDATE SET", allIds))
       case u @ MergeUpdate(_, as) =>
-        checkAssigns("MERGE UPDATE SET", as, idCols); u
+        rw.refuseAssigns("MERGE UPDATE SET", as, rw.generated ++ allIds); u
       case d: MergeDelete => d
     }
     // NOT MATCHED BY SOURCE rows have NO source row: a source-alias
@@ -5969,8 +6034,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // A source-ONLY column name is an unambiguous source reference
     // even unqualified; a name shared with the target resolves to the
     // target side (its qualified form is legal NMBS input).
-    val srcOnlyCols = srcCols
-      .filterNot(n => fields.exists(_.name.equalsIgnoreCase(n)))
+    lazy val srcOnlyCols = srcCols
+      .filterNot(n => rw.fields.exists(_.name.equalsIgnoreCase(n)))
     def checkNmbsExpr(what: String, c: Column): Unit = {
       require(!org.apache.spark.sql.graftbridge.ColumnBridge
           .referencesQualifiedBy(c, sourceAlias),
@@ -5987,7 +6052,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         "WHEN NOT MATCHED BY SOURCE has no source row — UPDATE SET * is " +
           "meaningless there; assign explicit expressions")
       case u @ MergeUpdate(_, as) =>
-        checkAssigns("NOT MATCHED BY SOURCE UPDATE SET", as, idCols)
+        rw.refuseAssigns("NOT MATCHED BY SOURCE UPDATE SET", as, rw.generated ++ allIds)
         as.foreach { case (n, v) =>
           checkNmbsExpr(s"NOT MATCHED BY SOURCE UPDATE SET $n", v) }
         u
@@ -5998,7 +6063,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     val insertX: Seq[MergeInsert] = notMatched.map {
       case MergeInsert(c, Nil) => MergeInsert(c, starAssigns("INSERT", alwaysIds))
       case i @ MergeInsert(_, vs) =>
-        checkAssigns("MERGE INSERT", vs, alwaysIds); i
+        rw.refuseAssigns("MERGE INSERT", vs, rw.generated ++ alwaysIds); i
     }
 
     def fireOf(cond: Option[Column]): Column =
@@ -6010,7 +6075,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // condition could hold (always rewritten)
     val keyFiles: Set[String] =
       if (matchedX.nonEmpty || insertX.nonEmpty)
-        keyRewriteSet(spark, path, base, entries, source, keyCols)
+        keyRewriteSet(spark, path, rw.base, entries, source, keyCols)
       else Set.empty
     val nmbsFiles: Set[String] =
       if (nmbsX.isEmpty) Set.empty
@@ -6021,40 +6086,35 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       // finding can prune; the conditioned branch below rewrites only
       // files where some NMBS condition can hold.
       else if (nmbsX.exists(_.condition.isEmpty)) entries.map(_.filePath).toSet
-      else {
-        val pred = nmbsX.flatMap(_.condition)
-          .map(c => coalesce(c, lit(false))).reduce(_ || _)
-        val touched = readWhere(spark, path, pred, Some(base), Some(targetAlias))
-          .select(input_file_name()).distinct()
-          .collect().map(r => normInputFile(r.getString(0))).toSet
-        entries.filter(e => touched(normFile(e.filePath))).map(_.filePath).toSet
-      }
+      else rw.filesWhere(nmbsX.flatMap(_.condition)
+          .map(c => coalesce(c, lit(false))).reduce(_ || _), Some(targetAlias))
+        .map(_.filePath).toSet
     val rewriteEntries = entries.filter(e =>
       (matchedX.nonEmpty && keyFiles(e.filePath)) || nmbsFiles(e.filePath))
-    val rewriteSet = rewriteEntries.map(_.filePath).toSet
-    val ridTracked = bm.rowIdHigh.isDefined
 
     val sMark = "__graft_s_match"
     val cntCol = "__graft_src_cnt"
-    val dupMsg = s"merge source has duplicate keys on (${keyCols.mkString(", ")}) — " +
-      "each target row may be matched by at most one source row"
     def joinCond(rAlias: String): Column =
       keyCols.map(k => qcol(targetAlias, k) === qcol(rAlias, k)).reduce(_ && _)
+    // a matched list of only unconditional DELETEs needs key
+    // MEMBERSHIP, not the source rows, so duplicate source keys stay
+    // legal there (Delta's rule for a delete-only MERGE), as they do
+    // with no matched clause at all
+    val membership = matchedX.forall {
+      case MergeDelete(None) => true
+      case _ => false
+    }
 
     // target-side pass: every row of a rewritten file is either
     // matched (→ matched chain), or not matched by source (→ NMBS
-    // chain); a row no clause claims survives unchanged. With no
-    // matched clause, only key MEMBERSHIP is needed, so the join
-    // dedups to distinct keys and duplicate source keys stay legal.
+    // chain); a row no clause claims survives unchanged. A membership
+    // pass joins the distinct source keys.
     val tOut: Option[DataFrame] =
       if (rewriteEntries.isEmpty) None
       else {
-        val curA = (if (ridTracked)
-            readGroupsWithRid(spark, rewriteEntries, bm.schema, bm.colmap)
-          else readGroups(spark, rewriteEntries, bm.schema, bm.colmap))
-          .alias(targetAlias)
+        val curA = rw.readFiles(rewriteEntries).alias(targetAlias)
         val joined =
-          if (matchedX.nonEmpty) {
+          if (!membership) {
             val w = org.apache.spark.sql.expressions.Window
               .partitionBy(keyCols.map(col): _*)
             curA.join(source
@@ -6091,16 +6151,16 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         val keepRow = when(matchedFlag, keepChain(matchedX))
           .otherwise(keepChain(nmbsX))
         val guarded =
-          if (matchedX.nonEmpty)
+          if (!membership)
             joined.filter(
               when(matchedFlag && col(s"$sourceAlias.$cntCol") > 1,
-                raise_error(lit(dupMsg)).cast("boolean"))
+                raise_error(lit(dupKeysMessage(keyCols))).cast("boolean"))
               .otherwise(keepRow))
           else joined.filter(keepRow)
-        val outCols = fields.toSeq.map(f =>
+        val outCols = rw.fields.map(f =>
           when(matchedFlag, valueChain(matchedX, f))
             .otherwise(valueChain(nmbsX, f)).as(f.name)) ++
-          (if (ridTracked) Seq(col(s"$targetAlias.$RidCol").as(RidCol)) else Nil)
+          (if (rw.ridTracked) Seq(col(s"$targetAlias.$RidCol").as(RidCol)) else Nil)
         Some(guarded.select(outCols: _*))
       }
 
@@ -6116,7 +6176,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           if (keyEntries.isEmpty) srcA
           else {
             val tkAlias = "__graft_tk"
-            val curKeys = readGroups(spark, keyEntries, bm.schema, bm.colmap)
+            val curKeys = readGroups(spark, keyEntries, rw.m.schema, rw.m.colmap)
               .select(keyCols.map(col): _*).alias(tkAlias)
             srcA.join(curKeys,
               keyCols.map(k => qcol(sourceAlias, k) === qcol(tkAlias, k))
@@ -6133,32 +6193,16 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
               .getOrElse(lit(null).cast(f.dataType))
             when(fireOf(cl.condition), v).otherwise(els)
           }
-        val cols = fields.toSeq.map(f => insValue(f).as(f.name)) ++
-          (if (ridTracked) Seq(lit(null).cast(LongType).as(RidCol)) else Nil)
+        val cols = rw.fields.map(f => insValue(f).as(f.name)) ++
+          (if (rw.ridTracked) Seq(lit(null).cast(LongType).as(RidCol)) else Nil)
         Some(unmatched.filter(keepIns).select(cols: _*))
       }
 
     val parts = tOut.toSeq ++ inserts.toSeq
-    if (parts.isEmpty) return base // every clause family pruned to nothing
-    val newData = parts.reduce(_.unionByName(_))
-
-    val rev = bm.colmap.map(_.swap)
-    val statsOut = ((entries.flatMap(_.stats.map(_._1)) ++
-      entries.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c))
-      ++ keyCols).distinct
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else inferPartitionCols(entries, rev)
-    def raisedDup(t: Throwable): Boolean =
-      t != null && (Option(t.getMessage).exists(_.contains("duplicate keys")) ||
-        raisedDup(t.getCause))
-    try commit(newData.drop(genCols: _*), path, partCols,
-      rebasingCarryOver(path, "merge", entries, rewriteSet),
-      statsCols = statsOut, op = "merge", opKeys = keyCols,
-      ridCarried = ridTracked && rewriteEntries.nonEmpty, txn = txn)
-    catch {
-      case e: Throwable if raisedDup(e) => throw new IllegalArgumentException(dupMsg, e)
-    }
+    if (parts.isEmpty) return rw.base // every clause family pruned to nothing
+    rw.commit(parts.reduce(_.unionByName(_)).drop(rw.generated: _*), op,
+      rewriteEntries, rw.partitionCols(partitionCols), statsFrom = entries,
+      moreStats = keyCols, opKeys = opKeys, txn = txn, dupKeys = keyCols)
   }
 
   /** Row-level DELETE: remove the rows matching `predicate` by
@@ -6180,16 +6224,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * publish (write-skew guard) — rerun the delete. */
   def delete(spark: SparkSession, path: String, predicate: Column,
       partitionCols: Seq[String] = Nil, sqlAlias: Option[String] = None): Long = {
-    val base = latestVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
-    val bm = readManifestFull(spark, path, base)
-    requireWriterFeatures(bm, path)
-    val entries = bm.entries
-    // sqlAlias: the SQL path may qualify predicate columns with the
-    // table name (`DELETE FROM t WHERE t.c = 1`) — aliasing the scan
-    // lets both qualified and bare references resolve
-    def aliased(df: DataFrame): DataFrame =
-      sqlAlias.fold(df)(df.alias(_))
+    val rw = openRewrite(spark, path)
     // file finding goes through readWhere, so the manifest's stats
     // triple (min/max, string bounds, blooms, null counts) prunes the
     // SCAN too: a point delete on a stats-covered key opens only the
@@ -6197,80 +6232,49 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // predicate may name `_row_id` itself — the incremental-consumer
     // correction shape ("delete the row ids I just processed") —
     // which routes file finding and the rewrite through the tracked
-    // read frames.
-    val ridTracked = bm.rowIdHigh.isDefined
-    val wantsRid = ridTracked && mentionsRowId(predicate)
-    val touched: Set[String] =
-      readWhereImpl(spark, path, predicate, Some(base), sqlAlias,
-          withRowIds = wantsRid)
-        .select(input_file_name()).distinct()
-        .collect().map(r => normInputFile(r.getString(0))).toSet
-    if (touched.isEmpty) return base
-    val rewrite = entries.filter(e => touched(normFile(e.filePath)))
-    val touchedDf0 =
-      if (ridTracked) readGroupsWithRid(spark, rewrite, bm.schema, bm.colmap)
-      else readGroups(spark, rewrite, bm.schema, bm.colmap)
-    val touchedDf = aliased(
-      if (wantsRid) touchedDf0.withColumn(RowIdCol, col(RidCol)) else touchedDf0)
+    // read frames. sqlAlias: the SQL path may qualify predicate
+    // columns with the table name (`DELETE FROM t WHERE t.c = 1`) —
+    // aliasing the scan lets both qualified and bare references
+    // resolve.
+    val wantsRid = rw.ridTracked && mentionsRowId(predicate)
+    val rewrite = rw.filesWhere(predicate, sqlAlias, wantsRid)
+    if (rewrite.isEmpty) return rw.base
     // keep rows where the predicate is FALSE or NULL
-    val survivors = touchedDf.filter(!coalesce(predicate, lit(false)))
+    val survivors = withRowIdAlias(rw.readFiles(rewrite), wantsRid, sqlAlias)
+      .filter(!coalesce(predicate, lit(false)))
       .drop(RowIdCol)
-    val rev = bm.colmap.map(_.swap)
-    val statsOut = (entries.flatMap(_.stats.map(_._1)) ++
-      entries.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c)).distinct
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else inferPartitionCols(entries, rev)
-    val rewriteSet = rewrite.map(_.filePath).toSet
-    commit(survivors, path, partCols,
-      rebasingCarryOver(path, "delete", entries, rewriteSet),
-      statsCols = statsOut, op = "delete", ridCarried = ridTracked)
+    rw.commit(survivors, "delete", rewrite, rw.partitionCols(partitionCols),
+      statsFrom = rw.entries)
+  }
+
+  /** A rewrite's read of its touched files as a predicate sees it:
+    * `_row_id` exposed when the predicate names it, and under the SQL
+    * path's table alias. */
+  private def withRowIdAlias(df: DataFrame, wantsRid: Boolean,
+      sqlAlias: Option[String]): DataFrame = {
+    val withId = if (wantsRid) df.withColumn(RowIdCol, col(RidCol)) else df
+    sqlAlias.fold(withId)(withId.alias(_))
   }
 
   /** Distributed key-set DELETE — `MERGE ... WHEN MATCHED THEN
-    * DELETE` with no `WHEN NOT MATCHED` branch: every target row
-    * whose `keyCols` tuple appears in `source` is removed. Unlike
-    * [[delete]]'s predicate form, the match set is a DataFrame, so a
-    * MILLION-key delete wave never touches the driver: the rewrite
-    * set comes from the same manifest-stats + bloom pruning as
-    * [[merge]] ([[keyRewriteSet]]), survivors are a distributed
-    * LEFT ANTI join of only the touched files against the distinct
-    * source keys, and untouched files carry over by reference. This
-    * is the delete half of a key-set sync at any wave size.
-    * Duplicate source keys are harmless (anti-join
-    * semantics); NULL key components never match (SQL equality).
-    * Returns the new version, or the current one when no file can
-    * contain any source key. */
+    * DELETE` with no `WHEN NOT MATCHED` branch, and run as exactly
+    * that clause merge: every target row whose `keyCols` tuple appears
+    * in `source` is removed. Unlike [[delete]]'s predicate form, the
+    * match set is a DataFrame, so a MILLION-key delete wave never
+    * touches the driver: the rewrite set comes from the same
+    * manifest-stats + bloom pruning as [[merge]] ([[keyRewriteSet]]),
+    * survivors come from joining only the touched files with the
+    * distinct source keys, and untouched files carry over by
+    * reference. Duplicate source keys are harmless; NULL key
+    * components never match (SQL equality). The commit records op
+    * `delete_keys` and no key columns, so its change feed takes the
+    * unkeyed path. Returns the new version, or the current one when
+    * no file can contain any source key. */
   def deleteKeys(source: DataFrame, path: String, keyCols: Seq[String],
       partitionCols: Seq[String] = Nil): Long = {
     require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
-    require(!source.columns.exists(_.equalsIgnoreCase(RidCol)),
-      s"deleteKeys source must not contain the reserved column '$RidCol'")
-    val spark = source.sparkSession
-    val base = latestVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
-    val bm = readManifestFull(spark, path, base)
-    requireWriterFeatures(bm, path)
-    val entries = bm.entries
-    val rewrite = keyRewriteSet(spark, path, base, entries, source, keyCols)
-    if (rewrite.isEmpty) return base
-    val touched = entries.filter(e => rewrite(e.filePath))
-    val ridTracked = bm.rowIdHigh.isDefined
-    val current =
-      if (ridTracked) readGroupsWithRid(spark, touched, bm.schema, bm.colmap)
-      else readGroups(spark, touched, bm.schema, bm.colmap)
-    val srcKeys = source.select(keyCols.map(col): _*).distinct()
-    val survivors = current.join(srcKeys, keyCols.toSeq, "left_anti")
-    val rev = bm.colmap.map(_.swap)
-    val statsOut = ((entries.flatMap(_.stats.map(_._1)) ++
-      entries.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c))
-      ++ keyCols).distinct
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else inferPartitionCols(entries, rev)
-    commit(survivors, path, partCols,
-      rebasingCarryOver(path, "deleteKeys", entries, rewrite),
-      statsCols = statsOut, op = "delete_keys", ridCarried = ridTracked)
+    clauseMerge(source, path, keyCols, Seq(MergeDelete()), Nil, Nil, "t", "s",
+      partitionCols, None, op = "delete_keys", opKeys = Nil, what = "deleteKeys")
   }
 
   /** Distributed ROW-ID-set DELETE on a tracked table — the
@@ -6291,18 +6295,13 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       partitionCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long = {
     val spark = ids.sparkSession
-    val base = latestVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
-    val bm = readManifestFull(spark, path, base)
-    requireWriterFeatures(bm, path)
-    // idempotent-write gate: a replayed retirement wave (the
-    // foreachBatch consumer's crash-retry shape) skips entirely
-    txn.foreach { case (app, ver) =>
-      if (bm.txns.get(app).exists(_ >= ver)) return base
-    }
-    require(bm.rowIdHigh.isDefined,
+    val rw = openRewrite(spark, path)
+    // a replayed retirement wave (the foreachBatch consumer's
+    // crash-retry shape) skips entirely
+    if (rw.replayed(txn)) return rw.base
+    require(rw.ridTracked,
       s"row tracking is not enabled at $path — enableRowTracking first")
-    val entries = bm.entries
+    val entries = rw.entries
     val idCol = "__graft_del_rid"
     val idsN = ids.select(col(ids.columns.head).cast(LongType).as(idCol))
       .filter(col(idCol).isNotNull).distinct()
@@ -6353,7 +6352,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       if (mat.isEmpty) Set.empty
       else {
         val fcol = "__graft_rid_f"
-        readGroupsWithRid(spark, mat, bm.schema, bm.colmap)
+        rw.readFiles(mat)
           .select(col(RidCol), input_file_name().as(fcol))
           .join(idsN, col(RidCol) === col(idCol), "left_semi")
           .select(fcol).distinct()
@@ -6361,19 +6360,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       }
     val rewrite = entries.filter(e =>
       hit(e.filePath) || matTouched(normFile(e.filePath)))
-    if (rewrite.isEmpty) return base
-    val survivors = readGroupsWithRid(spark, rewrite, bm.schema, bm.colmap)
+    if (rewrite.isEmpty) return rw.base
+    val survivors = rw.readFiles(rewrite)
       .join(idsN, col(RidCol) === col(idCol), "left_anti")
-    val rev = bm.colmap.map(_.swap)
-    val statsOut = (entries.flatMap(_.stats.map(_._1)) ++
-      entries.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c)).distinct
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else inferPartitionCols(entries, rev)
-    val rewriteSet = rewrite.map(_.filePath).toSet
-    commit(survivors, path, partCols,
-      rebasingCarryOver(path, "deleteRowIds", entries, rewriteSet),
-      statsCols = statsOut, op = "delete", ridCarried = true, txn = txn)
+    rw.commit(survivors, "delete", rewrite, rw.partitionCols(partitionCols),
+      statsFrom = entries, txn = txn)
   }
 
   /** Row-level DELETE via deletion vectors (Delta DV / Iceberg-v3
@@ -6516,72 +6507,27 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       assignments: Seq[(String, Column)], predicate: Column,
       partitionCols: Seq[String] = Nil, sqlAlias: Option[String] = None): Long = {
     require(assignments.nonEmpty, "update needs at least one SET assignment")
-    val dupCols = assignments.groupBy(_._1.toLowerCase).collect {
-      case (c, as) if as.size > 1 => c
-    }
-    require(dupCols.isEmpty,
-      s"UPDATE SET assigns the same column more than once: ${dupCols.mkString(", ")}")
-    val base = latestVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
-    val bm = readManifestFull(spark, path, base)
-    requireWriterFeatures(bm, path)
-    val entries = bm.entries
-    def aliased(df: DataFrame): DataFrame = sqlAlias.fold(df)(df.alias(_))
-    val fields = read(spark, path, Some(base)).schema.fields
-    val unknown = assignments.map(_._1)
-      .filterNot(n => fields.exists(_.name.equalsIgnoreCase(n)))
-    require(unknown.isEmpty,
-      s"UPDATE SET names columns not in the table: ${unknown.mkString(", ")}")
-    // SET on a GENERATED column is refused (it derives from its
-    // expression); the rewritten frame drops generated columns below
-    // so commit() recomputes them from the post-update source values
-    val genCols = generatedNamesOf(bm)
-    val genSet = assignments.map(_._1).filter(n =>
-      genCols.exists(_.equalsIgnoreCase(n)))
-    require(genSet.isEmpty,
-      s"UPDATE SET targets GENERATED column(s) ${genSet.mkString(", ")} — " +
-        "they derive from their expressions; update the source columns")
-    val idCols = bm.schema.map(identityColumnsOf(_).map(_._1.name)).getOrElse(Nil)
-    val idSet = assignments.map(_._1).filter(n =>
-      idCols.exists(_.equalsIgnoreCase(n)))
-    require(idSet.isEmpty,
-      s"UPDATE SET targets IDENTITY column(s) ${idSet.mkString(", ")} — " +
-        "identity values are assigned by the table, not updated")
+    val rw = openRewrite(spark, path)
+    // the rewritten frame drops generated columns, so commit()
+    // recomputes them from the post-update values
+    rw.refuseAssigns("UPDATE SET", assignments, rw.generated ++ rw.identity.map(_._1))
     // stats-pruned file finding, like delete's (see there) — incl.
     // `_row_id` predicates on tracked tables ("update these row ids")
-    val ridTracked = bm.rowIdHigh.isDefined
-    val wantsRid = ridTracked && (mentionsRowId(predicate) ||
+    val wantsRid = rw.ridTracked && (mentionsRowId(predicate) ||
       assignments.exists(a => mentionsRowId(a._2)))
-    val touched: Set[String] =
-      readWhereImpl(spark, path, predicate, Some(base), sqlAlias,
-          withRowIds = wantsRid)
-        .select(input_file_name()).distinct()
-        .collect().map(r => normInputFile(r.getString(0))).toSet
-    if (touched.isEmpty) return base
-    val rewrite = entries.filter(e => touched(normFile(e.filePath)))
-    val touchedDf0 =
-      if (ridTracked) readGroupsWithRid(spark, rewrite, bm.schema, bm.colmap)
-      else readGroups(spark, rewrite, bm.schema, bm.colmap)
-    val touchedDf = aliased(
-      if (wantsRid) touchedDf0.withColumn(RowIdCol, col(RidCol)) else touchedDf0)
+    val rewrite = rw.filesWhere(predicate, sqlAlias, wantsRid)
+    if (rewrite.isEmpty) return rw.base
     // rows where the predicate is NULL keep their old values, per SQL
     val fire = coalesce(predicate, lit(false))
-    val updated = touchedDf.select(fields.map { f =>
-      assignments.find(_._1.equalsIgnoreCase(f.name)) match {
-        case Some((_, v)) => when(fire, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None         => col(f.name)
-      }
-    }.toSeq ++ (if (ridTracked) Seq(col(RidCol)) else Nil): _*)
-    val rev = bm.colmap.map(_.swap)
-    val statsOut = (entries.flatMap(_.stats.map(_._1)) ++
-      entries.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c)).distinct
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else inferPartitionCols(entries, rev)
-    val rewriteSet = rewrite.map(_.filePath).toSet
-    commit(updated.drop(genCols: _*), path, partCols,
-      rebasingCarryOver(path, "update", entries, rewriteSet),
-      statsCols = statsOut, op = "update", ridCarried = ridTracked)
+    val updated = withRowIdAlias(rw.readFiles(rewrite), wantsRid, sqlAlias)
+      .select(rw.fields.map { f =>
+        assignments.find(_._1.equalsIgnoreCase(f.name)) match {
+          case Some((_, v)) => when(fire, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+          case None         => col(f.name)
+        }
+      } ++ (if (rw.ridTracked) Seq(col(RidCol)) else Nil): _*)
+    rw.commit(updated.drop(rw.generated: _*), "update", rewrite,
+      rw.partitionCols(partitionCols), statsFrom = rw.entries)
   }
 
   /** The candidate entry set a predicate-scoped maintenance
@@ -6645,11 +6591,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       where: Option[Column] = None): Long = {
     require(clusterCol.isEmpty || zorderCols.isEmpty,
       "pass clusterCol (1-D range clustering) OR zorderCols (z-curve), not both")
-    val base = latestVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
-    val mFull = readManifestFull(spark, path, base)
-    requireWriterFeatures(mFull, path)
-    val entries = mFull.entries
+    val rw = openRewrite(spark, path)
     // `where` (Delta's OPTIMIZE ... WHERE): bound the rewrite to the
     // files whose recorded manifest stats COULD match the predicate —
     // the same candidate set file finding computes, with NO data
@@ -6664,21 +6606,15 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // candidate set is always safe; partition predicates give exact
     // scoping.
     val scope: Seq[Entry] = where match {
-      case None => entries
-      case Some(pred) => candidateEntries(spark, mFull, pred)
+      case None => rw.entries
+      case Some(pred) => candidateEntries(spark, rw.m, pred)
     }
-    if (scope.isEmpty) return base
+    if (scope.isEmpty) return rw.base
     // raw read (hidden partition columns kept): zShape clusters
     // within partitions and needs them present; commit() re-derives
     // them anyway before writing
-    val ridTracked = mFull.rowIdHigh.isDefined
-    val current =
-      if (ridTracked) readGroupsWithRid(spark, scope, mFull.schema, mFull.colmap)
-      else readGroups(spark, scope, mFull.schema, mFull.colmap)
-    val rev = mFull.colmap.map(_.swap)
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else inferPartitionCols(entries, rev)
+    val current = rw.readFiles(scope)
+    val partCols = rw.partitionCols(partitionCols)
     val shaped =
       if (zorderCols.nonEmpty) zShape(current, zorderCols, numFiles, partCols)
       else clusterCol match {
@@ -6686,19 +6622,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           .sortWithinPartitions(c)
         case None => current.repartition(numFiles)
       }
-    // keep every tracked stats column effective on the rewritten files
-    val statsOut =
-      ((scope.flatMap(_.stats.map(_._1)) ++
-        scope.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c))
-        ++ clusterCol ++ zorderCols).distinct
     // a clustered rewrite marks its outputs; only a FULL one records
     // the spec table-wide (a scoped run clusters its slice — the
     // marks still count if the table's spec matches)
     val spec = if (zorderCols.nonEmpty) zorderCols else clusterCol.toSeq
-    commit(shaped, path, partCols,
-      rebasingCarryOver(path, "compaction", entries,
-        scope.map(_.filePath).toSet),
-      statsCols = statsOut, op = "compact", ridCarried = ridTracked,
+    rw.commit(shaped, "compact", scope, partCols, statsFrom = scope, moreStats = spec,
       clusterTag = if (spec.nonEmpty) Some(clusterTagOf(spec)) else None,
       newClusterCols = if (where.isEmpty) spec else Nil)
   }
@@ -6797,10 +6725,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       zorderCols: Seq[String] = Nil, numFiles: Int = 0,
       partitionCols: Seq[String] = Nil,
       where: Option[Column] = None): Long = {
-    val base = latestVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
-    val m = readManifestFull(spark, path, base)
-    requireWriterFeatures(m, path)
+    val rw = openRewrite(spark, path)
+    val m = rw.m
     val spec = if (zorderCols.nonEmpty) zorderCols else m.clusterCols
     require(spec.nonEmpty,
       s"no clustering columns recorded at $path — run " +
@@ -6827,18 +6753,14 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         val cand = candidateEntries(spark, m, pred).toSet
         unmarked.filter(cand)
     }
-    if (stale.isEmpty && (where.nonEmpty || m.clusterCols == spec)) return base
-    val rev = m.colmap.map(_.swap)
-    val partCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else inferPartitionCols(m.entries, rev)
+    if (stale.isEmpty && (where.nonEmpty || m.clusterCols == spec)) return rw.base
     if (stale.isEmpty)
       // spec (re)recorded with no files to move: metadata-only commit
       // (unreachable under `where` — a scoped wave never records)
       return publishMetadataCommit(spark, path, "optimize_incremental")(
         cur => cur.copy(clusterCols = spec))
-    clusterRewriteCommit(spark, path, m, spec, tag, stale, numFiles,
-      partCols, op = "optimize_incremental",
+    clusterRewriteCommit(rw, spec, tag, stale, numFiles,
+      rw.partitionCols(partitionCols), op = "optimize_incremental",
       // a scoped wave clusters its slice without touching the
       // table-wide spec (the marks still count when the specs match)
       recordSpec = where.isEmpty)
@@ -6849,15 +6771,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * `stale` entries against the table's key space, mark the outputs
     * with `tag`, and commit with the file-disjoint rebasing guard —
     * settled files carry over by reference, byte-identical. */
-  private def clusterRewriteCommit(spark: SparkSession, path: String,
-      m: Manifest, spec: Seq[String], tag: String, stale: Seq[Entry],
-      numFiles: Int, partCols: Seq[String], op: String,
-      recordSpec: Boolean): Long = {
-    val ridTracked = m.rowIdHigh.isDefined
-    val rev = m.colmap.map(_.swap)
-    val current =
-      if (ridTracked) readGroupsWithRid(spark, stale, m.schema, m.colmap)
-      else readGroups(spark, stale, m.schema, m.colmap)
+  private def clusterRewriteCommit(rw: Rewrite, spec: Seq[String],
+      tag: String, stale: Seq[Entry], numFiles: Int, partCols: Seq[String],
+      op: String, recordSpec: Boolean): Long = {
+    val current = rw.readFiles(stale)
     val staleRows = stale.map(e => math.max(e.rows, 0L)).sum
     val outFiles =
       if (numFiles > 0) numFiles
@@ -6866,17 +6783,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       if (spec.size >= 2) zShape(current, spec, outFiles, partCols)
       else current.repartitionByRange(outFiles, col(spec.head))
         .sortWithinPartitions(spec.head)
-    val statsOut =
-      ((stale.flatMap(_.stats.map(_._1)) ++
-        stale.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c))
-        ++ spec).distinct
-    commit(shaped, path, partCols,
-      rebasingCarryOver(path, op, m.entries,
-        stale.map(_.filePath).toSet),
-      statsCols = statsOut, op = op,
-      ridCarried = ridTracked,
-      clusterTag = Some(tag),
-      newClusterCols = if (recordSpec) spec else Nil)
+    rw.commit(shaped, op, stale, partCols, statsFrom = stale, moreStats = spec,
+      clusterTag = Some(tag), newClusterCols = if (recordSpec) spec else Nil)
   }
 
   /** Opt a table into COMMIT-TIME AUTO-CLUSTERING (the liquid-
@@ -6939,8 +6847,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * files. Throws on contention; the caller swallows (the policy
     * re-fires on the next commit anyway). */
   private def maybeAutoCluster(spark: SparkSession, path: String): Unit = {
-    val base = latestVersion(spark, path).getOrElse(return)
-    val m = readManifestFull(spark, path, base)
+    val rw = rewriteAt(spark, path).getOrElse(return)
+    val m = rw.m
     val minStale = m.autoCluster.getOrElse(return)
     val spec = m.clusterCols
     if (spec.isEmpty) return // no recorded spec: nothing to cluster against
@@ -6961,10 +6869,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // same way, by bytes).
     val stale = cappedWave(triggered, policyMaxFilesPerWave(spark),
       zRangeOrder(spec, m.colmap))
-    val rev = m.colmap.map(_.swap)
-    clusterRewriteCommit(spark, path, m, spec, tag, stale, numFiles = 0,
-      partCols = inferPartitionCols(m.entries, rev), op = "autocluster",
-      recordSpec = false)
+    clusterRewriteCommit(rw, spec, tag, stale, numFiles = 0,
+      partCols = rw.partitionCols(Nil), op = "autocluster", recordSpec = false)
     ()
   }
 
@@ -7067,8 +6973,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * Throws on contention; the caller swallows (the policy re-fires
     * on the next commit anyway). */
   private def maybeAutoCompact(spark: SparkSession, path: String): Unit = {
-    val base = latestVersion(spark, path).getOrElse(return)
-    val m = readManifestFull(spark, path, base)
+    val rw = rewriteAt(spark, path).getOrElse(return)
+    val m = rw.m
     val (minFiles, smallRows) = m.autoCompact.getOrElse(return)
     val small = m.entries.filter(e =>
       e.rows >= 0 && e.rows < smallRows && e.dv.isEmpty)
@@ -7082,14 +6988,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // on later commits.
     val victims = cappedWave(triggered, policyMaxFilesPerWave(spark),
       e => (0, e.rows.toDouble, "", e.filePath))
-    val victimSet = victims.map(_.filePath).toSet
     val wavePartitions = victims.groupBy(partitionFragmentOf).size
-    val rev = m.colmap.map(_.swap)
-    val partCols = inferPartitionCols(victims, rev)
-    val ridTracked = m.rowIdHigh.isDefined
-    val merged0 =
-      if (ridTracked) readGroupsWithRid(spark, victims, m.schema, m.colmap)
-      else readGroups(spark, victims, m.schema, m.colmap)
+    val partCols = rw.partitionCols(Nil, layout = victims)
+    val merged0 = rw.readFiles(victims)
     // one writer task per triggered partition (hash on the partition
     // columns), so each partition's small files collapse to ONE file
     // — a bare coalesce would interleave partitions across tasks and
@@ -7097,17 +6998,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     val merged =
       if (partCols.isEmpty) merged0.coalesce(1)
       else merged0.repartition(wavePartitions, partCols.map(col): _*)
-    val statsOut = ((victims.flatMap(_.stats.map(_._1)) ++
-      victims.flatMap(_.sstats.map(_._1))).map(c => rev.getOrElse(c, c))).distinct
-    commit(merged, path, partCols, prev => {
-      // weaker guard than compact's whole-table one: only the files
-      // being replaced must still be live in exactly their state — a
-      // concurrent commit elsewhere in the table composes fine
-      val live = guardState(prev)
-      require(victims.forall(e => live((e.filePath, e.dv))),
-        s"concurrent commit touched auto-compaction victims at $path — skip")
-      prev.filterNot(e => victimSet(e.filePath))
-    }, statsCols = statsOut, op = "autocompact", ridCarried = ridTracked)
+    rw.commit(merged, "autocompact", victims, partCols, statsFrom = victims)
     ()
   }
 

@@ -43,8 +43,12 @@ class DeleteKeysSpec extends SparkTestBase {
       path, Seq("k"))
     assert(none === v0, "unmatched delete should be a version no-op")
     // duplicates in the match set delete once
-    SnapshotTable.deleteKeys(Seq(3L, 3L, 4L).toDF("k"), path, Seq("k"))
+    val v = SnapshotTable.deleteKeys(Seq(3L, 3L, 4L).toDF("k"), path, Seq("k"))
     assert(SnapshotTable.read(spark, path).count() === 48)
+    // the commit is a key delete without key columns, so its change
+    // feed takes the unkeyed path
+    val m = SnapshotTable.readManifestFull(spark, path, v)
+    assert(m.op === Some("delete_keys") && m.opKeys.isEmpty)
   }
 
   test("NULL key components never match (SQL equality)") {

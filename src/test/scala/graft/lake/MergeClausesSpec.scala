@@ -130,6 +130,16 @@ class MergeClausesSpec extends SparkTestBase {
       mergeClauses(dup2, path, Seq("k"),
         matched = Seq(MergeUpdate(None, Seq("v" -> col("s.nv"))))))
     assert(e.getMessage.contains("duplicate keys"))
+    // so does a conditional DELETE: the condition reads the source row
+    val e2 = intercept[IllegalArgumentException](
+      mergeClauses(dup2, path, Seq("k"),
+        matched = Seq(MergeDelete(Some(col("s.nv") > 0.0)))))
+    assert(e2.getMessage.contains("duplicate keys"))
+    assert(read(spark, path).count() === 6)
+    // an unconditional-delete-only matched list needs key membership
+    // only: duplicates are legal (Delta's delete-only MERGE rule)
+    mergeClauses(dup2, path, Seq("k"), matched = Seq(MergeDelete()))
+    assert(state(path).map(_._1) === Seq(2L, 3L, 4L, 7L, 7L))
   }
 
   test("NULL keys: target row falls to NOT MATCHED BY SOURCE, source row to INSERT") {

@@ -121,11 +121,17 @@ class SkewSpec extends SparkTestBase {
       Tables.customer(spark, sf0001).withColumnRenamed("c_custkey", "o_custkey"),
       "customer_b", Seq("o_custkey"), 4, Seq("o_custkey"))
     val joined = spark.table("orders_b").join(spark.table("customer_b"), "o_custkey")
-    val exchanges = joined.queryExecution.executedPlan.collect {
+    // under AQE the executed plan is an AdaptiveSparkPlanExec leaf:
+    // walk its initial plan, or an exchange would go unseen
+    val plan = joined.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val exchanges = plan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
     assert(exchanges.isEmpty,
-      s"bucketed join should be shuffle-free:\n${joined.queryExecution.executedPlan}")
+      s"bucketed join should be shuffle-free:\n$plan")
     // and it still returns the right rows
     val plain = Tables.orders(spark, sf0001).join(
       Tables.customer(spark, sf0001).withColumnRenamed("c_custkey", "o_custkey"),
