@@ -142,8 +142,9 @@ class FileCommitLockProvider(leaseMs: Long = 60000L,
         fs.setTimes(lock, System.currentTimeMillis(), -1)
       catch {
         // keep beating: one failed touch is not fatal to the lease, but
-        // a run of them lets it go stale under a live holder
-        case scala.util.control.NonFatal(e) =>
+        // a run of them lets it go stale under a live holder. A touch
+        // cut short by the release's shutdownNow is no failure.
+        case scala.util.control.NonFatal(e) => if (!beat.isShutdown)
           logWarning(s"commit lock heartbeat failed at $lock: ${e.getMessage}")
       }
     }, period, period, java.util.concurrent.TimeUnit.MILLISECONDS)

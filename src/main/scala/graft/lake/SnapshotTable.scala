@@ -5701,8 +5701,13 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     /** Identity columns, each with whether it is GENERATED ALWAYS. */
     lazy val identity: Seq[(String, Boolean)] =
       m.schema.map(identityColumnsOf).getOrElse(Nil).map(t => (t._1.name, !t._4))
-    /** The table's columns as a reader sees them at `base`. */
-    lazy val fields: Seq[StructField] = read(spark, path, Some(base)).schema.fields.toSeq
+    /** The table's columns as a reader sees them at `base`: the
+      * recorded schema without the hidden partition columns (a
+      * pre-recording manifest falls back to a read's schema). */
+    lazy val fields: Seq[StructField] = m.schema match {
+      case Some(s) => s.fields.toSeq.filterNot(_.name.startsWith("__p_"))
+      case None    => read(spark, path, Some(base)).schema.fields.toSeq
+    }
 
     /** Idempotent-write gate (Delta txnAppId/txnVersion): a replayed
       * epoch skips even the file-finding jobs; commit() re-checks
@@ -5739,9 +5744,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       * identity columns) it names. `what` opens each message. */
     def refuse(what: String, names: Seq[String], derived: Seq[String]): Unit = {
       def hits(cs: Seq[String]) = names.filter(n => cs.exists(_.equalsIgnoreCase(n)))
-      require(hits(Seq(RidCol)).isEmpty, s"$what the reserved column '$RidCol'")
-      require(!names.exists(_.startsWith("__graft_")),
-        s"$what reserved '__graft_'-prefixed columns")
+      refuseReserved(what, names)
       val gen = hits(derived.filter(generated.contains))
       require(gen.isEmpty, s"$what GENERATED column(s) ${gen.mkString(", ")} — " +
         "they derive from their expressions")
@@ -5795,6 +5798,16 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           throw new IllegalArgumentException(dupKeysMessage(dupKeys), e)
       }
     }
+  }
+
+  /** The reserved-name half of [[Rewrite.refuse]]: `__rid` and the
+    * `__graft_` prefix. It needs no snapshot, so a front-end runs it
+    * before anything it commits ahead of the rewrite (schema
+    * evolution). */
+  private def refuseReserved(what: String, names: Seq[String]): Unit = {
+    require(!names.exists(_.equalsIgnoreCase(RidCol)), s"$what the reserved column '$RidCol'")
+    require(!names.exists(_.startsWith("__graft_")),
+      s"$what reserved '__graft_'-prefixed columns")
   }
 
   /** Rewrite prologue: the latest snapshot of `path`, or None when the
@@ -5965,6 +5978,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     require(keyCols.nonEmpty, "mergeClauses needs at least one key column")
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "MERGE needs at least one WHEN clause")
+    // source columns reach the table only through assignments, which
+    // check their own targets; refused before evolution commits anything
+    refuseReserved("merge source must not contain", source.columns.toSeq)
     val spark = source.sparkSession
     latestVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(
@@ -5985,22 +6001,18 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       if (fresh.nonEmpty) addColumns(spark, path, fresh.toSeq)
     }
     clauseMerge(source, path, keyCols, matched, notMatched, notMatchedBySource,
-      targetAlias, sourceAlias, partitionCols, txn, "merge", keyCols, "merge")
+      targetAlias, sourceAlias, partitionCols, txn, "merge")
   }
 
-  /** [[mergeClauses]] after its schema evolution, under the commit's
-    * `op` and `opKeys`; `what` opens the source guard's message. */
+  /** [[mergeClauses]] after its source guard and schema evolution,
+    * committed as `op`; only op `merge` records its key columns. */
   private def clauseMerge(source: DataFrame, path: String, keyCols: Seq[String],
       matched: Seq[MergeMatchedClause], notMatched: Seq[MergeInsert],
       notMatchedBySource: Seq[MergeMatchedClause],
       targetAlias: String, sourceAlias: String, partitionCols: Seq[String],
-      txn: Option[(String, Long)], op: String, opKeys: Seq[String],
-      what: String): Long = {
+      txn: Option[(String, Long)], op: String): Long = {
     val spark = source.sparkSession
     val rw = openRewrite(spark, path)
-    // source columns reach the table only through assignments, which
-    // check their own targets
-    rw.refuse(s"$what source must not contain", source.columns.toSeq, Nil)
     if (rw.replayed(txn)) return rw.base
     val entries = rw.entries
     val allIds = rw.identity.map(_._1)
@@ -6202,7 +6214,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     if (parts.isEmpty) return rw.base // every clause family pruned to nothing
     rw.commit(parts.reduce(_.unionByName(_)).drop(rw.generated: _*), op,
       rewriteEntries, rw.partitionCols(partitionCols), statsFrom = entries,
-      moreStats = keyCols, opKeys = opKeys, txn = txn, dupKeys = keyCols)
+      moreStats = keyCols, opKeys = if (op == "merge") keyCols else Nil, txn = txn,
+      dupKeys = keyCols)
   }
 
   /** Row-level DELETE: remove the rows matching `predicate` by
@@ -6273,8 +6286,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   def deleteKeys(source: DataFrame, path: String, keyCols: Seq[String],
       partitionCols: Seq[String] = Nil): Long = {
     require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
+    refuseReserved("deleteKeys source must not contain", source.columns.toSeq)
     clauseMerge(source, path, keyCols, Seq(MergeDelete()), Nil, Nil, "t", "s",
-      partitionCols, None, op = "delete_keys", opKeys = Nil, what = "deleteKeys")
+      partitionCols, None, op = "delete_keys")
   }
 
   /** Distributed ROW-ID-set DELETE on a tracked table — the

@@ -368,6 +368,24 @@ class MergeClausesSpec extends SparkTestBase {
     assert(!read(spark, path, Some(1L)).columns.contains("tier"))
   }
 
+  test("schema evolution: a reserved source column refuses before any column is added") {
+    import spark.implicits._
+    val path = tmp("evoreserved")
+    seed(path)
+    val v0 = SnapshotTable.latestVersion(spark, path)
+    val cols0 = read(spark, path).columns.toSeq
+    for (bad <- Seq("__rid", "__graft_x")) {
+      val src = Seq((2L, 99.0, 7L)).toDF("k", "v", bad)
+      val e = intercept[IllegalArgumentException](
+        mergeClauses(src, path, Seq("k"),
+          matched = Seq(MergeUpdate(None, Nil)),
+          schemaEvolution = true))
+      assert(e.getMessage.contains("merge source must not contain"), e.getMessage)
+      assert(SnapshotTable.latestVersion(spark, path) === v0, s"$bad: a version was committed")
+      assert(read(spark, path).columns.toSeq === cols0, s"$bad: the schema changed")
+    }
+  }
+
   test("exact touched-file finding: stat-less candidates shrink to files with LIVE matches") {
     import spark.implicits._
     val path = tmp("exact")
