@@ -342,7 +342,7 @@ object ScaleBench {
         // 1M docs — the hot key's rows count in one task in
         // milliseconds — while every join-back "skew-safe" rewrite
         // paid a second corpus exchange and lost 1.7-4x uniform (see
-        // duplicateSpans' comment + DupBench for the full A/B). This
+        // duplicateSpans' comment for the full A/B). This
         // entry keeps the bound pinned run-over-run so the flip
         // point (a single gram's occurrences overflowing one task)
         // is noticed if corpus scale ever reaches it.

@@ -8,7 +8,7 @@ import graft.lake.SnapshotIncremental
   * nightly, composing three existing modules: [[SnapshotIncremental]]
   * (consume ONLY the commits newer than a checkpoint),
   * [[VerificationSuite]] (one fused agg pass per batch), and
-  * [[MetricsRepository]] (run-over-run history + drift detection).
+  * [[MetricsRepository]] (run-over-run history + anomaly detection).
   * The reference re-verifies the full frame on every Glue run
   * (`jobs/ev_sessions_silver_etl_clean.py:132-164` gates each load on
   * a whole-frame Deequ pass); at 100 TB that is a nightly full scan.
@@ -26,13 +26,14 @@ object IncrementalDq {
     * report per consumed range (empty = nothing new).
     *
     * Each range: a VerificationSuite pass over just the added rows,
-    * metrics appended to `metricsPath` keyed by the range-end version
-    * (zero-padded so tag ordering = version ordering), then drift of
-    * each metric vs the previous appended run at `driftTolerance`
-    * relative change. With `maxVersionsPerBatch` a long backlog is
-    * consumed (and checkpointed) in bounded sub-ranges, each with its
-    * own metrics row — so the drift baseline granularity stays
-    * commit-sized even after a pause.
+    * metrics appended to the snapshot repository at `metricsPath`
+    * (dataset = `tablePath`, run tag = the zero-padded range-end
+    * version), then drift of each metric vs the previous appended run
+    * at `driftTolerance` relative change — the one-run window of
+    * [[MetricsRepository.anomalies]], NaN counting as moved. With
+    * `maxVersionsPerBatch` a long backlog is consumed (and
+    * checkpointed) in bounded sub-ranges, each its own run — so the
+    * drift baseline granularity stays commit-sized even after a pause.
     *
     * The checkpoint advances whether or not checks pass: DQ observes
     * and reports; gating (quarantine, abort, alert) is the caller's
@@ -49,9 +50,11 @@ object IncrementalDq {
         SnapshotIncremental.AppendOnly, maxVersionsPerBatch) { (df, from, to) =>
       val vr = VerificationSuite.run(df, checks)
       val tag = f"v$to%012d"
-      MetricsRepository.append(spark, metricsPath, tag, vr)
+      MetricsRepository.appendRun(spark, metricsPath, tablePath, tag, vr)
       out += BatchReport(from, to, vr.status, vr,
-        MetricsRepository.driftFrom(spark, metricsPath, tag, driftTolerance))
+        MetricsRepository.anomalies(spark, metricsPath, tablePath, tag,
+          window = 1, maxSigma = 0.0, minRelDelta = driftTolerance)
+          .map(MetricsRepository.Drift(_)))
     }
     out.toSeq
   }

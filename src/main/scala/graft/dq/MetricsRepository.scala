@@ -3,113 +3,60 @@ package graft.dq
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Run-over-run metric history + drift detection — the anomaly-check
-  * half of the Deequ shape: every VerificationSuite run can append
-  * its metrics (keyed by a caller tag, e.g. the processing date), and
-  * later runs assert each metric stayed within a relative tolerance
-  * of the previous run. Catches the silent failures a single-run
-  * check can't (e.g. row count halves but every constraint still
-  * passes).
+/** Run-over-run metric history + anomaly detection — the Deequ
+  * MetricsRepository shape: every VerificationSuite (or profile) run
+  * appends its metrics, keyed by (dataset, run_tag), and later runs
+  * compare each metric with the runs before it ([[anomalies]]).
+  * Catches the silent failures a single-run check can't (e.g. row
+  * count halves but every constraint still passes).
   *
-  * Storage is plain append-mode parquet — same durability story as
-  * the lake layers, readable by any engine.
-  */
+  * Storage is a SNAPSHOT TABLE: each run lands one commit of
+  * (dataset, run_tag, check, constraint, metric, success, run_seq)
+  * rows, so the metric history gets the full table contract for free
+  * — time travel ("what did quality look like last Tuesday"), CDC
+  * (stream the metric feed), retention, and the commit-time policies
+  * for the one-small-file-per-run ingest shape this produces. One
+  * repository table serves every dataset of a pipeline. A directory
+  * of plain parquet (the repository's earlier storage: run rows
+  * without dataset or run_seq, and no snapshot log) is not read. */
 object MetricsRepository {
 
-  /** Append one run's constraint metrics. */
-  def append(spark: SparkSession, path: String, runTag: String,
-      result: VerificationResult): Unit = {
-    import spark.implicits._
-    val rows = for {
+  /** One run's rows: (check, constraint, metric, success). */
+  private type RunRows = Seq[(String, String, Double, Boolean)]
+
+  private def resultRows(result: VerificationResult): RunRows =
+    for {
       cr <- result.checkResults
       c <- cr.results
-    } yield (runTag, cr.description, c.constraint, c.metric, c.success)
-    rows.toDF("run_tag", "check", "constraint", "metric", "success")
-      .repartition(1)
-      .write.mode("append").parquet(path)
-  }
+    } yield (cr.description, c.constraint, c.metric, c.success)
 
-  def history(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** SNAPSHOT-TABLE repository — the durable form of [[append]]: each
-    * VerificationSuite run lands one commit of
-    * (dataset, run_tag, check, constraint, metric, success, run_seq)
-    * rows, so
-    * the metric history gets the full table contract for free — time
-    * travel ("what did quality look like last Tuesday"), CDC (stream
-    * the metric feed), retention, and the commit-time policies for
-    * the one-small-file-per-run ingest shape this produces. Keyed by
-    * (dataset, run_tag): one repository table serves every dataset of
-    * a pipeline, the Deequ MetricsRepository posture. */
-  def appendRun(spark: SparkSession, tablePath: String, dataset: String,
-      runTag: String, result: VerificationResult): Long = {
-    import spark.implicits._
-    val seq = nextRunSeq(spark, tablePath)
-    val rows = for {
-      cr <- result.checkResults
-      c <- cr.results
-    } yield (dataset, runTag, cr.description, c.constraint, c.metric,
-      c.success, seq)
-    val creating = seq == 0L
-    val v = graft.lake.SnapshotTable.append(
-      rows.toDF("dataset", "run_tag", "check", "constraint", "metric",
-        "success", "run_seq")
-        .coalesce(1), tablePath)
-    // the repository's ingest shape is one tiny file per run, forever
-    // — exactly what commit-time auto-compaction exists for. Arm it
-    // once at table creation so the repository maintains itself
-    // (merges are row-preserving: history counts, anomaly windows,
-    // and time travel are unaffected).
-    if (creating)
-      graft.lake.SnapshotTable.setAutoCompact(spark, tablePath,
-        minSmallFiles = 8, smallFileRows = 100000L)
-    v
-  }
-
-  /** Persist a column PROFILE run into the same snapshot repository
-    * (check = "__profile"), one row per (column, statistic) — so the
-    * trailing-window [[anomalies]] check covers schema-level
-    * statistics too, not just constraint metrics: a column whose
-    * distinct count collapses or whose mean walks off passes every
-    * boolean check and still trips here. Numeric-only statistics are
-    * simply absent for non-numeric columns (no NaN padding — an
-    * absent constraint never joins the anomaly window). */
-  private def profileRows(dataset: String, runTag: String,
-      profiles: Seq[Profiler.ColumnProfile])
-      : Seq[(String, String, String, String, Double, Boolean)] =
+  /** A column PROFILE run's rows (check = "__profile"), one per
+    * (column, statistic) — so the trailing-window [[anomalies]] check
+    * covers schema-level statistics too, not just constraint metrics:
+    * a column whose distinct count collapses or whose mean walks off
+    * passes every boolean check and still trips here. Numeric-only
+    * statistics are simply absent for non-numeric columns (no NaN
+    * padding — an absent constraint never joins the anomaly window). */
+  private def profileRows(profiles: Seq[Profiler.ColumnProfile]): RunRows =
     profiles.flatMap { p =>
       Seq(
-        (dataset, runTag, "__profile", s"Completeness(${p.column})",
-          p.completeness, true),
-        (dataset, runTag, "__profile", s"Distinctness(${p.column})",
-          p.distinctCount.toDouble, true),
-        (dataset, runTag, "__profile", s"Size(${p.column})",
-          p.rowCount.toDouble, true)) ++
-        p.minValue.map(v => (dataset, runTag, "__profile",
-          s"Minimum(${p.column})", v, true)) ++
-        p.maxValue.map(v => (dataset, runTag, "__profile",
-          s"Maximum(${p.column})", v, true)) ++
-        p.mean.map(v => (dataset, runTag, "__profile",
-          s"Mean(${p.column})", v, true))
+        ("__profile", s"Completeness(${p.column})", p.completeness, true),
+        ("__profile", s"Distinctness(${p.column})", p.distinctCount.toDouble, true),
+        ("__profile", s"Size(${p.column})", p.rowCount.toDouble, true)) ++
+        p.minValue.map(v => ("__profile", s"Minimum(${p.column})", v, true)) ++
+        p.maxValue.map(v => ("__profile", s"Maximum(${p.column})", v, true)) ++
+        p.mean.map(v => ("__profile", s"Mean(${p.column})", v, true))
     }
 
+  /** Persist one VerificationSuite run; returns its committed version. */
+  def appendRun(spark: SparkSession, tablePath: String, dataset: String,
+      runTag: String, result: VerificationResult): Long =
+    appendRuns(spark, tablePath, dataset, Seq(runTag -> result)).head
+
+  /** Persist one column profile run (see [[profileRows]]). */
   def appendProfile(spark: SparkSession, tablePath: String, dataset: String,
-      runTag: String, profiles: Seq[Profiler.ColumnProfile]): Long = {
-    import spark.implicits._
-    val seq = nextRunSeq(spark, tablePath)
-    val rows = profileRows(dataset, runTag, profiles)
-      .map { case (d, t, ch, c, m, s) => (d, t, ch, c, m, s, seq) }
-    val creating = seq == 0L
-    val v = graft.lake.SnapshotTable.append(
-      rows.toDF("dataset", "run_tag", "check", "constraint", "metric",
-        "success", "run_seq")
-        .coalesce(1), tablePath)
-    if (creating)
-      graft.lake.SnapshotTable.setAutoCompact(spark, tablePath,
-        minSmallFiles = 8, smallFileRows = 100000L)
-    v
-  }
+      runTag: String, profiles: Seq[Profiler.ColumnProfile]): Long =
+    appendProfileRuns(spark, tablePath, dataset, Seq(runTag -> profiles)).head
 
   /** Batched [[appendRun]]: N runs' metric rows land as N ordered
     * commits sharing ONE Spark write job
@@ -119,50 +66,39 @@ object MetricsRepository {
     * base + r (monotone, exactly what [[anomalies]] orders by; commit
     * versions may run ahead when auto-compaction interleaves, which
     * [[nextRunSeq]]'s contract explicitly allows). On a fresh
-    * repository the FIRST run commits alone so auto-compaction is
-    * armed before the shared batch, keeping the policy live across
-    * the remaining commits exactly as sequential appends would.
-    * Returns each run's committed version, in run order. */
+    * repository the FIRST run commits alone and arms auto-compaction
+    * — the repository's ingest shape is one tiny file per run,
+    * forever, and compaction's merges are row-preserving (history
+    * counts, anomaly windows and time travel are unaffected) — so the
+    * policy is live across the remaining commits exactly as
+    * sequential appends would see it. Returns each run's committed
+    * version, in run order. */
   def appendRuns(spark: SparkSession, tablePath: String, dataset: String,
-      runs: Seq[(String, VerificationResult)]): Seq[Long] = {
-    import spark.implicits._
-    def frame(runTag: String, result: VerificationResult, seq: Long) = {
-      val rows = for {
-        cr <- result.checkResults
-        c <- cr.results
-      } yield (dataset, runTag, cr.description, c.constraint, c.metric,
-        c.success, seq)
-      rows.toDF("dataset", "run_tag", "check", "constraint", "metric",
-        "success", "run_seq").coalesce(1)
-    }
-    appendStamped(spark, tablePath, runs, frame)
-  }
+      runs: Seq[(String, VerificationResult)]): Seq[Long] =
+    appendStamped(spark, tablePath, dataset,
+      runs.map { case (tag, r) => tag -> resultRows(r) })
 
-  /** Batched [[appendProfile]] — same contract as [[appendRuns]] for
-    * profile runs. */
+  /** Batched [[appendProfile]] — same contract as [[appendRuns]]. */
   def appendProfileRuns(spark: SparkSession, tablePath: String,
       dataset: String,
-      runs: Seq[(String, Seq[Profiler.ColumnProfile])]): Seq[Long] = {
+      runs: Seq[(String, Seq[Profiler.ColumnProfile])]): Seq[Long] =
+    appendStamped(spark, tablePath, dataset,
+      runs.map { case (tag, ps) => tag -> profileRows(ps) })
+
+  private def appendStamped(spark: SparkSession, tablePath: String,
+      dataset: String, runs: Seq[(String, RunRows)]): Seq[Long] = {
     import spark.implicits._
-    def frame(runTag: String, profiles: Seq[Profiler.ColumnProfile],
-        seq: Long) =
-      profileRows(dataset, runTag, profiles)
-        .map { case (d, t, ch, c, m, s) => (d, t, ch, c, m, s, seq) }
+    require(runs.nonEmpty, "appendRuns needs at least one run")
+    def frame(runTag: String, rows: RunRows, seq: Long): DataFrame =
+      rows.map { case (ch, c, m, s) => (dataset, runTag, ch, c, m, s, seq) }
         .toDF("dataset", "run_tag", "check", "constraint", "metric",
           "success", "run_seq").coalesce(1)
-    appendStamped(spark, tablePath, runs, frame)
-  }
-
-  private def appendStamped[A](spark: SparkSession, tablePath: String,
-      runs: Seq[(String, A)],
-      frame: (String, A, Long) => DataFrame): Seq[Long] = {
-    require(runs.nonEmpty, "appendRuns needs at least one run")
     var base = nextRunSeq(spark, tablePath)
     var rest = runs
     var head = Seq.empty[Long]
     if (base == 0L) {
-      val (tag, a) = rest.head
-      head = Seq(graft.lake.SnapshotTable.append(frame(tag, a, 0L), tablePath))
+      val (tag, rows) = rest.head
+      head = Seq(graft.lake.SnapshotTable.append(frame(tag, rows, 0L), tablePath))
       graft.lake.SnapshotTable.setAutoCompact(spark, tablePath,
         minSmallFiles = 8, smallFileRows = 100000L)
       base = nextRunSeq(spark, tablePath)
@@ -170,8 +106,8 @@ object MetricsRepository {
     }
     if (rest.isEmpty) head
     else {
-      val frames = rest.zipWithIndex.map { case ((tag, a), i) =>
-        frame(tag, a, base + i)
+      val frames = rest.zipWithIndex.map { case ((tag, rows), i) =>
+        frame(tag, rows, base + i)
       }
       head ++ graft.lake.SnapshotTable.appendBatch(frames, tablePath)
     }
@@ -201,84 +137,72 @@ object MetricsRepository {
     * shape, over the snapshot repository): compare `currentTag`'s
     * metric per constraint against the last `window` runs' mean, and
     * flag when |current − mean| exceeds maxSigma·stddev plus a
-    * RELATIVE floor (`minRelDelta·|mean|`) — the sigma term adapts to
-    * each metric's own noise, the relative floor keeps a perfectly
-    * flat history (stddev 0: row counts on steady ingest, completeness
-    * pinned at 1.0) from flagging fp dust, and being relative lets one
-    * threshold serve metrics at any magnitude (Size ≈ 10^6 next to
-    * Completeness ≈ 1.0). Everything collected is bounded by the
-    * constraint count and the window — driver-trivial at any data
-    * scale; the heavy lifting stayed in the runs that produced the
-    * metrics. */
+    * RELATIVE floor (`minRelDelta`·max(|mean|, 1e-12)) — the sigma
+    * term adapts to each metric's own noise, the relative floor keeps
+    * a perfectly flat history (stddev 0: row counts on steady ingest,
+    * completeness pinned at 1.0) from flagging fp dust, and being
+    * relative lets one threshold serve metrics at any magnitude
+    * (Size ≈ 10^6 next to Completeness ≈ 1.0). A constraint absent
+    * from the current run or from every window run is not compared.
+    *
+    * NaN (the metric of an empty or all-NULL input) counts as moved:
+    * a NaN current metric, or a NaN in the window (whose mean is then
+    * NaN), is always flagged — a metric that turns undefined is the
+    * kind of silent failure this check exists to catch.
+    *
+    * At `window = 1`, `maxSigma = 0` this is the run-over-run drift
+    * test: the mean is the previous run's metric and the stddev 0, so
+    * it flags |current − previous| > minRelDelta·max(|previous|, 1e-12)
+    * — what [[IncrementalDq]] reports as drift.
+    *
+    * One Spark read per call: the dataset's (run_tag, run_seq,
+    * constraint, metric) rows, runs × constraints of them, which the
+    * repository's auto-compaction keeps in few files; the window and
+    * its statistics are computed on the driver. */
   def anomalies(spark: SparkSession, tablePath: String, dataset: String,
       currentTag: String, window: Int = 5, maxSigma: Double = 3.0,
       minRelDelta: Double = 0.1): Seq[Anomaly] = {
     require(window >= 1, "window must be >= 1")
     val h = runHistory(spark, tablePath, dataset)
-    // The trailing window is the `window` runs APPENDED most recently
-    // before the current run — ordered by the run_seq the append
-    // stamped, never by run_tag string comparison (which mis-orders
-    // "r10" before "r2" and breaks every unpadded tag convention once
-    // a dataset passes 10 runs). Repositories written before run_seq
-    // existed fall back to tag ordering, correct exactly when tags
-    // are zero-padded/sortable (the old documented requirement).
-    val tags: Seq[String] =
-      if (h.columns.contains("run_seq")) {
-        val seqs = h.groupBy("run_tag").agg(max("run_seq").as("seq"))
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        seqs.collectFirst { case (t, s) if t == currentTag => s } match {
-          case None => Nil // current run not persisted yet — no window
-          case Some(curSeq) => seqs.toSeq
-            .filter { case (t, s) => s < curSeq && t != currentTag }
-            .sortBy(-_._2).take(window).map(_._1)
-        }
-      } else
-        h.filter(col("run_tag") < currentTag)
-          .select("run_tag").distinct()
-          .orderBy(col("run_tag").desc).limit(window)
-          .collect().map(_.getString(0)).toSeq
-    if (tags.isEmpty) return Nil
-    val win = h.filter(col("run_tag").isin(tags: _*))
-      .groupBy("constraint")
-      .agg(avg("metric").as("w_mean"), stddev_pop("metric").as("w_std"))
-    h.filter(col("run_tag") === currentTag)
-      .select(col("constraint"), col("metric"))
-      .join(win, "constraint")
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-      .collect { case (c, cur, m, s)
-          if math.abs(cur - m) >
-            maxSigma * s + minRelDelta * math.max(math.abs(m), 1e-12) =>
+    // A run's place in the history is the run_seq its append stamped
+    // (the latest, for a tag appended twice), never its run_tag's
+    // string order, which puts "r10" before "r2" and breaks every
+    // unpadded tag convention once a dataset passes 10 runs. A
+    // repository written before run_seq existed reads every seq as 0,
+    // so its runs fall back to tag order — right exactly when tags
+    // are zero-padded (the old documented requirement).
+    val seq = if (h.columns.contains("run_seq")) col("run_seq") else lit(0L)
+    val byRun = h.select(col("run_tag"), seq, col("constraint"), col("metric"))
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getDouble(3)))
+      .groupBy(_._1)
+    if (!byRun.contains(currentTag)) return Nil // not persisted yet
+    val place = byRun.map { case (tag, rs) => tag -> (rs.map(_._2).max, tag) }
+    val now = place(currentTag)
+    val win = place.toSeq.filter(p => Ordering[(Long, String)].lt(p._2, now)).sortBy(_._2)
+      .takeRight(window).flatMap(p => byRun(p._1))
+    val stats = win.groupBy(_._3).map { case (c, rs) =>
+      val ms = rs.map(_._4)
+      val mean = ms.sum / ms.size
+      c -> (mean, math.sqrt(ms.map(m => (m - mean) * (m - mean)).sum / ms.size))
+    }
+    byRun(currentTag).toSeq.flatMap { case (_, _, c, cur) =>
+      stats.get(c).collect { case (m, s)
+          if !(math.abs(cur - m) <=
+            maxSigma * s + minRelDelta * math.max(math.abs(m), 1e-12)) =>
         Anomaly(c, cur, m, s)
       }
+    }.sortBy(_.constraint)
   }
 
   final case class Drift(constraint: String, previous: Double, current: Double,
       relativeChange: Double)
 
-  /** Compare a run against the latest earlier run (by tag ordering);
-    * returns constraints whose metric moved more than `tolerance`
-    * relatively. Empty history → no drift. */
-  def driftFrom(spark: SparkSession, path: String, currentTag: String,
-      tolerance: Double): Seq[Drift] = {
-    import spark.implicits._
-    val h = history(spark, path)
-    val prevTag = h.filter(col("run_tag") < currentTag)
-      .agg(max("run_tag")).head().getString(0)
-    if (prevTag == null) return Nil
-    val prev = h.filter(col("run_tag") === prevTag)
-      .select(col("constraint"), col("metric").as("previous"))
-    val cur = h.filter(col("run_tag") === currentTag)
-      .select(col("constraint"), col("metric").as("current"))
-    prev.join(cur, "constraint")
-      .withColumn("rel",
-        abs(col("current") - col("previous")) /
-          greatest(abs(col("previous")), lit(1e-12)))
-      .filter(col("rel") > tolerance)
-      .select(col("constraint"), col("previous"), col("current"), col("rel"))
-      .as[(String, Double, Double, Double)]
-      .collect()
-      .map(t => Drift(t._1, t._2, t._3, t._4))
-      .toSeq
+  object Drift {
+    /** A one-run-window [[anomalies]] hit as a drift: the window mean
+      * is the previous run's metric. */
+    def apply(a: Anomaly): Drift =
+      Drift(a.constraint, a.windowMean, a.current,
+        math.abs(a.current - a.windowMean) / math.max(math.abs(a.windowMean), 1e-12))
   }
 }

@@ -62,7 +62,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   /** `nulls`: per-column NULL counts — the third leg of the stats
     * triple (min/max bounds, blooms, null counts — Delta's
     * nullCount parity). Recorded for the first
-    * `graft.snapshot.nullStatsMaxCols` (default 32) top-level
+    * [[NullStatsMaxCols]] (32) top-level
     * primitive columns plus every stats column, all-or-nothing
     * across row groups like the bounds. They prune `IS NULL` (a
     * file with zero nulls can't match) and `IS NOT NULL` / any
@@ -1214,6 +1214,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       else Nil
     }
 
+  /** Top-level columns a file records NULL counts for (plus every
+    * stats column): bounds manifest growth on wide tables. */
+  private val NullStatsMaxCols = 32
+
   /** Manifest entries for a freshly written commit dir. Footer reads
     * (row count + per-column min/max) are driver-side metadata IO
     * (the table-format norm), but SEQUENTIAL opens would bottleneck a
@@ -1389,6 +1393,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
        else Nil)).distinct
     val added: Seq[Entry] = withBlooms(spark,
       commitEntries(spark, commitDir, physStatsCols),
+      physData.schema.filterNot(f => physPartCols.contains(f.name)),
       prevMeta.map(_.bloomCols.map(c => cm.getOrElse(c, c))).getOrElse(Nil))
     var attempt = 0
     while (attempt < maxAttempts) {
@@ -2108,7 +2113,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         validatedCs = validatedCs ++ toCheck.keySet
       }
       if (!bloomed && prev.bloomCols.nonEmpty && added.nonEmpty) {
-        added = withBlooms(spark, added,
+        added = withBlooms(spark, added, physicalSchema(effSchema, effColmap),
           prev.bloomCols.map(c => writtenColmap.getOrElse(c, c)))
         bloomed = true
       }
@@ -3733,19 +3738,17 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         }.map(rs => (column, rs.map(_._1).min(utf8Ord), rs.map(_._2).max(utf8Ord)))
       }
       // NULL counts (type-agnostic) for the first
-      // `graft.snapshot.nullStatsMaxCols` TOP-LEVEL primitive columns
+      // `NullStatsMaxCols` TOP-LEVEL primitive columns
       // (the IS NULL targets — a nested leaf's null count says
       // nothing about its parent) plus every requested stats column;
       // the cap bounds manifest growth on wide tables (Delta's
       // dataSkippingNumIndexedCols posture). Same all-or-nothing
       // row-group rule as the bounds: a chunk without numNulls set
       // (legacy writer) forfeits the column's count for the file.
-      val nullCap = sys.props.get("graft.snapshot.nullStatsMaxCols")
-        .map(_.toInt).getOrElse(32)
       val nullCols =
         (reader.getFooter.getFileMetaData.getSchema.getColumns.asScala
           .map(_.getPath.mkString("."))
-          .filter(!_.contains(".")).take(nullCap) ++ statsCols).distinct
+          .filter(!_.contains(".")).take(NullStatsMaxCols) ++ statsCols).distinct
       val nulls = nullCols.flatMap { column =>
         columnBounds(column)(st =>
           if (st.isNumNullsSet && st.getNumNulls >= 0) Some(st.getNumNulls)
@@ -3814,21 +3817,21 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     case _ => false
   }
 
-  private def bloomMaxBits: Long =
-    sys.props.get("graft.snapshot.bloomMaxBits").map(_.toLong)
-      .getOrElse(1L << 19) // 64 KiB/file/column at the cap
+  private val BloomMaxBits: Long = 1L << 19 // 64 KiB/file/column at the cap
 
   /** Attach per-file blooms for `bloomCols` to freshly committed
-    * entries: ONE distributed job reading only the bloom columns of
-    * the new files (columnar, projection-pruned), grouped by
+    * entries, whose files hold the physical columns `written`: ONE
+    * distributed job reading only the bloom columns of the new files
+    * (columnar, projection-pruned, with the known schema — no
+    * schema-inference job), grouped by
     * `input_file_name()`, aggregated by [[graft.functions
     * .BloomBitsAggregator]]. Sized for the commit's largest file at
-    * ~1% FPR, capped by `graft.snapshot.bloomMaxBits`. The driver
+    * ~1% FPR, capped by [[BloomMaxBits]]. The driver
     * receives files × columns × ≤cap bytes — bounded by the COMMIT's
     * file count, never the table's.
     *
-    * MEASURED CHOICES (graft.BloomBench, 2M rows × 8 files, medians
-    * of 5 interleaved rounds):
+    * MEASURED CHOICES (the same append of 2M rows × 8 files with
+    * blooms off vs on, medians of 5 interleaved rounds):
     *  - Why a SECOND read of files the commit just wrote, rather
     *    than fusing the aggregation into the input: per-file blooms
     *    need the file split, which only exists after the write — and
@@ -3843,15 +3846,15 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     *    (file, hash) pair, which both formulations pay — refuted,
     *    so the simpler declarative form ships. */
   private def withBlooms(spark: SparkSession, entries: Seq[Entry],
-      bloomCols: Seq[String]): Seq[Entry] = {
-    if (bloomCols.isEmpty || entries.isEmpty) return entries
-    val df = spark.read.parquet(entries.map(_.filePath): _*)
-    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
+      written: Seq[StructField], bloomCols: Seq[String]): Seq[Entry] = {
+    val types = written.map(f => f.name -> f.dataType).toMap
     val eligible = bloomCols.filter(c => types.get(c).exists(bloomEligible))
-    if (eligible.isEmpty) return entries
+    if (eligible.isEmpty || entries.isEmpty) return entries
+    val df = spark.read.schema(StructType(eligible.map(c => StructField(c, types(c)))))
+      .parquet(entries.map(_.filePath): _*)
     val maxRows = math.max(1L, entries.map(_.rows).max)
     val agg = udaf(new graft.functions.BloomBitsAggregator(maxRows,
-      math.min(bloomMaxBits, optimalBloomBits(maxRows, 0.01))))
+      math.min(BloomMaxBits, optimalBloomBits(maxRows, 0.01))))
     val hashed = eligible.map { c =>
       val h = types(c) match {
         case StringType => xxhash64(col(c))
@@ -5398,6 +5401,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** Fewest candidates [[keyRewriteSet]]'s exact pre-scan runs for. */
+  private val MergeExactFindingMin = 9
+
   private def keyRewriteSet(spark: SparkSession, path: String, base: Long,
       entries0: Seq[Entry], source: DataFrame,
       keyCols: Seq[String]): Set[String] = {
@@ -5663,13 +5669,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // 128 -> 41 files — and that saved IO scales with file WIDTH
     // (the pre-scan reads one column; the rewrite reads+writes all),
     // which is the 100 TB justification. Below
-    // `mergeExactFindingMin` candidates the pre-scan can't save
+    // `MergeExactFindingMin` candidates the pre-scan can't save
     // enough to matter.
-    val exactMin = sys.props.get("graft.snapshot.mergeExactFindingMin")
-      .map(_.toInt).getOrElse(9)
     val exactOn = sys.props.get("graft.snapshot.mergeExactFinding")
       .forall(_.toBoolean)
-    if (!exactOn || refined.size < exactMin) refined
+    if (!exactOn || refined.size < MergeExactFindingMin) refined
     else {
       val mf = readManifestFull(spark, path, base)
       val cand = entries0.filter(e => refined(e.filePath))
@@ -5994,34 +5998,44 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // absence). Two commits — evolution then merge — each atomic; a
     // racing writer aborts the merge half, per the usual guard.
     if (schemaEvolution) {
-      val have = read(spark, path).schema.fields.map(_.name.toLowerCase).toSet
-      val fresh = source.schema.fields
-        .filterNot(f => have(f.name.toLowerCase))
+      val rw = openRewrite(spark, path)
+      val fresh = source.schema.fields.toSeq
+        .filterNot(f => rw.fields.exists(_.name.equalsIgnoreCase(f.name)))
         .map(f => StructField(f.name, f.dataType, nullable = true))
-      if (fresh.nonEmpty) addColumns(spark, path, fresh.toSeq)
+      if (fresh.nonEmpty) {
+        // every refusal the merge would raise, against the columns the
+        // evolution is about to add, before it commits anything
+        rw.m.schema.foreach(sch => expandClauses(
+          new Rewrite(spark, path, rw.base,
+            rw.m.copy(schema = Some(StructType(sch.fields ++ fresh)))),
+          source.columns.toSeq, matched, notMatched, notMatchedBySource, sourceAlias))
+        addColumns(spark, path, fresh)
+      }
     }
     clauseMerge(source, path, keyCols, matched, notMatched, notMatchedBySource,
       targetAlias, sourceAlias, partitionCols, txn, "merge")
   }
 
-  /** [[mergeClauses]] after its source guard and schema evolution,
-    * committed as `op`; only op `merge` records its key columns. */
-  private def clauseMerge(source: DataFrame, path: String, keyCols: Seq[String],
+  /** Column `name` of the frame aliased `alias`. */
+  private def qcol(alias: String, name: String): Column = col(s"$alias.`$name`")
+
+  /** [[clauseMerge]]'s clauses over `rw`'s columns: each `*` expanded
+    * to the assignable target columns the source `srcCols` also has,
+    * and every refusal raised — assignment targets duplicated, unknown,
+    * GENERATED or IDENTITY, a `*` that finds no column, a source
+    * reference in the NOT MATCHED BY SOURCE family. Driver-only, so
+    * [[mergeClauses]] also runs it against the evolved-to-be columns
+    * before schema evolution commits. Returns (matched, insert, not
+    * matched by source). */
+  private def expandClauses(rw: Rewrite, srcCols: Seq[String],
       matched: Seq[MergeMatchedClause], notMatched: Seq[MergeInsert],
-      notMatchedBySource: Seq[MergeMatchedClause],
-      targetAlias: String, sourceAlias: String, partitionCols: Seq[String],
-      txn: Option[(String, Long)], op: String): Long = {
-    val spark = source.sparkSession
-    val rw = openRewrite(spark, path)
-    if (rw.replayed(txn)) return rw.base
-    val entries = rw.entries
+      notMatchedBySource: Seq[MergeMatchedClause], sourceAlias: String)
+      : (Seq[MergeMatchedClause], Seq[MergeInsert], Seq[MergeMatchedClause]) = {
     val allIds = rw.identity.map(_._1)
     val alwaysIds = rw.identity.collect { case (n, true) => n }
-    def qcol(alias: String, name: String): Column = col(s"$alias.`$name`")
 
     // `SET *` / `INSERT *`: every assignable target column with a
     // same-named source column, from the source
-    val srcCols = source.columns.toSeq
     def starAssigns(what: String, bannedIds: Seq[String]): Seq[(String, Column)] = {
       val as = rw.fields.map(_.name)
         .filterNot(n => rw.generated.exists(_.equalsIgnoreCase(n)))
@@ -6077,6 +6091,22 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       case i @ MergeInsert(_, vs) =>
         rw.refuseAssigns("MERGE INSERT", vs, rw.generated ++ alwaysIds); i
     }
+    (matchedX, insertX, nmbsX)
+  }
+
+  /** [[mergeClauses]] after its source guard and schema evolution,
+    * committed as `op`; only op `merge` records its key columns. */
+  private def clauseMerge(source: DataFrame, path: String, keyCols: Seq[String],
+      matched: Seq[MergeMatchedClause], notMatched: Seq[MergeInsert],
+      notMatchedBySource: Seq[MergeMatchedClause],
+      targetAlias: String, sourceAlias: String, partitionCols: Seq[String],
+      txn: Option[(String, Long)], op: String): Long = {
+    val spark = source.sparkSession
+    val rw = openRewrite(spark, path)
+    if (rw.replayed(txn)) return rw.base
+    val entries = rw.entries
+    val (matchedX, insertX, nmbsX) = expandClauses(rw, source.columns.toSeq,
+      matched, notMatched, notMatchedBySource, sourceAlias)
 
     def fireOf(cond: Option[Column]): Column =
       cond.map(c => coalesce(c, lit(false))).getOrElse(lit(true))

@@ -800,8 +800,8 @@ object TextDedup {
     // grouping-only window — no per-partition ORDER BY): rows whose
     // key count exceeds 1 are the candidate occurrences. Measured
     // against every "skew-safe" alternative at 1M docs (43M windows,
-    // one run, planted-skew case = one 8-gram in HALF the docs —
-    // see DupBench + ScaleBench dup_substr_skew):
+    // one run, planted-skew case = one 8-gram in HALF the docs, the
+    // case ScaleBench dup_substr_skew keeps tracking):
     //   window (this):            uniform 34.8s   skew 37.3s
     //   agg + semi join (SMJ):    uniform 130.9s  skew 191.1s
     //   agg + semi join (SHJ):    uniform  93.4s  skew 103.3s
@@ -813,11 +813,17 @@ object TextDedup {
     // two consumers). The tradeoff flips only when ONE key's
     // occurrence count alone overflows a task's budget — order 10⁷+
     // rows of a single gram, i.e. a ~100M-doc corpus where half the
-    // corpus shares one exact 8-gram; at that point reinstate the
-    // sampled bypass preserved in graft.DupBench (keys seen twice in
-    // a 1% doc sample are provably duplicated and can skip the
-    // window; its false positives are impossible and misses are
-    // multiplicity-bounded).
+    // corpus shares one exact 8-gram. At that point build the sampled
+    // heavy-key bypass measured above: count the k64 keys of a 1%
+    // doc sample; a key seen twice there has at least two
+    // occurrences, so its rows are candidates by definition and skip
+    // the window, while every other key keeps the window count. The
+    // sample can never promote a key occurring once (no false
+    // positives; hash collisions only add candidates, as here); a
+    // duplicated key it misses just takes the window, costing at most
+    // its own multiplicity in one task. Build it with `keyed`
+    // materialized once: the double evaluation noted above is what it
+    // lost on.
     val wK = Window.partitionBy("k64")
     val candPos = keyed
       .withColumn("cnt", count(lit(1)).over(wK))

@@ -67,20 +67,22 @@ class ChecksSpec extends SparkTestBase {
   test("metrics repository records runs and flags drift") {
     val path = java.nio.file.Files.createTempDirectory("graft-dqrepo").toString + "/metrics"
     val vr1 = VerificationSuite.run(silver, Seq(SilverClean.silverCheck))
-    MetricsRepository.append(spark, path, "2026-08-01", vr1)
+    MetricsRepository.appendRun(spark, path, "silver", "2026-08-01", vr1)
 
     // second run over a corrupted slice: userId completeness collapses
     val corrupted = silver.withColumn("userId",
       org.apache.spark.sql.functions.when(
         org.apache.spark.sql.functions.rand(7) < 0.5, silver("userId")))
     val vr2 = VerificationSuite.run(corrupted, Seq(SilverClean.silverCheck))
-    MetricsRepository.append(spark, path, "2026-08-02", vr2)
+    MetricsRepository.appendRun(spark, path, "silver", "2026-08-02", vr2)
 
-    val drift = MetricsRepository.driftFrom(spark, path, "2026-08-02", tolerance = 0.1)
-    assert(drift.exists(_.constraint == "Completeness(userId)"),
-      s"expected userId completeness drift, got $drift")
+    // drift = the one-run trailing window at a relative tolerance
+    def drift(tag: String) = MetricsRepository.anomalies(spark, path, "silver", tag,
+      window = 1, maxSigma = 0.0, minRelDelta = 0.1)
+    assert(drift("2026-08-02").exists(_.constraint == "Completeness(userId)"),
+      s"expected userId completeness drift, got ${drift("2026-08-02")}")
     // first run has no predecessor → no drift
-    assert(MetricsRepository.driftFrom(spark, path, "2026-08-01", 0.1).isEmpty)
+    assert(drift("2026-08-01").isEmpty)
   }
 
   test("snapshot repository: history accrues one commit per run; the " +

@@ -32,7 +32,7 @@ class IncrementalDqSpec extends SparkTestBase {
 
     // nothing new → no reports, no metric rows appended
     assert(IncrementalDq.run(spark, path, s"$base/ckpt", s"$base/metrics", checks).isEmpty)
-    assert(MetricsRepository.history(spark, s"$base/metrics").count() === 2)
+    assert(MetricsRepository.runHistory(spark, s"$base/metrics", path).count() === 2)
 
     // second commit is smaller AND half-null — the suite must see ONLY
     // these 10 rows (full-table completeness would be 105/110, not 0.5)
@@ -67,7 +67,7 @@ class IncrementalDqSpec extends SparkTestBase {
     assert(rs.map(r => (r.fromVersion, r.toVersion)) ===
       Seq((1L, 1L), (2L, 2L), (3L, 3L)))
     // per-version Size metrics landed as separate tagged runs
-    val sizes = MetricsRepository.history(spark, s"$base/metrics")
+    val sizes = MetricsRepository.runHistory(spark, s"$base/metrics", path)
       .filter($"constraint" === "Size")
       .select("run_tag", "metric").collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap

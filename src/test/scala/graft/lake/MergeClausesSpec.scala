@@ -386,6 +386,50 @@ class MergeClausesSpec extends SparkTestBase {
     }
   }
 
+  test("schema evolution: a merge its clauses refuse adds no column and commits nothing") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val path = tmp("evorefused")
+    seed(path)
+    // a GENERATED column, declared at creation, for the derived-target refusal
+    val genPath = tmp("evorefused-gen")
+    SnapshotTable.create(spark, genPath, StructType(Seq(
+      StructField("k", LongType), StructField("s", StringType),
+      StructField("v", DoubleType),
+      StructField("y", DoubleType, nullable = true, new MetadataBuilder()
+        .putString(org.apache.spark.sql.catalyst.util.GeneratedColumn
+          .GENERATION_EXPRESSION_METADATA_KEY, "v * 2").build()))))
+    SnapshotTable.append(Seq((1L, "a", 10.0)).toDF("k", "s", "v"), genPath)
+    // the source brings two new columns; each merge is refused
+    val src = Seq((2L, 99.0, "gold", 7L)).toDF("k", "v", "tier", "rank")
+    val refused = Seq(
+      (path, "assigns the same column more than once",
+        Seq(MergeUpdate(None, Seq("v" -> col("s.v"), "v" -> col("s.rank")))), Nil),
+      (path, "not in the table",
+        Seq(MergeUpdate(None, Seq("nope" -> col("s.v")))), Nil),
+      (path, "NOT MATCHED BY SOURCE",
+        Nil, Seq(MergeUpdate(None, Seq("tier" -> col("s.tier"))))),
+      (genPath, "GENERATED column",
+        Seq(MergeUpdate(None, Seq("y" -> col("s.v")))), Nil))
+    for ((p, msg, matched, nmbs) <- refused) {
+      val v0 = SnapshotTable.latestVersion(spark, p)
+      val cols0 = read(spark, p).columns.toSeq
+      val e = intercept[IllegalArgumentException](
+        mergeClauses(src, p, Seq("k"), matched = matched,
+          notMatchedBySource = nmbs, schemaEvolution = true))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      assert(SnapshotTable.latestVersion(spark, p) === v0, s"$msg: a version was committed")
+      assert(read(spark, p).columns.toSeq === cols0, s"$msg: the schema changed")
+    }
+    // the evolved-to-be columns are assignable: the same source merges
+    mergeClauses(src, path, Seq("k"),
+      matched = Seq(MergeUpdate(None, Seq("tier" -> col("s.tier")))),
+      schemaEvolution = true)
+    assert(read(spark, path).columns.toSeq === Seq("k", "s", "v", "tier", "rank"))
+    assert(read(spark, path).filter(col("k") === 2L).select("tier").as[String]
+      .collect().toSeq === Seq("gold"))
+  }
+
   test("exact touched-file finding: stat-less candidates shrink to files with LIVE matches") {
     import spark.implicits._
     val path = tmp("exact")
