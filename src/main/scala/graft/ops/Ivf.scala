@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,8 +18,11 @@ import graft.model.Tables
   *  3. search probes the `nProbe` centroids nearest each query and
   *     exact-reranks only vectors in those cells.
   *
-  * Shuffle volume is O(n) for the assignment and O(candidates) for
-  * the rerank — never all-pairs. Training is deterministic (seeded
+  * [[search]] and [[searchQuantized]] read the corpus once per call
+  * and shuffle at most k rows per query from each map partition; the
+  * tiers that join a second table by id ([[searchQuantizedIndexed]],
+  * [[searchPq]], [[searchPqResidual]]) shuffle their candidates and
+  * that table — never all-pairs. Training is deterministic (seeded
   * init, fixed iteration count).
   */
 object Ivf {
@@ -152,8 +155,11 @@ object Ivf {
   }
 
   /** Candidate pairs for stored query ids: probe nProbe cells per
-    * query against the cell assignment — the shared first half of
-    * both rerank tiers below. */
+    * query against the cell assignment. Only the tiers that score
+    * from a second table keyed by id ([[searchQuantizedIndexed]]'s
+    * quantized corpus, [[searchPq]]'s and [[searchPqResidual]]'s
+    * codes) use it: they must join that table on the candidate ids
+    * anyway, so the one-pass shape of [[search]] saves them nothing. */
   private def candidatesOf(emb: DataFrame, model: Model, queryIds: Seq[Long],
       nProbe: Int, idCol: String, vecCol: String): DataFrame = {
     val spark = emb.sparkSession
@@ -170,22 +176,78 @@ object Ivf {
       .distinct()
   }
 
-  /** Approximate top-k for stored query ids: probe nProbe cells,
-    * exact-cosine rerank candidates only. */
-  def search(emb: DataFrame, model: Model, queryIds: Seq[Long], k: Int,
-      nProbe: Int = 4, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val queries = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+  /** The query side of a one-pass search: each stored query's vector,
+    * one row per (query, probe cell). */
+  private def probeRows(emb: DataFrame, model: Model, queryIds: Seq[Long],
+      nProbe: Int, idCol: String, vecCol: String): Dataset[(Long, Array[Float], Int)] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    emb.filter(col(idCol).isin(queryIds: _*))
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+      .as[(Long, Array[Float])]
+      .flatMap { case (qid, qv) => model.nearestN(qv, nProbe).map(c => (qid, qv, c)) }
+  }
+
+  /** The corpus side: one typed pass tags every row with its nearest
+    * cell and keeps its vector, then joins the broadcast `probes`
+    * (query_id, cluster, …) on the cell and drops self-matches. */
+  private def probedPass(emb: DataFrame, model: Model, probes: DataFrame,
+      idCol: String, vecCol: String): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    emb.select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+      .as[(Long, Array[Float])]
+      .mapPartitions(_.map { case (id, v) => (id, v, model.nearest(v)) })
+      .toDF(idCol, vecCol, "cluster")
+      .join(broadcast(probes), "cluster")
+      .filter(col(idCol) =!= col("query_id"))
+  }
+
+  /** Keep the k best-scored rows per query: cosine desc, id asc. With
+    * k below `spark.sql.optimizer.windowGroupLimitThreshold` (1,000 by
+    * default) Spark plans a partial WindowGroupLimit in every map
+    * partition, so at most k rows per query cross the one exchange. */
+  private def topKPerQuery(scored: DataFrame, k: Int, idCol: String): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col(idCol).asc)
-    candidatesOf(emb, model, queryIds, nProbe, idCol, vecCol)
-      .join(emb.select(col(idCol), col(vecCol)), idCol)
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(Similarity.cosine(col(vecCol), col("qv")), 6).as("cosine"))
-      .withColumn("rn", row_number().over(w))
+    scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .drop("rn")
+  }
+
+  /** Approximate top-k for stored query ids: probe nProbe cells,
+    * exact-cosine rerank candidates only — in one pass over the corpus.
+    *
+    * The query vectors are looked up and expanded into one row per
+    * (query, probe cell), and that small table is broadcast. The typed
+    * pass that assigns every corpus row its nearest cell keeps the
+    * row's vector, so a broadcast hash join on the cell yields the
+    * candidates with their vectors; they are scored `round(cosine, 6)`
+    * and ranked by `row_number` over (cosine desc, id asc), which
+    * Spark plans as a partial WindowGroupLimit per partition, one
+    * exchange of at most k rows per partition and query, and a final
+    * WindowGroupLimit. Ties, NaN (a zero vector) and nulls rank as in
+    * the three-pass join form this replaced (assign, join the probe
+    * cells, join the candidates back to `emb` for their vectors).
+    *
+    * Measured on `docs_curation` (6,000 vectors, top-10 searches, a
+    * 4-core host): traced at seed 101, the 10 searches went from 60
+    * jobs to 30, 4.97 to 2.99 s, 86 KB to 8 KB of shuffle and 1,500
+    * to 750 rows read per result (the lookup and the pass); over 12
+    * interleaved untraced pairs the workload's median op (a search)
+    * fell 29%, 0.553 to 0.391 s.
+    *
+    * Ids are assumed unique. With a duplicated id the old form joined
+    * every row carrying a candidate id back in, including rows in
+    * cells no query probed; this one scores only the rows whose own
+    * cell is probed, against each query vector that probes it. */
+  def search(emb: DataFrame, model: Model, queryIds: Seq[Long], k: Int,
+      nProbe: Int = 4, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val probes = probeRows(emb, model, queryIds, nProbe, idCol, vecCol)
+      .toDF("query_id", "qv", "cluster")
+    topKPerQuery(probedPass(emb, model, probes, idCol, vecCol)
+      .select(col("query_id"), col(idCol),
+        round(Similarity.cosine(col(vecCol), col("qv")), 6).as("cosine")), k, idCol)
   }
 
   /** Metadata-filtered IVF search — the hybrid-search scale path for
@@ -203,13 +265,8 @@ object Ivf {
       queryIds: Seq[Long], k: Int, nProbe: Int = 4, overfetch: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(overfetch >= 1, "overfetch must be >= 1")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    search(emb, model, queryIds, k * overfetch, nProbe, idCol, vecCol)
-      .join(allowedIds.select(col(idCol)), Seq(idCol), "left_semi")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    topKPerQuery(search(emb, model, queryIds, k * overfetch, nProbe, idCol, vecCol)
+      .join(allowedIds.select(col(idCol)), Seq(idCol), "left_semi"), k, idCol)
   }
 
   /** Tier decision for metadata-filtered search — pure, spec-pinned:
@@ -259,31 +316,29 @@ object Ivf {
     * centroids — quantization error belongs in the rerank, not the
     * index geometry.
     *
-    * Only the probe-selected CANDIDATE rows are quantized (one typed
-    * pass carrying query_id, so the candidate subtree is built
-    * exactly once): an earlier formulation quantized the full corpus
-    * per search, which at scale is a second complete corpus scan per
-    * query batch. An id serving several queries quantizes once per
-    * pair — trivial next to the scan it replaces. When searches
-    * repeat, pay the quantization once at index-build time instead:
+    * The one-pass shape of [[search]]: the probe rows carry each
+    * query's quantized vector, and the corpus rows are quantized in
+    * the assigning map stage, after the broadcast join on the cell,
+    * so only rows whose cell is probed are quantized (once per query
+    * probing that cell). When searches repeat, pay the quantization
+    * once at index-build time instead:
     * [[buildQuantizedIndex]]/[[loadQuantizedIndex]] +
     * [[searchQuantizedIndexed]]. */
   def searchQuantized(emb: DataFrame, model: Model, queryIds: Seq[Long], k: Int,
       nProbe: Int = 4, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val qcand = candidatesOf(emb, model, queryIds, nProbe, idCol, vecCol)
-      .join(emb.select(col(idCol), col(vecCol).cast("array<float>").as("v")), idCol)
-      .select(col("query_id"), col(idCol).cast("long"), col("v"))
-      .as[(Long, Long, Array[Float])]
-      .mapPartitions(_.map { case (qid, id, v) =>
-        (qid, id, Similarity.quantizeVec(v)._2)
-      }).toDF("query_id", idCol, "qvec")
-    val qq = Similarity.quantize(
-      emb.filter(col(idCol).isin(queryIds: _*)).select(col(idCol), col(vecCol)),
-      idCol, vecCol)
-      .select(col(idCol).as("query_id"), col("qvec").as("q_qvec"))
-    rerankQuantized(qcand, qq, k, idCol)
+    val probes = probeRows(emb, model, queryIds, nProbe, idCol, vecCol)
+      .map { case (qid, qv, c) => (qid, Similarity.quantizeVec(qv)._2, c) }
+      .toDF("query_id", "q_qvec", "cluster")
+    val quantized = probedPass(emb, model, probes, idCol, vecCol)
+      .select(col("query_id"), col(idCol), col(vecCol), col("q_qvec"))
+      .as[(Long, Long, Array[Float], Array[Byte])]
+      .mapPartitions(_.map { case (qid, id, v, qq) =>
+        (qid, id, Similarity.quantizeVec(v)._2, qq)
+      }).toDF("query_id", idCol, "qvec", "q_qvec")
+    topKPerQuery(quantized.select(col("query_id"), col(idCol),
+      round(Similarity.quantizedCosine(col("qvec"), col("q_qvec")), 6).as("cosine")), k, idCol)
   }
 
   /** int8 rerank over a PRE-BUILT quantized corpus (the index-artifact
@@ -297,19 +352,9 @@ object Ivf {
       .join(qcorp.select(col(idCol), col("qvec")), idCol)
     val qq = qcorp.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), col("qvec").as("q_qvec"))
-    rerankQuantized(qcand, qq, k, idCol)
-  }
-
-  private def rerankQuantized(qcand: DataFrame, qq: DataFrame, k: Int,
-      idCol: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    qcand.join(broadcast(qq), "query_id")
+    topKPerQuery(qcand.join(broadcast(qq), "query_id")
       .select(col("query_id"), col(idCol),
-        round(Similarity.quantizedCosine(col("qvec"), col("q_qvec")), 6).as("cosine"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
+        round(Similarity.quantizedCosine(col("qvec"), col("q_qvec")), 6).as("cosine")), k, idCol)
   }
 
   /** Persist a trained quantizer as a tiny parquet (cluster id +
@@ -1041,15 +1086,10 @@ object Ivf {
       .select(col("query_id"), col(idCol))
     val queries = emb.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val wX = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    short.join(emb.select(col(idCol), col(vecCol)), idCol)
+    topKPerQuery(short.join(emb.select(col(idCol), col(vecCol)), idCol)
       .join(broadcast(queries), "query_id")
       .select(col("query_id"), col(idCol),
-        round(Similarity.cosine(col(vecCol), col("qv")), 6).as("cosine"))
-      .withColumn("rn", row_number().over(wX))
-      .filter(col("rn") <= k)
-      .drop("rn")
+        round(Similarity.cosine(col(vecCol), col("qv")), 6).as("cosine")), k, idCol)
   }
 
   // ============ OPQ + residual encoding (IVFADC layout) =============
@@ -1315,15 +1355,10 @@ object Ivf {
       .select(col("query_id"), col(idCol))
     val queries = emb.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val wX = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    short.join(emb.select(col(idCol), col(vecCol)), idCol)
+    topKPerQuery(short.join(emb.select(col(idCol), col(vecCol)), idCol)
       .join(broadcast(queries), "query_id")
       .select(col("query_id"), col(idCol),
-        round(Similarity.cosine(col(vecCol), col("qv")), 6).as("cosine"))
-      .withColumn("rn", row_number().over(wX))
-      .filter(col("rn") <= k)
-      .drop("rn")
+        round(Similarity.cosine(col(vecCol), col("qv")), 6).as("cosine")), k, idCol)
   }
 
   /** q141: the OPQ + residual-encoding gate (IVFADC — ROADMAP #4 /
