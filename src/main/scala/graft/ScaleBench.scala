@@ -462,37 +462,27 @@ object ScaleBench {
       timed("merge_statless") {
         // merge against a table whose key has NO usable stats (round-
         // robin layout: every file spans the whole key space): the
-        // conservative range/bloom set is ALL files — a 50-row
-        // correction would rewrite the entire table. Exact finding
-        // (one key-column scan semi-joined with the source keys) must
-        // shrink the rewrite to the files that actually hold a match.
-        // A/B in one run, same fixture shape both sides.
-        def build(): String = {
-          val base = java.nio.file.Files.createTempDirectory("graft-scale-ms")
-          val path = s"$base/t"
-          graft.lake.SnapshotTable.append(
-            spark.range(rows)
-              .select(col("id"), (col("id") % 97).cast("double").as("v"))
-              .repartition(128), path)
-          path
-        }
-        def run(path: String): (Double, Int) = {
-          val v1 = graft.lake.SnapshotTable.liveFiles(spark, path).toSet
-          val src = spark.range(5000, 5050).select(col("id"), lit(-1.0).as("v"))
-          val t0 = System.nanoTime()
-          graft.lake.SnapshotTable.merge(src, path, Seq("id"))
-          val secs = (System.nanoTime() - t0) / 1e9
-          val v2 = graft.lake.SnapshotTable.liveFiles(spark, path).toSet
-          (secs, (v1 -- v2).size)
-        }
-        val pCons = build(); val pExact = build()
-        sys.props("graft.snapshot.mergeExactFinding") = "false"
-        val (tCons, nCons) = try run(pCons)
-          finally sys.props.remove("graft.snapshot.mergeExactFinding")
-        val (tExact, nExact) = run(pExact)
-        System.err.println(f"[scale] merge_statless conservative=$tCons%.2fs " +
-          f"($nCons files) exact=$tExact%.2fs ($nExact files)")
-        require(nCons >= 100, s"fixture should defeat stats pruning, got $nCons")
+        // stats and bloom tiers keep ALL files — a 50-row correction
+        // would rewrite the entire table. Exact finding (one key-column
+        // scan semi-joined with the source keys) must shrink the
+        // rewrite to the files that actually hold a match.
+        val base = java.nio.file.Files.createTempDirectory("graft-scale-ms")
+        val path = s"$base/t"
+        graft.lake.SnapshotTable.append(
+          spark.range(rows)
+            .select(col("id"), (col("id") % 97).cast("double").as("v"))
+            .repartition(128), path)
+        val v1 = graft.lake.SnapshotTable.liveFiles(spark, path).toSet
+        val v = graft.lake.SnapshotTable.latestVersion(spark, path).get
+        require(!graft.lake.SnapshotTable.readManifest(spark, path, v)
+          .exists(_.stats.exists(_._1 == "id")),
+          "fixture should defeat stats pruning: a live file records an id bound")
+        val src = spark.range(5000, 5050).select(col("id"), lit(-1.0).as("v"))
+        val t0 = System.nanoTime()
+        graft.lake.SnapshotTable.merge(src, path, Seq("id"))
+        val secs = (System.nanoTime() - t0) / 1e9
+        val nExact = (v1 -- graft.lake.SnapshotTable.liveFiles(spark, path).toSet).size
+        System.err.println(f"[scale] merge_statless exact=$secs%.2fs ($nExact files)")
         require(nExact <= 55,
           s"exact finding failed: rewrote $nExact files for 50 keys")
       },

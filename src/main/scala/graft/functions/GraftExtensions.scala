@@ -75,8 +75,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("table_changes"),
       new ExpressionInfo(graft.lake.TableFunctions.getClass.getName, "table_changes"),
       (exprs: Seq[Expression]) => graft.lake.TableFunctions.tableChanges(exprs)))
-    // whole-operator extension: plans the AsOfJoin logical node
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // SQL-syntax time travel over registered snapshot tables:
     //   SELECT * FROM name VERSION AS OF 2 / TIMESTAMP AS OF '...'
     ext.injectResolutionRule(s => graft.lake.ResolveSnapshotRelation(s))

@@ -3699,8 +3699,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         if (perBlock.isEmpty || perBlock.exists(_.isEmpty)) None
         else Some(perBlock.flatten)
       }
+      // a chunk with no min/max (all NULL, or a double chunk holding a
+      // NaN) still reports a zero min and max: no bound
       val stats = statsCols.filterNot(isDecimal).flatMap { column =>
         columnBounds(column) {
+          case s if !s.hasNonNullValue => None
           case l: LongStatistics   => Some((l.getMin.toDouble, l.getMax.toDouble))
           case i: IntStatistics    => Some((i.getMin.toDouble, i.getMax.toDouble))
           case d: DoubleStatistics => Some((d.getMin, d.getMax))
@@ -5330,30 +5333,23 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       op = "overwrite_partitions")
   }
 
-  /** Files that may contain ANY of `source`'s key tuples — the
-    * shared rewrite-set pruner of [[merge]] and [[deleteKeys]]:
-    * manifest min/max range join (numeric + string bounds), then
-    * per-file bloom refinement for small distinct key sets. Files
-    * lacking stats on every key column are conservatively included.
-    */
-  /** Driver-side view of a SMALL literal merge source: when the
-    * optimized plan is a bounded [[LocalRelation]] (the trickle-merge
-    * shape — a correction batch built from driver values, the single
-    * most common maintenance merge), the distinct key tuples are
-    * already IN DRIVER MEMORY, and launching Spark jobs to re-collect
-    * them (the stats range join + the bloom probe collect in
-    * [[keyRewriteSet]]) is pure fixed overhead: 2 jobs + 2 plan
-    * compilations per merge that return values we were holding all
-    * along. Returns the distinct key tuples as JVM values
-    * (UTF8String → String) or None when the plan is not local, larger
-    * than `cap` rows, or any key column's type is outside the
-    * numeric/string domain the stats logic compares (then the
-    * distributed path runs, bit-identical as before). At 100 TB this
-    * is exactly the small-correction fast path Delta's OPTIMIZE-era
-    * writers special-case: the decision data is O(keys), never
-    * row-count-bound. */
-  private def localKeyTuples(source: DataFrame, cols: Seq[String],
-      cap: Int): Option[Seq[Seq[Any]]] = {
+  /** Most distinct source key tuples [[keyRewriteSet]]'s driver tier
+    * tests; past it the finder takes the range-join tier. */
+  private[lake] val KeyTupleCap = 1024
+
+  /** Fewest candidates [[keyRewriteSet]]'s exact pre-scan runs for. */
+  private val MergeExactFindingMin = 9
+
+  /** The distinct key tuples of a literal source, without a job: when
+    * `source`'s optimized plan is a [[LocalRelation]] (a correction
+    * batch built from driver values), its rows are already in driver
+    * memory. `keys` are the key attributes of `source`'s output; a
+    * tuple with a NULL component is dropped (SQL equality never
+    * matches it). None for any other plan. */
+  private def localKeyTuples(source: DataFrame,
+      keys: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
+      : Option[Seq[Seq[org.apache.spark.sql.catalyst.expressions.Literal]]] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.plans.logical.{
       LocalRelation, LogicalPlan, Repartition, RepartitionByExpression}
     @scala.annotation.tailrec
@@ -5362,329 +5358,156 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       case r: RepartitionByExpression => strip(r.child)
       case other => other
     }
-    def jvm(v: Any): Any = v match {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case x => x
-    }
-    val okTypes: Set[DataType] = Set(ByteType, ShortType, IntegerType,
-      LongType, FloatType, DoubleType, StringType)
-    // cheap structural pre-check on the ALREADY-computed analyzed plan
-    // (Dataset construction runs the analyzer eagerly): only a plan
-    // whose every leaf is a LocalRelation can fold to one, so a
-    // distributed merge source never pays the optimizer pass below
-    // just to learn it is not local
+    // only a plan whose every leaf is a LocalRelation can fold to one,
+    // so a distributed source never pays the optimizer pass below
     val leaves = source.queryExecution.analyzed.collectLeaves()
-    if (leaves.isEmpty ||
-        !leaves.forall(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
-      return None
+    if (leaves.isEmpty || !leaves.forall(_.isInstanceOf[LocalRelation])) return None
     strip(source.queryExecution.optimizedPlan) match {
-      case lr: LocalRelation if lr.data.size <= cap =>
-        // a column name matching MORE than one output attribute
-        // case-insensitively is ambiguous — binding "first match wins"
-        // could pick a different column than Spark's resolver; bail to
-        // the distributed path (which resolves or fails per Spark)
-        val idx = cols.map { c =>
-          val ms = lr.output.zipWithIndex
-            .filter(_._1.name.equalsIgnoreCase(c))
-          if (ms.size == 1) ms.head._2 else -1
-        }
-        val types = idx.map(i => if (i < 0) null else lr.output(i).dataType)
-        if (idx.exists(_ < 0) ||
-            types.exists(t => t == null ||
-              !(okTypes(t) || t.isInstanceOf[org.apache.spark.sql.types.DecimalType])))
-          None
-        else Some(lr.data.map(row =>
-          idx.zip(types).map { case (i, t) => jvm(row.get(i, t)) }).distinct)
+      case lr: LocalRelation =>
+        val idx = keys.map(k => lr.output.indexWhere(_.exprId == k.exprId))
+        if (idx.contains(-1)) None
+        else Some(lr.data.map(row => idx.zip(keys).map { case (i, k) =>
+          Literal(row.get(i, k.dataType), k.dataType) })
+          .filterNot(_.exists(_.value == null)).distinct.toSeq)
       case _ => None
     }
   }
 
-  /** Fewest candidates [[keyRewriteSet]]'s exact pre-scan runs for. */
-  private val MergeExactFindingMin = 9
-
-  private def keyRewriteSet(spark: SparkSession, path: String, base: Long,
-      entries0: Seq[Entry], source: DataFrame,
-      keyCols: Seq[String]): Set[String] = {
-    // key columns are LOGICAL names; stats/blooms/null counts in
-    // entries are keyed by the PHYSICAL (on-disk) names
-    val pk: String => String = readManifestFull(spark, path, base).phys
-    // a file recording ALL-NULL in some key column can never hold a
-    // matched row — SQL equality never matches NULL, whatever the
-    // source keys — so it is excluded outright (carried over, not
-    // rewritten). This is the null-stats analogue of bounds pruning,
-    // and the only stats that CAN prune such a file: an all-null
-    // chunk records no min/max at all.
-    val entries = entries0.filterNot(e =>
-      e.rows >= 0 && keyCols.exists(c =>
-        e.nulls.find(_._1 == pk(c)).exists(_._2 == e.rows)))
-    // files prunable via stats: those carrying min/max for EVERY key
-    // column (others must be rewritten unconditionally). Numeric keys
-    // compare against numeric footer intervals; STRING keys against
-    // the UTF-8 byte-ordered string bounds — Spark's own StringType
-    // comparison IS unsigned byte order, so the range join below is
-    // sound for both without any casting tricks.
-    val statCols = keyCols.filter(c => entries.exists(_.stats.exists(_._1 == pk(c))))
-    val sStatCols = keyCols.filterNot(statCols.contains)
-      .filter(c => entries.exists(_.sstats.exists(_._1 == pk(c))))
-    val (prunable, unprunable) = entries.partition(e =>
-      (statCols.nonEmpty || sStatCols.nonEmpty) &&
-        statCols.forall(c => e.stats.exists(_._1 == pk(c))) &&
-        sStatCols.forall(c => e.sstats.exists(_._1 == pk(c))))
-    // literal-source fast path: key tuples already on the driver →
-    // the stats range check and the bloom probe below run as driver
-    // loops instead of 2 Spark jobs. Guarded by tuples × candidate
-    // files so the loop never grows past what a broadcast join would
-    // have been the right tool for.
-    val localCap = sys.props.get("graft.snapshot.mergeLocalKeysCap")
-      .map(_.toInt).getOrElse(1024)
-    val localTuples: Option[Seq[Seq[Any]]] =
-      localKeyTuples(source, statCols ++ sStatCols, localCap)
-        .filter(_.size.toLong * math.max(1, entries.size) <= 2000000L)
-    // bloom-probe columns, hoisted from the refinement below so a
-    // NON-literal small source can share ONE collect between the
-    // range check and the bloom probe. Blooms hash in the TABLE's
-    // domain (string / integral-as-long), so the source column must
-    // live in the same domain for the probe to mean anything.
-    val tblTypes: Map[String, DataType] = schemaOf(spark, path, Some(base))
-      .map(_.fields.map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
-    val srcTypes = source.schema.fields.map(f => f.name -> f.dataType).toMap
-    def sameDomain(c: String): Boolean =
-      (tblTypes.get(c), srcTypes.get(c)) match {
-        case (Some(StringType), Some(StringType)) => true
-        case (Some(t), Some(s)) =>
-          Seq(ByteType, ShortType, IntegerType, LongType).contains(t) &&
-            Seq(ByteType, ShortType, IntegerType, LongType).contains(s)
-        case _ => false
+  /** Files that may hold a row matching one of `source`'s key tuples:
+    * the key file finder of [[merge]], [[mergeClauses]] and
+    * [[deleteKeys]]. Two tiers, chosen by the source's distinct key
+    * count:
+    *  - Driver tier, at most `cap` tuples. A literal source's tuples
+    *    come from its data with no job ([[localKeyTuples]]); a derived
+    *    source's from one bounded collect, paid only when some key
+    *    column carries a bloom. The join condition `t.k1 = s.k1 AND …`
+    *    is analyzed once against the table's schema and the source's
+    *    key types, so cross-typed keys compile to Spark's own casts.
+    *    Each tuple binds it to literals and compiles through
+    *    [[readWhere]]'s skip compiler ([[compileSkipPredicate]]): one
+    *    predicate checks bounds, null counts and blooms together, and
+    *    a file is kept when some tuple's predicate can match it.
+    *  - Range-join tier, more tuples or a derived source on a bloomless
+    *    table: a broadcast join of the distinct source keys against the
+    *    files' bounds. A key column whose source type differs from the
+    *    table column's contributes no range (an integral pair keeps
+    *    it: the cast to double is exact for both), and a file all-NULL
+    *    in some key column is excluded.
+    * When `MergeExactFindingMin` or more candidates remain, one
+    * column-pruned scan of their key columns, semi-joined against the
+    * distinct source keys, keeps only the files that hold a match.
+    * `cap` is a test seam for the tier choice. */
+  private[lake] def keyRewriteSet(rw: Rewrite, source: DataFrame,
+      keyCols: Seq[String], cap: Int = KeyTupleCap): Set[String] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.types.NumericType
+    val spark = rw.spark
+    val m = rw.m
+    val keyFrame = source.select(keyCols.map(col): _*)
+    val keyAttrs = keyFrame.queryExecution.analyzed.output
+    // the table column each key resolves to (stats are keyed by m.phys)
+    val resolver = spark.sessionState.conf.resolver
+    val tKeys: Seq[Option[StructField]] =
+      keyCols.map(k => rw.fields.find(f => resolver(f.name, k)))
+    val bloomed = tKeys.flatten.exists(f =>
+      rw.entries.exists(_.blooms.exists(_._1 == m.phys(f.name))))
+    val tuples: Option[Seq[Seq[Literal]]] = localKeyTuples(source, keyAttrs)
+      .orElse {
+        if (!bloomed || cap <= 0) None
+        else Some(keyFrame.filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
+          .distinct().limit(cap + 1).collect().toSeq.map(r =>
+            keyAttrs.indices.map(i => Literal.create(r.get(i), keyAttrs(i).dataType))))
       }
-    val bCols = keyCols.filter(c =>
-      entries.exists(_.blooms.exists(_._1 == pk(c))) && sameDomain(c))
-    val bloomCap = sys.props.get("graft.snapshot.mergeBloomProbeCap")
-      .map(_.toInt).getOrElse(1024)
-    // One-collect fast path for NON-literal sources (the derived-frame
-    // merge every lifecycle gate runs — gold.limit(3) corrections,
-    // streaming change batches): when the bloom refinement below
-    // would collect the SAME distinct key tuples the range check
-    // joins on (bCols == statCols++sStatCols as sets — always true
-    // for single-column keys), collect them ONCE and run BOTH
-    // decisions as the driver loops the literal path already has:
-    // one job replaces two (range join + bloom collect). Past either
-    // cap the behavior AND job count are identical to the two-job
-    // path — this collect simply IS the bloom probe's collect, and
-    // the range check falls back to the distributed join. Gated by
-    // the same mergeLocalKeysCap knob, so the MergeLocalKeysSpec A/B
-    // (cap 0 <-> default) drives this path against the distributed
-    // one too.
-    val probeCols = statCols ++ sStatCols
-    val collectedRows: Option[Array[org.apache.spark.sql.Row]] =
-      if (localTuples.isDefined || localCap <= 0 || probeCols.isEmpty ||
-          prunable.isEmpty || bCols.isEmpty ||
-          bCols.toSet != probeCols.toSet) None
-      else Some(source.select(probeCols.map(col): _*).distinct()
-        // bounded even under a user-raised cap: past the 2e6 guard
-        // below no tuple count is usable anyway
-        .limit(math.min(math.max(localCap, bloomCap), 2000000) + 1).collect())
-    val collectedTuples: Option[Seq[Seq[Any]]] = collectedRows
-      .filter(_.length <= localCap)
-      .map(_.toSeq.map(r => probeCols.indices.map(r.get(_): Any)))
-      .filter(_.size.toLong * math.max(1, entries.size) <= 2000000L)
-    def asDouble(v: Any): Option[Double] = v match {
-      case null => None
-      case n: java.lang.Number => Some(n.doubleValue())
-      case b: java.lang.Boolean => Some(if (b) 1.0 else 0.0)
-      case _ => None
-    }
-    // Driver-side range check over the literal tuples. Returns None —
-    // falling back to the distributed join — when any NON-NULL key
-    // value lies outside the stats domain (e.g. an Int source value
-    // for a string-stats column, or a String for a numeric one: the
-    // join path CASTS and can still match, so dropping the tuple here
-    // would silently skip a rewrite = lost update) or is a NaN (the
-    // join compares under Spark's NaN ordering — NaN = NaN, NaN > all
-    // — which primitive comparisons below do not replicate). A NULL
-    // key component still just drops its tuple: SQL equality never
-    // matches NULL, exactly the join's semantics.
-    def localRangeHits(tuples: Seq[Seq[Any]]): Option[Set[String]] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val nStat = statCols.length
-      var bail = false
-      val tupleVals = tuples.flatMap { t =>
-        val ds = t.take(nStat).map {
-          case null => None
-          case v => asDouble(v) match {
-            case Some(d) if !d.isNaN => Some(d)
-            case _ => bail = true; None // type mismatch or NaN
-          }
+      .filter(_.size <= cap)
+    val files: Seq[Entry] = tuples match {
+      case Some(ts) =>
+        val sNames = keyCols.indices.map(i => s"__graft_key$i")
+        val template = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+            StructType(rw.fields ++ sNames.zip(keyAttrs).map { case (n, a) =>
+              StructField(n, a.dataType) }))
+          .filter(keyCols.zip(sNames).map { case (k, s) => col(k) === col(s) }
+            .reduce(_ && _))
+          .queryExecution.analyzed
+        val (cond, sIds) = template match {
+          case f: Filter => (f.condition, f.child.output.takeRight(sNames.size).map(_.exprId))
         }
-        val ss = t.drop(nStat).map {
-          case null => None
-          case s: String => Some(UTF8String.fromString(s))
-          case _ => bail = true; None // type mismatch
+        val canMatch = ts.map { t =>
+          val bind = sIds.zip(t).toMap
+          compileSkipPredicate(cond.transform {
+            case a: AttributeReference if bind.contains(a.exprId) => bind(a.exprId)
+          }, m.phys, bloomed)
         }
-        if (ds.contains(None) || ss.contains(None)) None
-        else Some((ds.map(_.get), ss.map(_.get)))
-      }
-      if (bail) None
-      else Some(prunable.filter { e =>
-        val dB = statCols.map(c => e.stats.find(_._1 == pk(c)).get)
-        val sB = sStatCols.map(c => e.sstats.find(_._1 == pk(c)).get)
-        // a NaN file bound defeats primitive range comparison (v >=
-        // NaN is always false) where the join's NaN-greatest ordering
-        // could match — keep such a file (over-inclusion only rewrites
-        // more, never loses an update)
-        tupleVals.exists { case (ds, ss) =>
-          ds.zip(dB).forall { case (v, (_, mn, mx)) =>
-            mn.isNaN || mx.isNaN || (v >= mn && v <= mx) } &&
-            ss.zip(sB).forall { case (v, (_, mn, mx)) =>
-              v.compareTo(UTF8String.fromString(mn)) >= 0 &&
-                v.compareTo(UTF8String.fromString(mx)) <= 0 }
-        }
-      }.map(_.filePath).toSet)
-    }
-    val hit: Set[String] =
-      if (prunable.isEmpty) Set.empty
-      else localTuples.orElse(collectedTuples).flatMap(localRangeHits) match {
-        case Some(s) => s
-        case None => {
-        import org.apache.spark.sql.Row
-        import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
-        val schema = StructType(StructField("_file", StringType) +:
-          (statCols.flatMap(c => Seq(
-            StructField(s"_mn_$c", DoubleType), StructField(s"_mx_$c", DoubleType))) ++
-            sStatCols.flatMap(c => Seq(
-              StructField(s"_smn_$c", StringType), StructField(s"_smx_$c", StringType)))))
-        val ranges = spark.createDataFrame(
-          prunable.map(e => Row.fromSeq(e.filePath +:
-            (statCols.flatMap { c =>
-              val (_, mn, mx) = e.stats.find(_._1 == pk(c)).get
+        rw.entries.filter(e => canMatch.exists(_(e)))
+      case None =>
+        val entries = rw.entries.filterNot(e => e.rows >= 0 && tKeys.flatten.exists(f =>
+          e.nulls.find(_._1 == m.phys(f.name)).exists(_._2 == e.rows)))
+        def integral(t: DataType): Boolean =
+          Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+        // (key index, physical column, type) of the keys a bound can prune
+        val ranged: Seq[(Int, String, DataType)] = keyCols.indices.flatMap(i =>
+          tKeys(i).filter(f => f.dataType == keyAttrs(i).dataType ||
+              integral(f.dataType) && integral(keyAttrs(i).dataType))
+            .map(f => (i, m.phys(f.name), f.dataType)))
+        val num = ranged.filter { case (_, p, t) =>
+          t.isInstanceOf[NumericType] && entries.exists(_.stats.exists(_._1 == p)) }
+        val str = ranged.filter { case (_, p, t) =>
+          t == StringType && entries.exists(_.sstats.exists(_._1 == p)) }
+        // NaN bounds compare false to everything: such a file is unprunable
+        val (prunable, unprunable) = entries.partition(e =>
+          (num.nonEmpty || str.nonEmpty) &&
+            num.forall(r => e.stats.exists(s => s._1 == r._2 && !s._2.isNaN && !s._3.isNaN)) &&
+            str.forall(r => e.sstats.exists(_._1 == r._2)))
+        if (prunable.isEmpty) unprunable
+        else {
+          val schema = StructType(StructField("_file", StringType) +:
+            (num.flatMap(r => Seq(StructField(s"_mn${r._1}", DoubleType),
+              StructField(s"_mx${r._1}", DoubleType))) ++
+              str.flatMap(r => Seq(StructField(s"_mn${r._1}", StringType),
+                StructField(s"_mx${r._1}", StringType)))))
+          val ranges = spark.createDataFrame(prunable.map(e => Row.fromSeq(e.filePath +:
+            (num.flatMap { r =>
+              val (_, mn, mx) = e.stats.find(_._1 == r._2).get
               Seq(mn, mx)
-            } ++ sStatCols.flatMap { c =>
-              val (_, mn, mx) = e.sstats.find(_._1 == pk(c)).get
+            } ++ str.flatMap { r =>
+              val (_, mn, mx) = e.sstats.find(_._1 == r._2).get
               Seq(mn, mx)
             }))).asJava, schema)
-        val srcKeys = source
-          .select(statCols.map(c => col(c).cast("double").as(c)) ++
-            sStatCols.map(c => col(c).cast("string").as(c)): _*).distinct()
-        val inRange = (statCols
-          .map(c => col(c) >= col(s"_mn_$c") && col(c) <= col(s"_mx_$c")) ++
-          sStatCols
-            .map(c => col(c) >= col(s"_smn_$c") && col(c) <= col(s"_smx_$c")))
-          .reduce(_ && _)
-        srcKeys.join(broadcast(ranges), inRange)
-          .select("_file").distinct().collect().map(_.getString(0)).toSet
+          val srcKeys = source.select(
+            num.map(r => col(keyCols(r._1)).cast("double").as(s"_k${r._1}")) ++
+              str.map(r => col(keyCols(r._1)).as(s"_k${r._1}")): _*).distinct()
+          val inRange = (num ++ str).map { r =>
+            col(s"_k${r._1}") >= col(s"_mn${r._1}") && col(s"_k${r._1}") <= col(s"_mx${r._1}")
+          }.reduce(_ && _)
+          val hit = srcKeys.join(broadcast(ranges), inRange)
+            .select("_file").distinct().collect().map(_.getString(0)).toSet
+          prunable.filter(e => hit(e.filePath)) ++ unprunable
         }
-      }
-    val rewrite0: Set[String] = hit ++ unprunable.map(_.filePath)
-    // bloom refinement: min/max kept a file because the key fell
-    // inside its range, but on a high-cardinality unclustered key
-    // every file's range spans the whole space — the per-file blooms
-    // are what actually prune a point merge. Applied only when the
-    // DISTINCT source key set is small (the late-correction shape
-    // blooms exist for): collect up to `cap` key tuples and test
-    // driver-side against the manifest's blooms. A larger source
-    // skips refinement (min/max behavior — a broad merge rewrites
-    // broadly anyway, and a driver loop over keys × files would not
-    // be the bottleneck worth paying). NULL key components or
-    // type-mismatched columns also skip — conservative, never wrong.
-    val refined: Set[String] = {
-      // tblTypes / sameDomain / bCols / bloomCap hoisted above (shared
-      // with the one-collect fast path)
-      if (bCols.isEmpty || rewrite0.isEmpty) rewrite0
-      else {
-        val cap = bloomCap
-        // literal sources already produced their tuples on the driver
-        // (localKeyTuples above) — probe those instead of launching a
-        // distinct+collect job for values we are holding; a collected
-        // non-literal source likewise reuses its ONE collect (same
-        // distinct tuples, re-ordered from probeCols to bCols)
-        val keyRows: Array[org.apache.spark.sql.Row] =
-          localKeyTuples(source, bCols, cap + 1) match {
-            case Some(ts) =>
-              ts.take(cap + 1).map(org.apache.spark.sql.Row.fromSeq).toArray
-            case None => collectedRows match {
-              case Some(rows) =>
-                val bIdx = bCols.map(probeCols.indexOf)
-                rows.take(cap + 1).map(r =>
-                  org.apache.spark.sql.Row.fromSeq(bIdx.map(r.get(_): Any)))
-              case None => source.select(bCols.map(col): _*)
-                .distinct().limit(cap + 1).collect()
-            }
-          }
-        val hashTuples: Option[Seq[Map[String, Long]]] =
-          if (keyRows.length > cap) None
-          else {
-            val ts = keyRows.toSeq.map { r =>
-              bCols.zipWithIndex.map { case (c, i) =>
-                val raw = r.get(i)
-                val norm = (tblTypes(c), raw) match {
-                  case (_, null)            => null
-                  case (StringType, v)      => v
-                  case (_, v: java.lang.Number) => Long.box(v.longValue())
-                  case (_, v)               => v
-                }
-                c -> Option(norm).flatMap(bloomProbeHash)
-              }
-            }
-            if (ts.exists(_.exists(_._2.isEmpty))) None
-            else Some(ts.map(_.map { case (c, h) => c -> h.get }.toMap))
-          }
-        hashTuples match {
-          case None => rewrite0
-          case Some(tuples) =>
-            val byPath = entries.map(e => e.filePath -> e).toMap
-            rewrite0.filter { f =>
-              byPath.get(f) match {
-                case Some(e) =>
-                  val fbs = bCols.flatMap(c =>
-                    e.blooms.find(_._1 == pk(c)).map(b => decodeBloom(b._2)))
-                  // a file lacking SOME bloom still tests the ones it
-                  // has; lacking all → keep
-                  val present = bCols.filter(c => e.blooms.exists(_._1 == pk(c)))
-                  if (present.isEmpty) true
-                  else {
-                    val bfByCol = present.zip(fbs).toMap
-                    tuples.exists(t =>
-                      present.forall(c => bfByCol(c).mightContainLong(t(c))))
-                  }
-                case None => true
-              }
-            }
-        }
-      }
     }
     // EXACT refinement (Delta's touched-file job): stats and blooms
     // keep a file whenever its RANGE could contain a key — on a
     // stat-less or unclustered table that is every file, turning a
-    // 50-row correction into a full-table rewrite. When the
-    // conservative set is still large, ONE column-pruned scan of the
-    // candidates' key columns, semi-joined against the distinct
-    // source keys, shrinks it to the files that actually CONTAIN a
-    // matching row. The extra job reads only the key columns of
-    // files that were about to be rewritten full-width. Measured
-    // (ScaleBench merge_statless, 1M rows / 128 stat-less files /
-    // 50 keys): wall-clock is within host noise either way at this
-    // small-file scale (1.51s exact vs 1.73s conservative on one
-    // run, 1.09 vs 0.74 on a quieter one) while REWRITE IO drops
-    // 128 -> 41 files — and that saved IO scales with file WIDTH
-    // (the pre-scan reads one column; the rewrite reads+writes all),
-    // which is the 100 TB justification. Below
-    // `MergeExactFindingMin` candidates the pre-scan can't save
-    // enough to matter.
-    val exactOn = sys.props.get("graft.snapshot.mergeExactFinding")
-      .forall(_.toBoolean)
-    if (!exactOn || refined.size < MergeExactFindingMin) refined
+    // 50-row correction into a full-table rewrite. ONE column-pruned
+    // scan of the candidates' key columns, semi-joined against the
+    // distinct source keys, shrinks the set to the files that actually
+    // CONTAIN a matching row; it reads only the key columns of files
+    // that were about to be rewritten full-width. Measured (ScaleBench
+    // merge_statless, 1M rows / 128 stat-less files / 50 keys):
+    // wall-clock within host noise either way at this small-file scale
+    // (1.51s exact vs 1.73s conservative on one run, 1.09 vs 0.74 on a
+    // quieter one) while REWRITE IO drops 128 -> 41 files, and that
+    // saved IO scales with file WIDTH. Below `MergeExactFindingMin`
+    // candidates the pre-scan can't save enough to matter.
+    if (files.size < MergeExactFindingMin) files.map(_.filePath).toSet
     else {
-      val mf = readManifestFull(spark, path, base)
-      val cand = entries0.filter(e => refined(e.filePath))
       val fcol = "__graft_exact_f"
-      val touched = readGroups(spark, cand, mf.schema, mf.colmap)
+      val touched = readGroups(spark, files, m.schema, m.colmap)
         .select(keyCols.map(col) :+ input_file_name().as(fcol): _*)
-        .join(source.select(keyCols.map(col): _*).distinct(),
-          keyCols.toSeq, "left_semi")
+        .join(keyFrame.distinct(), keyCols.toSeq, "left_semi")
         .select(fcol).distinct()
         .collect().map(r => normInputFile(r.getString(0))).toSet
-      cand.filter(e => touched(normFile(e.filePath))).map(_.filePath).toSet
+      files.filter(e => touched(normFile(e.filePath))).map(_.filePath).toSet
     }
   }
 
@@ -5835,13 +5658,14 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * format-version=2). Unlike [[overwritePartitions]], a late
     * correction to one session rewrites only the FILES that can
     * contain its key, not the whole partition: the manifest's per-file
-    * footer stats prune the rewrite set with a broadcast range join
-    * against the distinct source keys (the source is never collected
-    * to the driver); when the conservative set is still large — files
-    * lacking key stats, or an unclustered key whose every range spans
-    * the space — one column-pruned EXACT scan shrinks it to the files
-    * actually holding a match (see keyRewriteSet). Per-key-column stats are recorded on
-    * the files this merge writes, so successive merges keep pruning.
+    * stats, null counts and blooms prune the rewrite set
+    * ([[keyRewriteSet]]; the driver sees at most `KeyTupleCap + 1`
+    * distinct key tuples of the source, never its rows); when the
+    * conservative set is still large — files lacking key stats, or an
+    * unclustered key whose every range spans the space — one
+    * column-pruned EXACT scan shrinks it to the files actually holding
+    * a match. Per-key-column stats are recorded on the files this
+    * merge writes, so successive merges keep pruning.
     *
     * Preconditions: a target row may be matched by at most ONE source
     * row (the standard MERGE constraint, Delta's "multiple source rows
@@ -5873,7 +5697,13 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     */
   def merge(source: DataFrame, path: String, keyCols: Seq[String],
       partitionCols: Seq[String] = Nil,
-      txn: Option[(String, Long)] = None): Long = {
+      txn: Option[(String, Long)] = None): Long =
+    mergeWithCap(source, path, keyCols, partitionCols, txn, KeyTupleCap)
+
+  /** [[merge]] with [[keyRewriteSet]]'s tier cap as a test seam. */
+  private[lake] def mergeWithCap(source: DataFrame, path: String,
+      keyCols: Seq[String], partitionCols: Seq[String],
+      txn: Option[(String, Long)], cap: Int): Long = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val spark = source.sparkSession
     val rw = rewriteAt(spark, path) match {
@@ -5889,7 +5719,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     rw.refuse("merge source must not contain", source.columns.toSeq,
       rw.generated ++ rw.identity.collect { case (n, true) => n })
     if (rw.replayed(txn)) return rw.base
-    val (rewrite, newData) = mergeFrame(rw, source, keyCols)
+    val (rewrite, newData) = mergeFrame(rw, source, keyCols, cap)
     rw.commit(newData.drop(rw.generated: _*), "merge", rewrite,
       rw.partitionCols(partitionCols), statsFrom = rw.entries, moreStats = keyCols,
       opKeys = keyCols, txn = txn, dupKeys = keyCols)
@@ -5902,8 +5732,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * source rows) fires inside this same pass via raise_error — no
     * separate source pre-scan job. */
   private[lake] def mergeFrame(rw: Rewrite, source: DataFrame,
-      keyCols: Seq[String]): (Seq[Entry], DataFrame) = {
-    val keyFiles = keyRewriteSet(rw.spark, rw.path, rw.base, rw.entries, source, keyCols)
+      keyCols: Seq[String], cap: Int = KeyTupleCap): (Seq[Entry], DataFrame) = {
+    val keyFiles = keyRewriteSet(rw, source, keyCols, cap)
     val touched = rw.entries.filter(e => keyFiles(e.filePath))
     if (touched.isEmpty) return (Nil, source)
     val current = rw.readFiles(touched)
@@ -5952,8 +5782,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * rewrites only the files where some clause condition COULD hold
     * (the same stats-pruned file finding DELETE uses; an
     * unconditional clause rewrites every file, as it must). The
-    * source is never collected to the driver; matching is one
-    * shuffle/broadcast join per pass.
+    * driver sees at most `KeyTupleCap + 1` distinct key tuples of the
+    * source, never its rows; matching is one shuffle/broadcast join
+    * per pass.
     *
     * Row semantics: a target row matched by more than one source row
     * raises the standard MERGE ambiguity error whenever a matched
@@ -6096,11 +5927,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
 
   /** [[mergeClauses]] after its source guard and schema evolution,
     * committed as `op`; only op `merge` records its key columns. */
-  private def clauseMerge(source: DataFrame, path: String, keyCols: Seq[String],
+  private[lake] def clauseMerge(source: DataFrame, path: String, keyCols: Seq[String],
       matched: Seq[MergeMatchedClause], notMatched: Seq[MergeInsert],
       notMatchedBySource: Seq[MergeMatchedClause],
       targetAlias: String, sourceAlias: String, partitionCols: Seq[String],
-      txn: Option[(String, Long)], op: String): Long = {
+      txn: Option[(String, Long)], op: String, cap: Int = KeyTupleCap): Long = {
     val spark = source.sparkSession
     val rw = openRewrite(spark, path)
     if (rw.replayed(txn)) return rw.base
@@ -6117,7 +5948,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // condition could hold (always rewritten)
     val keyFiles: Set[String] =
       if (matchedX.nonEmpty || insertX.nonEmpty)
-        keyRewriteSet(spark, path, rw.base, entries, source, keyCols)
+        keyRewriteSet(rw, source, keyCols, cap)
       else Set.empty
     val nmbsFiles: Set[String] =
       if (nmbsX.isEmpty) Set.empty
@@ -6304,8 +6135,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * that clause merge: every target row whose `keyCols` tuple appears
     * in `source` is removed. Unlike [[delete]]'s predicate form, the
     * match set is a DataFrame, so a MILLION-key delete wave never
-    * touches the driver: the rewrite set comes from the same
-    * manifest-stats + bloom pruning as [[merge]] ([[keyRewriteSet]]),
+    * reaches the driver (it sees at most `KeyTupleCap + 1` distinct
+    * key tuples): the rewrite set comes from the same manifest-stats,
+    * null-count and bloom pruning as [[merge]] ([[keyRewriteSet]]),
     * survivors come from joining only the touched files with the
     * distinct source keys, and untouched files carry over by
     * reference. Duplicate source keys are harmless; NULL key

@@ -377,7 +377,10 @@ object Similarity {
     val dq = graft.functions.VectorFunctions.dot_product_i8(a, b).cast("double")
     val na = graft.functions.VectorFunctions.dot_product_i8(a, a).cast("double")
     val nb = graft.functions.VectorFunctions.dot_product_i8(b, b).cast("double")
-    dq / (sqrt(na) * sqrt(nb))
+    // a zero vector has no direction: NaN, as float `cosine` gives,
+    // where ANSI division would raise DIVIDE_BY_ZERO
+    val norms = sqrt(na) * sqrt(nb)
+    when(norms === 0.0, lit(Double.NaN)).otherwise(dq / norms)
   }
 
   /** Quantized-ANN accuracy gate: brute-force top-10 per query over

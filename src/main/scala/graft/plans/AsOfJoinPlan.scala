@@ -147,9 +147,9 @@ final case class AsOfJoinExec(
   }
 }
 
-/** User-facing API. Registers the planner strategy on first use via
-  * the public experimental-strategies hook (also injectable through
-  * GraftExtensions for config-driven sessions). */
+/** User-facing API. `AsOfJoin` nodes come only from [[AsOf.join]],
+  * which registers the planner strategy on first use via the public
+  * experimental-strategies hook, once per session. */
 object AsOf {
 
   def ensureRegistered(spark: SparkSession): Unit = {

@@ -133,15 +133,14 @@ class BloomSkippingSpec extends SparkTestBase {
 
   test("merge beyond the probe cap skips bloom refinement but stays correct") {
     val path = Files.createTempDirectory("graft-bloom5").toString + "/t"
-    buildTable(path, 300, 3)
-    System.setProperty("graft.snapshot.mergeBloomProbeCap", "10")
-    try {
-      val src = (0 until 50).map(i => (key(i), i + 5000L)).toDF("id", "v")
-      SnapshotTable.merge(src.coalesce(1), path, Seq("id"))
-      val got = SnapshotTable.read(spark, path)
-      assert(got.count() === 300)
-      assert(got.filter(col("id") === key(13)).select("v").as[Long].head() === 5013L)
-    } finally { System.clearProperty("graft.snapshot.mergeBloomProbeCap"); () }
+    buildTable(path, 1100, 3)
+    // more distinct keys than the finder's driver tier tests
+    val n = SnapshotTable.KeyTupleCap + 26
+    val src = (0 until n).map(i => (key(i), i + 5000L)).toDF("id", "v")
+    SnapshotTable.merge(src.coalesce(1), path, Seq("id"))
+    val got = SnapshotTable.read(spark, path)
+    assert(got.count() === 1100)
+    assert(got.filter(col("id") === key(13)).select("v").as[Long].head() === 5013L)
   }
 
   test("blooms round-trip the manifest codec and the delta log") {

@@ -5,42 +5,37 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** A/B equivalence contract for the merge literal-source fast path
-  * (keyRewriteSet's driver-side range check + bloom probe over a
-  * bounded LocalRelation): the SAME merge driven once with the fast
-  * path enabled (default `graft.snapshot.mergeLocalKeysCap`) and once
-  * forced down the distributed range-join path (cap = 0) must produce
-  * the identical final table (multiset) AND the identical rewrite set
-  * (same number of files replaced by the merge commit). The fast path
-  * re-implements pruning semantics in driver code, so this spec is
-  * what keeps it from becoming a second semantics — including the
-  * r20-advice divergence shapes: NULL key components, cross-TYPED
-  * sources (Int values for a string key and vice versa — the join
-  * path casts and still matches; the driver loop must fall back, not
-  * drop the tuple), NaN keys, decimal keys, and sources past the cap.
+/** A/B contract for the two tiers of the key file finder
+  * ([[SnapshotTable.keyRewriteSet]]): the SAME merge or deleteKeys
+  * driven once at the default cap (the driver tier, which binds the
+  * analyzed join condition to each key tuple and compiles it with
+  * readWhere's skip compiler) and once with the cap at 0 (the
+  * range-join tier) must produce the identical final table (multiset)
+  * and, where both tiers see the same stats, the identical rewrite set
+  * (same number of files replaced by the commit). The shapes are the
+  * ones a driver-side copy of the pruning rules once got wrong: NULL
+  * key components, cross-TYPED sources (Int values for a string key
+  * and vice versa — the join casts and still matches, so no tier may
+  * drop the tuple), NaN keys, decimal keys, sources past the cap and
+  * case-ambiguous source columns.
   */
 class MergeLocalKeysSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val capKey = "graft.snapshot.mergeLocalKeysCap"
+  private val Default = SnapshotTable.KeyTupleCap
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-mlk").toString + "/t"
 
   /** (final rows as sorted Seq, files removed by the merge commit). */
   private def runMerge(build: String => Unit, source: DataFrame,
-      keys: Seq[String], cap: Option[String]): (Seq[String], Int) = {
+      keys: Seq[String], cap: Int): (Seq[String], Int) = {
     val path = tmp()
     build(path)
     val before = SnapshotTable.latestVersion(spark, path).get
     val prevFiles = SnapshotTable.readManifest(spark, path, before)
       .map(_.filePath).toSet
-    cap match {
-      case Some(v) => System.setProperty(capKey, v)
-      case None => System.clearProperty(capKey)
-    }
-    try SnapshotTable.merge(source, path, keys)
-    finally { System.clearProperty(capKey); () }
+    SnapshotTable.mergeWithCap(source, path, keys, Nil, None, cap)
     val after = SnapshotTable.latestVersion(spark, path).get
     val curFiles = SnapshotTable.readManifest(spark, path, after)
       .map(_.filePath).toSet
@@ -51,12 +46,12 @@ class MergeLocalKeysSpec extends SparkTestBase {
 
   private def check(build: String => Unit, source: DataFrame,
       keys: Seq[String]): Unit = {
-    val (fastRows, fastRewrites) = runMerge(build, source, keys, None)
-    val (distRows, distRewrites) = runMerge(build, source, keys, Some("0"))
+    val (fastRows, fastRewrites) = runMerge(build, source, keys, Default)
+    val (distRows, distRewrites) = runMerge(build, source, keys, 0)
     assert(fastRows === distRows,
-      "fast-path merge result diverged from the distributed path")
+      "driver-tier merge result diverged from the range-join tier")
     assert(fastRewrites === distRewrites,
-      "fast-path rewrite set size diverged from the distributed path")
+      "driver-tier rewrite set size diverged from the range-join tier")
   }
 
   /** 3 files of 4 rows each on a long key with clustered ranges,
@@ -91,18 +86,17 @@ class MergeLocalKeysSpec extends SparkTestBase {
 
   /** deleteKeys shares keyRewriteSet but never appends the source, so
     * (unlike merge, whose commit drift-gates a cross-typed source
-    * loudly) it is the path where a driver-side tuple DROP would turn
-    * into a silent lost delete. */
+    * loudly) it is the path where a wrongly pruned file would turn
+    * into a silent lost delete. Runs deleteKeys' clause merge. */
   private def runDeleteKeys(build: String => Unit, source: DataFrame,
-      keys: Seq[String], cap: Option[String]): (Seq[String], Int) = {
+      keys: Seq[String], cap: Int): (Seq[String], Int) = {
     val path = tmp()
     build(path)
     val before = SnapshotTable.latestVersion(spark, path).get
     val prevFiles = SnapshotTable.readManifest(spark, path, before)
       .map(_.filePath).toSet
-    cap.foreach(System.setProperty(capKey, _))
-    try SnapshotTable.deleteKeys(source, path, keys)
-    finally { System.clearProperty(capKey); () }
+    SnapshotTable.clauseMerge(source, path, keys, Seq(MergeDelete()), Nil, Nil,
+      "t", "s", Nil, None, "delete_keys", cap)
     val after = SnapshotTable.latestVersion(spark, path).get
     val curFiles = SnapshotTable.readManifest(spark, path, after)
       .map(_.filePath).toSet
@@ -113,34 +107,40 @@ class MergeLocalKeysSpec extends SparkTestBase {
 
   test("cross-typed deleteKeys (Int values for a STRING key column) " +
       "falls back and still deletes — the r20-advice lost-update shape") {
+    // file 3 holds "0100".."0103": bounds ["0100","0103"] exclude the
+    // string "101", yet "0101" equals 101 as a number
     def build(path: String): Unit =
-      (0 until 3).foreach { f =>
-        SnapshotTable.merge(
-          (0 until 4).map(i => (s"${f * 100 + i}", s"v$f-$i"))
+      Seq((0 until 4).map(i => s"$i"), (100 until 104).map(i => s"$i"),
+          (200 until 204).map(i => s"$i"), (100 until 104).map(i => s"0$i"))
+        .zipWithIndex.foreach { case (ks, f) =>
+          SnapshotTable.merge(ks.zipWithIndex.map { case (k, i) => (k, s"v$f-$i") }
             .toDF("k", "s").coalesce(1), path, Seq("k"))
-      }
-    // source key is an INT; the anti-join coerces "101" = 101 and the
-    // matching file must be rewritten without its row — dropping the
-    // tuple driver-side would silently keep the row
+        }
+    // source key is an INT; the anti-join compares the string key as
+    // a number, so "101" and "0101" both equal 101 — a file pruned by
+    // the string bounds of "101" would silently keep its row
     val src = Seq(Tuple1(101)).toDF("k")
-    val (fastRows, fastRw) = runDeleteKeys(build, src, Seq("k"), None)
-    val (distRows, distRw) = runDeleteKeys(build, src, Seq("k"), Some("0"))
+    val (fastRows, fastRw) = runDeleteKeys(build, src, Seq("k"), Default)
+    val (distRows, distRw) = runDeleteKeys(build, src, Seq("k"), 0)
     assert(fastRows === distRows && fastRw === distRw)
     assert(!fastRows.exists(_.contains("v1-1")), "matched row must be gone")
-    // the join casts the INT source to STRING, and under string bounds
-    // "101" also falls inside file0's ["0","3"] — both paths must make
-    // that same (conservative) call, rewriting 2 files, not drop to 0
-    assert(fastRw === 2, "the string-range candidates must be rewritten")
+    assert(!fastRows.exists(_.contains("v3-1")), "\"0101\" equals 101 and must be gone")
+    // the string key is compared through a cast, so its string bounds
+    // say nothing about the match: every file is a candidate
+    assert(fastRw === 4, "every file must be a candidate")
   }
 
   test("cross-typed deleteKeys (String values for a LONG key column) " +
       "falls back and still deletes") {
     val src = Seq(Tuple1("101")).toDF("k")
-    val (fastRows, fastRw) = runDeleteKeys(buildLongTable, src, Seq("k"), None)
-    val (distRows, distRw) =
-      runDeleteKeys(buildLongTable, src, Seq("k"), Some("0"))
-    assert(fastRows === distRows && fastRw === distRw)
+    val (fastRows, fastRw) = runDeleteKeys(buildLongTable, src, Seq("k"), Default)
+    val (distRows, distRw) = runDeleteKeys(buildLongTable, src, Seq("k"), 0)
+    assert(fastRows === distRows)
     assert(!fastRows.exists(_.contains("v1-1")), "matched row must be gone")
+    // the analyzed condition casts the string literal to the LONG key,
+    // so the driver tier prunes by its bounds; the range-join tier
+    // takes no range from a cross-typed column and keeps all 3 files
+    assert((fastRw, distRw) === (1, 3))
   }
 
   test("NaN double keys fall back to the distributed path's NaN " +
@@ -174,27 +174,21 @@ class MergeLocalKeysSpec extends SparkTestBase {
       }
     check(build, Seq((1L, "s2", 99), (7L, "s0", 1)).toDF("a", "b", "n"),
       Seq("a", "b"))
-    // 9 distinct tuples with the cap forced to 4: localKeyTuples must
-    // refuse and the distributed path run — same result either way
+    // 9 distinct tuples with the cap at 4: past the cap the range-join
+    // tier runs — same result as with the cap at 0
     val big = (0 until 9).map(i => (i.toLong, s"s${i % 4}", 1000 + i))
       .toDF("a", "b", "n")
-    val (fastRows, _) = {
-      System.setProperty(capKey, "4")
-      try runMerge(build, big, Seq("a", "b"), Some("4"))
-      finally System.clearProperty(capKey)
-    }
-    val (distRows, _) = runMerge(build, big, Seq("a", "b"), Some("0"))
+    val (fastRows, _) = runMerge(build, big, Seq("a", "b"), 4)
+    val (distRows, _) = runMerge(build, big, Seq("a", "b"), 0)
     assert(fastRows === distRows)
   }
 
-  // ---- one-collect fast path for NON-literal sources --------------
-  // keyRewriteSet collects a bounded derived source's distinct key
-  // tuples ONCE and runs the range check + bloom probe as driver
-  // loops — only when the table blooms every stat key column (so the
-  // collect replaces the bloom probe's own collect; otherwise the
-  // distributed path runs unchanged). Same A/B contract as the
-  // literal path, driven by sources whose plan is NOT a
-  // LocalRelation (parquet round-trip).
+  // ---- derived (non-literal) sources ------------------------------
+  // A derived source pays one bounded collect of its distinct key
+  // tuples, and only on a table whose key carries a bloom — the collect
+  // a bloom probe needs anyway; otherwise it takes the range-join tier.
+  // Same A/B contract as the literal path, driven by sources whose
+  // plan is NOT a LocalRelation (parquet round-trip).
 
   /** Long-key table with blooms on k, seeded via merge so every file
     * records k stats AND a k bloom. */
@@ -227,29 +221,25 @@ class MergeLocalKeysSpec extends SparkTestBase {
     check(buildBloomedLongTable,
       derived(Seq((Some(2L), "upd"), (None, "nullkey")).toDF("k", "s")),
       Seq("k"))
-    // 9 distinct keys with the cap forced to 4: the collected rows
-    // exceed the cap, the range check must fall back to the
-    // distributed join (and bloom refinement skip) — same outcome
+    // 9 distinct keys with the cap at 4: the collected rows exceed the
+    // cap and the range-join tier runs — same outcome as cap 0
     val big = derived((0 until 9).map(i => (i * 50L, s"u$i")).toDF("k", "s"))
-    val (fastRows, fastRw) = runMerge(buildBloomedLongTable, big,
-      Seq("k"), Some("4"))
-    val (distRows, distRw) = runMerge(buildBloomedLongTable, big,
-      Seq("k"), Some("0"))
+    val (fastRows, fastRw) = runMerge(buildBloomedLongTable, big, Seq("k"), 4)
+    val (distRows, distRw) = runMerge(buildBloomedLongTable, big, Seq("k"), 0)
     assert(fastRows === distRows && fastRw === distRw)
   }
 
   test("cross-typed derived source (String values for a LONG bloomed " +
       "key) falls back and still updates") {
-    // k bloom exists but the source k is STRING: sameDomain refuses
-    // the bloom column, the one-collect gate (bCols == statCols)
-    // fails, and the whole decision takes the distributed cast-join —
-    // the row must still be updated, never silently kept
+    // the source k is STRING: the analyzed condition casts it to the
+    // LONG key, so the driver tier probes bounds and bloom with 101L;
+    // the range-join tier takes no range from a cross-typed column and
+    // keeps all 3 files — the row must be updated either way
     val src = derived(Seq(("101", "upd")).toDF("k", "s"))
-    val (fastRows, fastRw) =
-      runMerge(buildBloomedLongTable, src, Seq("k"), None)
-    val (distRows, distRw) =
-      runMerge(buildBloomedLongTable, src, Seq("k"), Some("0"))
-    assert(fastRows === distRows && fastRw === distRw)
+    val (fastRows, fastRw) = runMerge(buildBloomedLongTable, src, Seq("k"), Default)
+    val (distRows, distRw) = runMerge(buildBloomedLongTable, src, Seq("k"), 0)
+    assert(fastRows === distRows)
+    assert((fastRw, distRw) === (1, 3))
     assert(fastRows.exists(_.contains("upd")), "matched row must be updated")
   }
 
@@ -262,41 +252,45 @@ class MergeLocalKeysSpec extends SparkTestBase {
         jobs.incrementAndGet(); ()
       }
     }
-    def countJobs(cap: Option[String]): Int = {
-      val path = tmp()
-      buildBloomedLongTable(path)
-      val src = derived(Seq((101L, "upd")).toDF("k", "s"))
+    def countJobs(run: => Unit): Int = {
       jobs.set(0)
       spark.sparkContext.addSparkListener(listener)
-      cap.foreach(System.setProperty(capKey, _))
-      try SnapshotTable.merge(src, path, Seq("k"))
+      try run
       finally {
-        System.clearProperty(capKey)
         // listener events post asynchronously — let the bus drain
         Thread.sleep(1000)
         spark.sparkContext.removeSparkListener(listener)
       }
       jobs.get()
     }
-    val fast = countJobs(None)
-    val dist = countJobs(Some("0"))
-    assert(fast < dist,
-      s"one-collect path should launch fewer jobs ($fast vs $dist)")
+    val path = tmp()
+    buildBloomedLongTable(path)
+    val rw = SnapshotTable.rewriteAt(spark, path).get
+    val src = derived(Seq((101L, "upd")).toDF("k", "s"))
+    // the finder's one collect is all it runs: no range join, no
+    // second probe; a literal source runs no job at all
+    val collect = countJobs(src.select("k").distinct().limit(Default + 1).collect())
+    var found = Set.empty[String]
+    val finder = countJobs { found = SnapshotTable.keyRewriteSet(rw, src, Seq("k")) }
+    assert(finder === collect, s"finder ran $finder jobs, its collect $collect")
+    assert(found.size === 1)
+    val literal = countJobs {
+      found = SnapshotTable.keyRewriteSet(rw, Seq((101L, "upd")).toDF("k", "s"), Seq("k"))
+    }
+    assert(literal === 0 && found.size === 1)
   }
 
   test("duplicate-cased source columns refuse the driver binding " +
       "(ambiguous) without changing the merge outcome") {
-    // a local source with both `k` and `K` — localKeyTuples must not
-    // bind "first case-insensitive match wins"; Spark's resolver
-    // rejects the ambiguous reference, so BOTH paths must throw
+    // a local source with both `k` and `K` — the finder binds the key
+    // through Spark's resolver, which rejects the ambiguous reference,
+    // so BOTH tiers must throw
     val src = Seq((101L, 101L, "x")).toDF("k", "K", "s")
-    def run(cap: Option[String]): Throwable = {
+    def run(cap: Int): Throwable = {
       val path = tmp()
       buildLongTable(path)
-      cap.foreach(System.setProperty(capKey, _))
-      try intercept[Throwable](SnapshotTable.merge(src, path, Seq("k")))
-      finally { System.clearProperty(capKey); () }
+      intercept[Throwable](SnapshotTable.mergeWithCap(src, path, Seq("k"), Nil, None, cap))
     }
-    assert(run(None).getClass === run(Some("0")).getClass)
+    assert(run(Default).getClass === run(0).getClass)
   }
 }

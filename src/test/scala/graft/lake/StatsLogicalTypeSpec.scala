@@ -73,6 +73,20 @@ class StatsLogicalTypeSpec extends SparkTestBase {
     assert(es.exists(_.stats.exists(_._1 == "d")), "double key lost its bounds")
   }
 
+  test("a double chunk holding NaN records no bound; reads and merges still find its rows") {
+    // parquet writes no min/max for such a chunk, and its statistics
+    // then report 0.0 for both: recorded as a bound, [0, 0] would skip
+    // the file for every other key it holds
+    val path = Files.createTempDirectory("graft-stats-nan").toString + "/t"
+    SnapshotTable.merge(Seq((60.0, "a"), (Double.NaN, "n")).toDF("d", "s").coalesce(1),
+      path, Seq("d"))
+    assert(entryBoundsFor(path, "d") === ((false, false)))
+    assert(SnapshotTable.readWhere(spark, path, col("d") === 60.0).count() === 1)
+    SnapshotTable.merge(Seq((60.0, "upd")).toDF("d", "s"), path, Seq("d"))
+    assert(SnapshotTable.read(spark, path).filter(col("d") === 60.0)
+      .select("s").as[String].collect().toSeq === Seq("upd"))
+  }
+
   test("vacuum checkpoint materialization leaves no tmp files and is visible without a cache clear") {
     val path = Files.createTempDirectory("graft-vac-atomic").toString + "/t"
     (1 to 6).foreach { i =>

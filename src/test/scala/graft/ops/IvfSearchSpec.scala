@@ -85,9 +85,8 @@ class IvfSearchSpec extends SparkTestBase {
 
   /** A clustered corpus of 400 rows in four parquet files, plus 12
     * exact copies of row 0 (a tie group straddling the k = 10 cut),
-    * three copies each of rows 1–19, and three zero vectors unless
-    * `zeros` is off. */
-  private def corpus(seed: Long, zeros: Boolean = true): DataFrame = {
+    * three copies each of rows 1–19, and three zero vectors. */
+  private def corpus(seed: Long): DataFrame = {
     val rnd = new scala.util.Random(seed)
     val centers = Array.fill(6)(Array.fill(dim)(rnd.nextGaussian() * 3))
     val base = (0L until 400L).map { id =>
@@ -96,7 +95,7 @@ class IvfSearchSpec extends SparkTestBase {
     }
     val copies = (1L to 12L).map(i => (1000L + i) -> base(0)._2) ++
       (1 until 20).flatMap(j => (1L to 3L).map(i => (2000L + 10L * j + i) -> base(j)._2))
-    val zero = if (zeros) Seq(3000L, 3001L, 3002L).map(_ -> Array.fill(dim)(0f)) else Nil
+    val zero = Seq(3000L, 3001L, 3002L).map(_ -> Array.fill(dim)(0f))
     val path = Files.createTempDirectory("graft-ivf-search").toString + "/emb"
     (base ++ copies ++ zero).toDF("vec_id", "embedding")
       .repartition(4).write.parquet(path)
@@ -129,14 +128,13 @@ class IvfSearchSpec extends SparkTestBase {
   }
 
   test("one-pass quantized search returns the join form's rows") {
-    // no zero vectors: quantized cosine divides by a zero norm, which
-    // ANSI mode raises in both forms
-    val emb = corpus(13L, zeros = false)
+    val emb = corpus(13L)
     val model = Ivf.train(emb, k = 8, iters = 5, sampleSize = 500)
-    val qids = queryIds.filter(_ != 3000L)
     Seq(1, 10, 5000).foreach { k =>
-      assert(rowsOf(Ivf.searchQuantized(emb, model, qids, k, nProbe = 3)) ===
-        rowsOf(refSearchQuantized(emb, model, qids, k, nProbe = 3)), s"k $k")
+      val got = rowsOf(Ivf.searchQuantized(emb, model, queryIds, k, nProbe = 3))
+      assert(got === rowsOf(refSearchQuantized(emb, model, queryIds, k, nProbe = 3)), s"k $k")
+      // the zero query ranks its NaN-scored rows, as the float search does
+      assert(got.exists(_._1 == 3000L), s"k $k")
     }
   }
 

@@ -72,4 +72,34 @@ class AsOfJoinSpec extends SparkTestBase {
     val out = AsOf.join(l, r, "k", "lt", "rt").select("rtag").head()
     assert(out.getString(0) === "x")
   }
+
+  test("a session with the extensions plans as-of joins through one registered strategy") {
+    // a genuinely new session: getOrCreate would return the shared one
+    val prevDefault = org.apache.spark.sql.SparkSession.getDefaultSession
+    val prevActive = org.apache.spark.sql.SparkSession.getActiveSession
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val s2 = org.apache.spark.sql.SparkSession.builder()
+        .master("local[2]")
+        .appName("asof-ext-test")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.session.timeZone", "UTC")
+        .withExtensions(new graft.functions.GraftExtensions)
+        .getOrCreate()
+      import s2.implicits._
+      val l = Seq((1L, 60L, "a")).toDF("k", "t", "tag")
+        .select(col("k"), timestamp_seconds(col("t")).as("lt"), col("tag"))
+      val r = Seq((1L, 50L, "x")).toDF("k", "t", "rtag")
+        .select(col("k"), timestamp_seconds(col("t")).as("rt"), col("rtag"))
+      Seq(1, 2).foreach { _ =>
+        assert(AsOf.join(l, r, "k", "lt", "rt").select("rtag").head().getString(0) === "x")
+      }
+      val n = s2.sessionState.planner.strategies.count(_ == AsOfJoinStrategy)
+      assert(n === 1, s"AsOfJoinStrategy registered $n times")
+    } finally {
+      prevDefault.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
+      prevActive.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
+    }
+  }
 }
