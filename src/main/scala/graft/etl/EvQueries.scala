@@ -2682,8 +2682,9 @@ object EvQueries {
        |ORDER BY _row_id, _change_type""".stripMargin
 
   /** STREAMING SINK × IDENTITY (ev gate): `writeStream` into a table
-    * declaring `sid BIGINT GENERATED ALWAYS AS IDENTITY` — the epoch
-    * enrichment must assign values exactly like a batch append would
+    * declaring `sid BIGINT GENERATED ALWAYS AS IDENTITY` — the epoch's
+    * commit runs the batch write funnel, so it assigns values exactly
+    * like a batch append would
     * (`high + step * ordinal` per epoch, watermark bumped atomically
     * with the epoch's manifest). Two source commits drain as two
     * rate-limited epochs in commit order, so the assignment is

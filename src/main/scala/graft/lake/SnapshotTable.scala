@@ -1218,70 +1218,142 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * stats column): bounds manifest growth on wide tables. */
   private val NullStatsMaxCols = 32
 
-  /** Manifest entries for a freshly written commit dir. Footer reads
-    * (row count + per-column min/max) are driver-side metadata IO
-    * (the table-format norm), but SEQUENTIAL opens would bottleneck a
-    * many-file commit — one open per file, on a bounded pool. */
-  private def commitEntries(spark: SparkSession, commitDir: String,
-      statsCols: Seq[String]): Seq[Entry] = {
+  /** Footer reads of every commit share one pool of at most 16 daemon
+    * threads, created on first use: a commit pays no pool start-up,
+    * and an idle pool keeps no JVM alive. */
+  private lazy val footerPool: scala.concurrent.ExecutionContext = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    scala.concurrent.ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(16, (r: Runnable) => {
+        val t = new Thread(r, s"graft-footer-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }))
+  }
+
+  /** Manifest entries for a freshly written commit dir, each with the
+    * footer metadata it was read from. Footer reads (row count +
+    * per-column min/max) are driver-side metadata IO (the table-format
+    * norm), but SEQUENTIAL opens would bottleneck a many-file commit —
+    * one open per file, on [[footerPool]]. */
+  private def commitFooters(spark: SparkSession, commitDir: String,
+      statsCols: Seq[String])
+      : Seq[(Entry, org.apache.parquet.hadoop.metadata.FileMetaData)] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: scala.concurrent.ExecutionContext = footerPool
     // sorted: FileSystem listing order is not a contract, and entry
     // order is semantic under row tracking (bases assign in entry
     // order) — lexicographic part-file order equals the writer's
     // partition index order, so a clustered/sorted write gets row
     // ids monotone in its sort key, deterministically
     val files = listParquet(fs(spark, commitDir), new Path(commitDir)).sorted
-    if (files.isEmpty) Nil
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, files.size))
-      implicit val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      try Await.result(
-        Future.traverse(files)(f => Future(
-          withPartitionStats(footerEntry(spark, commitDir, f, statsCols)))),
-        Duration.Inf)
-      finally { pool.shutdown(); () }
-    }
+    Await.result(Future.traverse(files)(f => Future {
+      val (e, meta) = footerEntry(spark, commitDir, f, statsCols)
+      (withPartitionStats(e), meta)
+    }), Duration.Inf)
   }
 
-  /** Optimistic-concurrency commit: the data files are written ONCE
-    * to a unique dir, then the manifest is advanced with a
-    * rename-as-CAS loop — a writer that loses the race re-reads the
-    * winner's manifest, re-applies its own carryOver, and retries with
-    * the next version number. No lock service needed; contention costs
-    * one manifest rewrite per retry, never a data rewrite. A crashed
-    * attempt (data written, manifest never committed) leaves an orphan
-    * dir that no manifest references.
-    */
-  /** `txn`: Delta's idempotent-write shape (`txnAppId`/`txnVersion`)
-    * for foreachBatch writers — when the latest manifest already
-    * records `appId -> version' >= version`, the commit is a REPLAY
-    * and returns the current version without applying (checked before
-    * the data write, and re-checked inside the CAS loop with orphan
-    * cleanup); otherwise the watermark publishes atomically with the
-    * commit, so a crash can never double-apply an epoch. */
-  private def commit(df: DataFrame, path: String, partitionCols: Seq[String],
-      carryOver: Seq[Entry] => Seq[Entry], maxAttempts: Int = 20,
-      statsCols: Seq[String] = Nil, op: String = "append",
+  private def commitEntries(spark: SparkSession, commitDir: String,
+      statsCols: Seq[String]): Seq[Entry] =
+    commitFooters(spark, commitDir, statsCols).map(_._1)
+
+  /** Files a writer already put on disk, for [[commit]] to publish:
+    * the entries it reported (footer row counts at least; no footer is
+    * re-opened), the LOGICAL schema of their rows and the
+    * logical→physical column mapping they were written under. */
+  private case class Written(spark: SparkSession, entries: Seq[Entry],
+      schema: StructType, colmap: Map[String, String])
+
+  /** What [[commit]] did: published `version`, or found its `txn`
+    * already applied (`replay`) with the table at `version`. */
+  private case class Committed(version: Long, replay: Boolean)
+
+  /** The write funnel a commit's rows went through (identity values,
+    * generated columns) changed before its CAS: a concurrent writer
+    * assigned identity values or evolved those columns, so the written
+    * values are stale. Nothing was published; re-running the commit
+    * from its source rows derives them afresh. */
+  final class WriteFunnelChanged(msg: String) extends IllegalArgumentException(msg)
+
+  /** The CAS retry policy of every manifest publish: run `attempt`
+    * until it yields a result, sleeping 10–60 ms between losses, and
+    * give up after `maxAttempts`. */
+  private def casRetry[A](path: String, maxAttempts: Int = 20)(attempt: => Option[A]): A = {
+    var n = 0
+    while (n < maxAttempts) {
+      val r = attempt
+      if (r.isDefined) return r.get
+      n += 1
+      Thread.sleep(scala.util.Random.nextInt(50).toLong + 10)
+    }
+    throw new ConcurrentCommitException(path, maxAttempts)
+  }
+
+  /** Row-id bases for `entries` from the watermark `high`, in entry
+    * order (base + footer rows); `keepAssigned` leaves entries that
+    * already carry a base alone. An entry without a footer row count
+    * fails with `noRows(entry)`. Returns the entries and the advanced
+    * watermark. */
+  private def assignRowIds(entries: Seq[Entry], high: Long,
+      keepAssigned: Boolean = false)(noRows: Entry => String): (Seq[Entry], Long) = {
+    var b = high
+    (entries.map { e =>
+      if (keepAssigned && e.rid.isDefined) e
+      else {
+        require(e.rows >= 0L, noRows(e))
+        val x = e.copy(rid = Some(b))
+        b += e.rows
+        x
+      }
+    }, b)
+  }
+
+  /** Reads `paths` as logical rows of `schema`, stored under `colmap`. */
+  private def readLogical(spark: SparkSession, paths: Seq[String],
+      schema: StructType, colmap: Map[String, String]): DataFrame =
+    toLogical(spark.read.schema(physicalSchema(schema, colmap)).parquet(paths: _*),
+      schema, colmap)
+
+  /** Optimistic-concurrency commit, the one publish loop of every data
+    * write: the data files are written ONCE to a unique dir, then the
+    * manifest is advanced with a rename-as-CAS loop — a writer that
+    * loses the race re-reads the winner's manifest, re-applies its own
+    * carryOver, and retries with the next version number. No lock
+    * service needed; contention costs one manifest rewrite per retry,
+    * never a data rewrite. A crashed attempt (data written, manifest
+    * never committed) leaves an orphan dir that no manifest references.
+    *
+    * The input is a frame to write, or files already written
+    * ([[Written]]: the streaming sink's epoch, [[appendBatch]]'s shared
+    * job). Written files publish as given when the table's write
+    * funnel is trivial (no identity or generated columns, no partition
+    * transforms); otherwise they are read back as logical rows and
+    * written through the funnel like a frame, and their own dirs are
+    * dropped once the rewrite publishes.
+    *
+    * `txn`: Delta's idempotent-write shape (`txnAppId`/`txnVersion`)
+    * for foreachBatch writers and the streaming sink — when the latest
+    * manifest already records `appId -> version' >= version`, the
+    * commit is a REPLAY: nothing is applied and the result says so
+    * (checked before the data write, and re-checked inside the CAS
+    * loop with cleanup of this commit's own files); otherwise the
+    * watermark publishes atomically with the commit, so a crash can
+    * never double-apply an epoch. */
+  private def commit(input: Either[DataFrame, Written], path: String,
+      partitionCols: Seq[String], carryOver: Seq[Entry] => Seq[Entry],
+      maxAttempts: Int = 20, statsCols: Seq[String] = Nil, op: String = "append",
       newTransforms: Seq[PartitionTransform] = Nil,
       opKeys: Seq[String] = Nil, ridCarried: Boolean = false,
       txn: Option[(String, Long)] = None,
       clusterTag: Option[String] = None,
-      newClusterCols: Seq[String] = Nil,
-      preWritten: Option[String] = None): Long = {
-    val spark = df.sparkSession
+      newClusterCols: Seq[String] = Nil): Committed = {
+    val spark = input.fold(_.sparkSession, _.spark)
+    val inCols = input.fold(_.columns.toSeq, _.schema.fieldNames.toSeq)
     // `__rid` is the row-tracking physical column: only the internal
     // rewrite paths may pass it (ridCarried), never user data
-    require(ridCarried || !df.columns.contains(RidCol),
+    require(ridCarried || !inCols.contains(RidCol),
       s"column name '$RidCol' is reserved for row tracking")
-    val commitDir = preWritten.getOrElse(
-      s"${realPathOf(path)}/data/c-${java.util.UUID.randomUUID.toString.take(12)}")
-    // CHECK constraints ride the write job as a guard projection (no
-    // extra pass): a violating row fails the write before anything
-    // can publish. Read once here; the CAS loop re-checks for
-    // constraints added concurrently and validates the written files
-    // on that (rare) path.
     val prevMeta: Option[Manifest] = latestVersion(spark, path)
       .map(v => readManifestFull(spark, path, v))
     // writer-features gate BEFORE any data write (backstop in publish)
@@ -1289,7 +1361,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // replay short-circuit BEFORE any data writes (see `txn` doc)
     txn.foreach { case (app, ver) =>
       if (prevMeta.exists(_.txns.get(app).exists(_ >= ver)))
-        return latestVersion(spark, path).getOrElse(0L)
+        return Committed(latestVersion(spark, path).getOrElse(0L), replay = true)
     }
     // a first commit CREATES a table — but never a branch: a write
     // through a stale handle after dropBranch (or a typo'd branch
@@ -1299,6 +1371,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       s"no branch '${branchOf(path).get}' at ${realPathOf(path)} — " +
         "createBranch first; a write through a dropped or unknown " +
         "branch handle does not re-create the branch")
+    // CHECK constraints ride a frame's write job as a guard projection
+    // (no extra pass): a violating row fails the write before anything
+    // can publish. Constraints the write did not guard — all of them
+    // for files written elsewhere, those added concurrently for a
+    // frame — are checked on the written files inside the CAS loop.
     val guardedCs: Map[String, String] =
       prevMeta.map(_.constraints).getOrElse(Map.empty)
     // identity/generated-column signature of the schema this write
@@ -1335,106 +1412,109 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
             "evolvePartitionTransforms, not by re-creating")
         recorded
     }
-    val retired = prevMeta.map(_.retiredTransforms).getOrElse(Nil)
     if (transforms.isEmpty)
-      require(df.columns.forall(!_.startsWith("__p_")),
+      require(inCols.forall(!_.startsWith("__p_")),
         "column prefix '__p_' is reserved for hidden partition columns")
-    // IDENTITY assignment first (a generated expression may derive
-    // from an identity column), then GENERATED columns — both BEFORE
-    // the partition transforms, so a transform may partition on either
-    val (dfI, identBumps) =
-      withIdentityColumns(df, prevMeta.flatMap(_.schema), op)
-    val dfG = withGeneratedColumns(dfI, prevMeta.flatMap(_.schema))
-    val (data, partCols) =
-      if (transforms.isEmpty) (dfG, partitionCols)
-      else (PartitionTransform.apply(dfG, transforms),
-        // caller-supplied cols from an inferred MIXED-era layout
-        // (rewrite paths) must not leak retired __p dirs into the write
-        transforms.map(_.pcol) ++ partitionCols.filterNot(c =>
-          c.startsWith("__p_") || transforms.map(_.pcol).contains(c)))
-    val guarded = withConstraintGuard(data, guardedCs)
-    // column mapping: data files store PHYSICAL names — the logical
-    // frame is renamed just before the write (constraint guards above
-    // were bound against logical names), partition dirs included
-    val cmBase: Map[String, String] = prevMeta.map(_.colmap).getOrElse(Map.empty)
-    // RE-ADD AFTER DROP via the write path: a NEW column whose
-    // identity physical name is tombstoned (or serving a renamed
-    // column) is written under a fresh physical name and the mapping
-    // entry publishes with this commit — same policy as addColumns
-    val reAdds: Map[String, String] = prevMeta.map { pm =>
-      freshPhysicalNames(pm, data.schema.fieldNames.toSeq.filterNot(c =>
-        c == RidCol || pm.schema.exists(_.fieldNames.contains(c))))
-    }.getOrElse(Map.empty)
-    val cm = cmBase ++ reAdds
-    val physData =
-      if (cm.isEmpty) guarded
-      else guarded.select(guarded.columns.toSeq.map(c =>
-        col(c).as(cm.getOrElse(c, c))): _*)
-    val physPartCols = partCols.map(c => cm.getOrElse(c, c))
-    if (preWritten.isEmpty) {
-      val w = physData.write.mode("errorifexists").option("compression", "zstd")
-      (if (physPartCols.nonEmpty) w.partitionBy(physPartCols: _*) else w)
-        .parquet(commitDir)
-    } else {
-      // files were written by appendBatch's SHARED job, which cannot
-      // enforce the per-frame write funnel — the caller must have
-      // verified the funnel is trivial for this table; re-checked here
-      // so a future featured table can never slip through unguarded
-      require(guardedCs.isEmpty && cm.isEmpty && transforms.isEmpty &&
-        identBumps.isEmpty && physPartCols.isEmpty && (physData eq df),
-        s"pre-written commit at $path requires a trivial write funnel " +
-          "(no constraints/identity/generated/transforms/column mapping)")
+    val commitDir =
+      s"${realPathOf(path)}/data/c-${java.util.UUID.randomUUID.toString.take(12)}"
+    val passThrough = input.exists(w => w.entries.isEmpty ||
+      (preIdentGenSig == ((Nil, Nil)) && transforms.isEmpty && partitionCols.isEmpty))
+    // the written rows: their logical schema, the logical partition
+    // columns of their layout, the mapping they are stored under, the
+    // identity watermarks they consumed, and their entries
+    val (dataSchema, partCols, cm, identBumps, files) = input match {
+      case Right(w) if passThrough =>
+        (w.schema, Nil, w.colmap, Map.empty[String, (Long, Long)], w.entries)
+      case _ =>
+        val df = input.fold(identity, w => readLogical(spark,
+          w.entries.map(_.filePath), w.schema, w.colmap))
+        // IDENTITY assignment first (a generated expression may derive
+        // from an identity column), then GENERATED columns — both BEFORE
+        // the partition transforms, so a transform may partition on either
+        val (dfI, bumps) =
+          withIdentityColumns(df, prevMeta.flatMap(_.schema), op)
+        val dfG = withGeneratedColumns(dfI, prevMeta.flatMap(_.schema))
+        val (data, partCols) =
+          if (transforms.isEmpty) (dfG, partitionCols)
+          else (PartitionTransform.apply(dfG, transforms),
+            // caller-supplied cols from an inferred MIXED-era layout
+            // (rewrite paths) must not leak retired __p dirs into the write
+            transforms.map(_.pcol) ++ partitionCols.filterNot(c =>
+              c.startsWith("__p_") || transforms.map(_.pcol).contains(c)))
+        val guarded = withConstraintGuard(data, guardedCs)
+        // column mapping: data files store PHYSICAL names — the logical
+        // frame is renamed just before the write (constraint guards above
+        // were bound against logical names), partition dirs included.
+        // RE-ADD AFTER DROP via the write path: a NEW column whose
+        // identity physical name is tombstoned (or serving a renamed
+        // column) is written under a fresh physical name and the mapping
+        // entry publishes with this commit — same policy as addColumns
+        val cm = prevMeta.map { pm =>
+          pm.colmap ++ freshPhysicalNames(pm, data.schema.fieldNames.toSeq
+            .filterNot(c => c == RidCol || pm.schema.exists(_.fieldNames.contains(c))))
+        }.getOrElse(Map.empty[String, String])
+        val physData =
+          if (cm.isEmpty) guarded
+          else guarded.select(guarded.columns.toSeq.map(c =>
+            col(c).as(cm.getOrElse(c, c))): _*)
+        val physPartCols = partCols.map(c => cm.getOrElse(c, c))
+        val writer = physData.write.mode("errorifexists").option("compression", "zstd")
+        (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*) else writer)
+          .parquet(commitDir)
+        // files materializing __rid record its footer min/max too, so
+        // id-addressed maintenance (deleteRowIds) range-prunes rewritten
+        // files from the manifest alone, same as position-derived ranges
+        val physStatsCols = (statsCols.map(c => cm.getOrElse(c, c)) ++
+          (if (ridCarried && physData.columns.contains(RidCol)) Seq(RidCol)
+           else Nil)).distinct
+        (data.schema, partCols, cm, bumps,
+          commitEntries(spark, commitDir, physStatsCols))
     }
-    // files materializing __rid record its footer min/max too, so
-    // id-addressed maintenance (deleteRowIds) range-prunes rewritten
-    // files from the manifest alone, same as position-derived ranges
-    val physStatsCols = (statsCols.map(c => cm.getOrElse(c, c)) ++
-      (if (ridCarried && physData.columns.contains(RidCol)) Seq(RidCol)
-       else Nil)).distinct
-    val added: Seq[Entry] = withBlooms(spark,
-      commitEntries(spark, commitDir, physStatsCols),
-      physData.schema.filterNot(f => physPartCols.contains(f.name)),
+    val physPartCols = partCols.map(c => cm.getOrElse(c, c))
+    val added: Seq[Entry] = withBlooms(spark, files,
+      physicalSchema(dataSchema, cm).filterNot(f => physPartCols.contains(f.name)),
       prevMeta.map(_.bloomCols.map(c => cm.getOrElse(c, c))).getOrElse(Nil))
-    var attempt = 0
-    while (attempt < maxAttempts) {
+    // written here: our dir (hive discovery yields the partition
+    // columns); passed through: the writer's files
+    val writtenPaths =
+      if (passThrough) files.map(_.filePath) else Seq(commitDir)
+    var checked: Set[String] = if (passThrough) Set.empty else guardedCs.keySet
+    def dropOwn(): Unit =
+      if (!passThrough) fs(spark, path).delete(new Path(commitDir), true): Unit
+    val (out, base) = try casRetry(path, maxAttempts) {
       // linearized log: the commit targets latest+1 and bases its
       // carryOver on exactly the latest manifest; if another writer
       // publishes first, the CAS fails and we re-read their manifest
       val version = latestVersion(spark, path).getOrElse(0L) + 1
-      val (prevSchema, previous, prevCs, prevTs, prevRetired, prevTxns,
-          prevBloomCols, prevDropped, prevAuto, prevRidHigh, prevClusterCols,
-          prevAutoCluster, prevUnknown) =
-        if (version == 1L)
-          (None, Nil, Map.empty[String, String],
-            Seq.empty[PartitionTransform], Seq.empty[PartitionTransform],
-            Map.empty[String, Long], Seq.empty[String], Seq.empty[String],
-            None: Option[(Int, Long)], None: Option[Long], Seq.empty[String],
-            None: Option[Int], Seq.empty[String])
-        else {
-          val m = readManifestFull(spark, path, version - 1)
-          // our files were written under the PRE-WRITE mapping; a
-          // concurrent rename/drop would make their physical names
-          // stale — abort rather than publish mismatched files
-          require(m.colmap == cmBase,
-            s"concurrent column-mapping change at $path during commit — rerun")
-          // identity/generated values (or their absence) were derived
-          // against the pre-write schema — a schema that gained (or
-          // changed) identity/generated columns since would make the
-          // written files silently null-fill them
-          require(identGenSig(m.schema) == preIdentGenSig,
-            s"concurrent identity/generated-column change at $path during " +
-              "commit — rerun")
-          // a re-added column our files store under a FRESH physical
-          // name must not have been added concurrently under a
-          // different identity — publishing our mapping would remap
-          // the concurrent writer's files too
-          reAdds.keys.foreach(c => require(
-            !m.schema.exists(_.fieldNames.contains(c)),
-            s"concurrent add of column '$c' at $path during commit — rerun"))
-          (m.schema, m.entries, m.constraints, m.transforms, m.retiredTransforms,
-            m.txns, m.bloomCols, m.droppedPhys, m.autoCompact, m.rowIdHigh,
-            m.clusterCols, m.autoCluster, m.unknownHeaders)
-        }
+      val m =
+        if (version == 1L) Manifest(None, Nil, None, transforms = transforms)
+        else readManifestFull(spark, path, version - 1)
+      val prevCols = m.schema.map(_.fieldNames.toSet).getOrElse(Set.empty[String])
+      // identity/generated values (or their absence) were derived
+      // against the pre-write schema — a schema that gained (or
+      // changed) identity/generated columns since would make the
+      // written files silently null-fill them
+      if (identGenSig(m.schema) != preIdentGenSig)
+        throw new WriteFunnelChanged(s"concurrent identity/generated-column " +
+          s"change at $path during commit — rerun")
+      // COLUMN MAPPING, one rule for a frame's re-adds and a writer's
+      // minted names: our files were written under `cm`. Its entries
+      // for columns the table knows must equal the current colmap — a
+      // concurrent rename/drop would make their physical names stale —
+      // and every NEW column's physical name (minted, or its identity
+      // name) must still be free of tombstones and mapped names: a
+      // concurrent drop/add/rename could have taken it, and either
+      // collision would silently read another column's bytes
+      val (known, minted) = cm.partition { case (c, _) => prevCols(c) }
+      require(m.colmap == known,
+        s"concurrent column-mapping change at $path during commit — rerun")
+      val taken = m.droppedPhys.toSet ++ m.colmap.values ++ prevCols.map(m.phys)
+      (minted.keySet ++ dataSchema.fieldNames.filterNot(c =>
+          prevCols(c) || c == RidCol)).foreach { c =>
+        val p = cm.getOrElse(c, c)
+        require(!taken(p), s"cannot add column '$c' at $path: its physical " +
+          s"name '$p' collides with a dropped or renamed column's on-disk data — rerun")
+      }
       // the partition spec may have CHANGED between our pre-write read
       // and this attempt (a concurrent evolvePartitionTransforms or
       // restore): keep the concurrent change — publishing our earlier
@@ -1442,34 +1522,26 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       // OUR layout's spec under the retired list, so the files this
       // commit wrote (an old-era layout now) keep pruning in readWhere
       // exactly like any other retired era
-      val (tsOut, retiredOut) =
-        if (version == 1L) (transforms, retired)
-        else if (prevTs.map(_.spec) == transforms.map(_.spec)) (prevTs, prevRetired)
+      val retiredOut =
+        if (m.transforms.map(_.spec) == transforms.map(_.spec)) m.retiredTransforms
         else {
-          val curSpecs = prevTs.map(_.spec).toSet
-          (prevTs,
-            (prevRetired ++ transforms).filterNot(t => curSpecs(t.spec))
-              .groupBy(_.spec).map(_._2.head).toSeq)
+          val curSpecs = m.transforms.map(_.spec).toSet
+          (m.retiredTransforms ++ transforms).filterNot(t => curSpecs(t.spec))
+            .groupBy(_.spec).map(_._2.head).toSeq
         }
-      // a constraint added between our pre-write read and this attempt
-      // was not enforced by the write guard — validate the committed
-      // files directly (rare contention path, one bounded scan)
-      val unguarded = prevCs -- guardedCs.keySet
-      if (unguarded.nonEmpty && added.nonEmpty) {
-        val written0 = spark.read.parquet(commitDir)
-        // constraint exprs reference LOGICAL names; the files are
-        // physical — alias back before evaluating
-        val rev = cm.map(_.swap)
-        val written =
-          if (cm.isEmpty) written0
-          else written0.select(written0.columns.toSeq.map(c =>
-            col(c).as(rev.getOrElse(c, c))): _*)
-        unguarded.foreach { case (name, e) =>
-          val bad = written.filter(!coalesce(expr(e), lit(true))).limit(1).count()
-          require(bad == 0L,
-            s"CHECK constraint '$name' ($e) added concurrently is violated " +
-              s"by this commit's data at $path")
-        }
+      // every constraint the write did not guard is checked on the
+      // written files: one scan of them, all constraints in one job
+      val unchecked = m.constraints -- checked
+      if (unchecked.nonEmpty && added.nonEmpty) {
+        readLogical(spark, writtenPaths, dataSchema, cm)
+          .select(violatedArray(unchecked).as("v")).filter(size(col("v")) > 0)
+          .limit(1).collect().headOption.foreach { r =>
+            val name = r.getSeq[String](0).head
+            throw new IllegalArgumentException(s"CHECK constraint '$name' " +
+              s"(${unchecked(name)}) is violated by this commit's data at " +
+              s"$path — nothing published")
+          }
+        checked ++= unchecked.keySet
       }
       // drift gate + schema evolution, recomputed per attempt (a
       // contending writer may have evolved the schema): additive
@@ -1478,31 +1550,26 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       // row-tracking `__rid` column is physical-only — it is written
       // into the files but stripped from the recorded schema, so user
       // reads (built from the schema) never see it.
-      val merged = mergeSchemas(prevSchema,
-        StructType(data.schema.fields.filterNot(_.name == RidCol)), path)
-      // a NEW column's PHYSICAL name (fresh for re-adds, identity
-      // otherwise) must not collide with a tombstone or a still-mapped
-      // physical name AT CAS TIME — a concurrent drop could have
-      // tombstoned it since the pre-write read; either collision would
-      // silently read another column's bytes from old files
-      val newCols = merged.fieldNames.filterNot(c =>
-        prevSchema.exists(_.fieldNames.contains(c)))
-      val physInUse = cmBase.values.toSet
-      newCols.foreach { c =>
-        val p = cm.getOrElse(c, c)
-        require(!prevDropped.contains(p) && !physInUse(p),
-          s"cannot add column '$c' at $path: its physical name '$p' collides " +
-            "with a dropped or renamed column's on-disk data — rerun")
-      }
+      val merged = mergeSchemas(m.schema,
+        StructType(dataSchema.fields.filterNot(_.name == RidCol)), path)
       // IDENTITY watermark: our values were assigned from the
       // pre-write watermark — a concurrent writer advancing it since
-      // would make them collide, so fail (values are baked into the
-      // written files; a silent retry cannot renumber them). The
-      // bump (step × rows written, gap-tolerant) publishes with this
-      // commit via the schema metadata. Every written entry must
-      // carry its footer row count: clamping a missing count (−1) to
-      // 0 would under-advance the watermark and a later commit would
-      // silently reuse already-assigned values.
+      // would make them collide, so the commit cannot publish (values
+      // are baked into the written files). The bump (step × rows
+      // written, gap-tolerant) publishes with this commit via the
+      // schema metadata. Every written entry must carry its footer row
+      // count: clamping a missing count (−1) to 0 would under-advance
+      // the watermark and a later commit would silently reuse
+      // already-assigned values.
+      identBumps.foreach { case (n, (high, _)) =>
+        val cur = m.schema.flatMap(_.fields.find(_.name == n))
+          .map(f => if (f.metadata.contains(IdentityHighKey))
+            f.metadata.getLong(IdentityHighKey)
+          else identityInfo(f).map(_.getStart).getOrElse(high))
+        if (!cur.forall(_ == high))
+          throw new WriteFunnelChanged(
+            s"concurrent identity assignment on '$n' at $path — rerun")
+      }
       val identRows =
         if (identBumps.isEmpty) 0L
         else {
@@ -1511,14 +1578,6 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
               s"for every written file — ${e.filePath} has none"))
           added.map(_.rows).sum
         }
-      identBumps.foreach { case (n, (high, _)) =>
-        val cur = prevSchema.flatMap(_.fields.find(_.name == n))
-          .map(f => if (f.metadata.contains(IdentityHighKey))
-            f.metadata.getLong(IdentityHighKey)
-          else identityInfo(f).map(_.getStart).getOrElse(high))
-        require(cur.forall(_ == high),
-          s"concurrent identity assignment on '$n' at $path — rerun")
-      }
       val published =
         if (identBumps.isEmpty) merged
         else StructType(merged.fields.map { f =>
@@ -1537,72 +1596,67 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       // baked that a concurrent writer could collide with (rewritten
       // files materialize EXISTING ids, stable by definition, and
       // their inserted rows fall back to base + position).
-      val (addedOut, ridHighOut) = prevRidHigh match {
+      val (addedOut, ridHighOut) = m.rowIdHigh match {
         case None => (added, None)
         case Some(high) =>
-          var b = high
-          (added.map { e =>
-            require(e.rows >= 0L,
-              s"row tracking at $path needs a footer row count for every " +
-                s"written file — ${e.filePath} has none")
-            val x = e.copy(rid = Some(b), ridMat = ridCarried)
-            b += e.rows
-            x
-          }, Some(b))
+          val (es, b) = assignRowIds(added.map(_.copy(ridMat = ridCarried)), high)(e =>
+            s"row tracking at $path needs a footer row count for every " +
+              s"written file — ${e.filePath} has none")
+          (es, Some(b))
       }
       // a concurrent retry of the SAME epoch may have published while
       // we were writing — abandon our unreferenced files and report
       // the winner's version (exactly-once under races too)
-      txn.foreach { case (app, ver) =>
-        if (prevTxns.get(app).exists(_ >= ver)) {
-          val f = fs(spark, path)
-          f.delete(new Path(commitDir), true)
-          return version - 1
-        }
-      }
-      val addedTagged = clusterTag match {
-        case None    => addedOut
-        case Some(t) => addedOut.map(_.copy(clusterTag = Some(t)))
-      }
-      if (publishManifest(spark, path, version, Manifest(
-          Some(published), carryOver(previous) ++ addedTagged, Some(op), prevCs,
-          tsOut, retiredOut,
-          txn.fold(prevTxns)(t => mergeTxns(prevTxns, Map(t))),
-          prevBloomCols, opKeys, cm, prevDropped,
-          prevAuto, ridHighOut,
-          clusterCols =
-            if (newClusterCols.nonEmpty) newClusterCols else prevClusterCols,
-          unknownHeaders = prevUnknown,
-          autoCluster = prevAutoCluster))) {
-        // commit-time policies (Delta autoOptimize posture):
-        // best-effort, never fail the user's commit, and fire only
-        // from NON-policy commits (a policy commit re-evaluating
-        // policies could ping-pong; the next user commit re-checks
-        // anyway). Compaction first — its merged output lands
-        // UNMARKED (a whole-partition merge spans its full key
-        // range; marking it would weaken skipping) and the cluster
-        // policy below is what re-clusters it when its region
-        // crosses the stale threshold.
-        if (op != "autocompact" && op != "autocluster") {
-          // best-effort, never failing the user's commit — but a
-          // PERSISTENTLY failing policy (not just one lost race)
-          // would otherwise be invisible while its backlog grows, so
-          // the swallow logs what it ate
-          if (prevAuto.isDefined)
-            try maybeAutoCompact(spark, path)
-            catch { case scala.util.control.NonFatal(e) =>
-              logWarning(s"auto-compaction skipped at $path: ${e.getMessage}") }
-          if (prevAutoCluster.isDefined)
-            try maybeAutoCluster(spark, path)
-            catch { case scala.util.control.NonFatal(e) =>
-              logWarning(s"auto-clustering skipped at $path: ${e.getMessage}") }
-        }
-        return version
-      }
-      attempt += 1
-      Thread.sleep(scala.util.Random.nextInt(50).toLong + 10)
+      if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) }) {
+        dropOwn()
+        Some((Committed(version - 1, replay = true), m))
+      } else if (publishManifest(spark, path, version, m.copy(
+          schema = Some(published),
+          entries = carryOver(m.entries) ++
+            addedOut.map(e => clusterTag.fold(e)(t => e.copy(clusterTag = Some(t)))),
+          op = Some(op), retiredTransforms = retiredOut,
+          txns = txn.fold(m.txns)(t => mergeTxns(m.txns, Map(t))),
+          opKeys = opKeys, colmap = cm, rowIdHigh = ridHighOut,
+          clusterCols = if (newClusterCols.nonEmpty) newClusterCols else m.clusterCols)))
+        Some((Committed(version, replay = false), m))
+      else None
+    } catch {
+      // nothing published: our dir is unreferenced, and a caller that
+      // re-runs from its source rows writes a fresh one
+      case e @ (_: WriteFunnelChanged | _: ConcurrentCommitException) =>
+        dropOwn(); throw e
     }
-    throw new ConcurrentCommitException(path, maxAttempts)
+    if (!out.replay) {
+      // a rewrite of pre-written files supersedes them
+      if (!passThrough) input.foreach(w =>
+        w.entries.map(_.commitDir).distinct.foreach(d =>
+          fs(spark, path).delete(new Path(d), true): Unit))
+      // commit-time policies (Delta autoOptimize posture):
+      // best-effort, never fail the user's commit, and fire only
+      // from NON-policy commits (a policy commit re-evaluating
+      // policies could ping-pong; the next user commit re-checks
+      // anyway). Compaction first — its merged output lands
+      // UNMARKED (a whole-partition merge spans its full key
+      // range; marking it would weaken skipping) and the cluster
+      // policy below is what re-clusters it when its region
+      // crosses the stale threshold. Streaming epochs are the
+      // classic small-file source, so they fire both too.
+      if (op != "autocompact" && op != "autocluster") {
+        // best-effort, never failing the user's commit — but a
+        // PERSISTENTLY failing policy (not just one lost race)
+        // would otherwise be invisible while its backlog grows, so
+        // the swallow logs what it ate
+        if (base.autoCompact.isDefined)
+          try maybeAutoCompact(spark, path)
+          catch { case scala.util.control.NonFatal(e) =>
+            logWarning(s"auto-compaction skipped at $path: ${e.getMessage}") }
+        if (base.autoCluster.isDefined)
+          try maybeAutoCluster(spark, path)
+          catch { case scala.util.control.NonFatal(e) =>
+            logWarning(s"auto-clustering skipped at $path: ${e.getMessage}") }
+      }
+    }
+    out
   }
 
   /** Additive schema evolution with a drift gate: the recorded table
@@ -1631,7 +1685,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
 
   /** Append commit: previous live files all carry over. */
   def append(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Long =
-    commit(df, path, partitionCols, identity)
+    commit(Left(df), path, partitionCols, identity).version
 
   /** N small frames → N consecutive APPEND commits sharing ONE Spark
     * write job (guide §1.2 — remove whole jobs): the
@@ -1652,7 +1706,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * transforms, column mapping, row tracking, branches — or the
     * frames' schemas differ (schema evolution needs per-commit
     * merges). The fallback is the identical result, just not shared;
-    * commit() re-checks the trivial-funnel requirement either way.
+    * commit() publishes the shared job's files as given only while the
+    * funnel is still trivial, and writes them through it otherwise.
     * Intended for NONEMPTY driver-bounded frames (an empty frame
     * contributes a fileless commit, like an empty partitioned write).
     */
@@ -1690,42 +1745,13 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         require(f.rename(src, new Path(commitDir)),
           s"could not move batch partition $i into $commitDir")
       } else f.mkdirs(new Path(commitDir)) // empty frame: fileless commit
-      commit(df, path, Nil, identity, preWritten = Some(commitDir))
+      commit(Right(Written(spark, commitEntries(spark, commitDir, Nil), df.schema,
+        Map.empty)), path, Nil, identity).version
     }
     f.delete(new Path(staging), true)
     versions
   }
 
-  /** Quarantine fail-mode append — the reference driver's
-    * `fail_mode` gate (reference infra/glue-jobs.tf:28 +
-    * jobs/ev_sessions_silver_etl_clean.py:161-164) lifted from the
-    * driver into the WRITE PATH. [[append]] is reject mode: one
-    * violating row fails the whole batch before anything publishes.
-    * This is divert mode: rows violating any recorded CHECK
-    * constraint land in `quarantinePath` — itself a snapshot table —
-    * with a `_violated` array column naming every failed constraint
-    * (sorted, so diagnoses are deterministic), and only compliant
-    * rows commit to the table.
-    *
-    * The source is evaluated ONCE: the tagged batch is staged to
-    * parquet partitioned by the violation flag, so each side's
-    * follow-up append re-reads only its own partition (pruned,
-    * columnar) — never the upstream computation twice. At 100 TB the
-    * staging write is the same IO the commit itself costs; the
-    * alternative (two passes over the source plan) re-executes
-    * arbitrary upstream joins/aggregations.
-    *
-    * Quarantine commits BEFORE the main table: a crash between the
-    * two appends leaves diverted rows visible in quarantine and the
-    * main table unadvanced — re-running the batch double-quarantines
-    * at worst (caller owns retry, like the reference re-runs a failed
-    * job), but no violating row is ever silently dropped and the main
-    * table never sees a partial batch. NULL evaluations PASS (the
-    * same tri-valued semantics as the reject guard).
-    *
-    * Returns (table version, rows quarantined). With no constraints
-    * recorded this is plain [[append]] with 0 quarantined.
-    */
   /** `df` extended with the target's GENERATED columns it omits, so a
     * CHECK constraint over a generated column can be evaluated BEFORE
     * the write funnel derives it (the quarantine split's probe — the
@@ -1761,6 +1787,28 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     }, gens.map(_._1.name))
   }
 
+  /** Quarantine fail-mode append — the reference driver's
+    * `fail_mode` gate (reference infra/glue-jobs.tf:28 +
+    * jobs/ev_sessions_silver_etl_clean.py:161-164) lifted from the
+    * driver into the WRITE PATH. [[append]] is reject mode: one
+    * violating row fails the whole batch before anything publishes.
+    * This is divert mode: rows violating any recorded CHECK
+    * constraint land in `quarantinePath` — itself a snapshot table —
+    * with a `_violated` array column naming every failed constraint
+    * (sorted, so diagnoses are deterministic), and only compliant
+    * rows commit to the table ([[commitSplit]]).
+    *
+    * The source is evaluated ONCE: the tagged batch is staged to
+    * parquet partitioned by the violation flag and read back with its
+    * known schema, so each side's commit re-reads only its own
+    * partition (pruned, columnar) — never the upstream computation
+    * twice. At 100 TB the staging write is the same IO the commit
+    * itself costs; the alternative (two passes over the source plan)
+    * re-executes arbitrary upstream joins/aggregations.
+    *
+    * Returns (table version, rows quarantined). With no constraints
+    * recorded this is plain [[append]] with 0 quarantined.
+    */
   def appendQuarantine(df: DataFrame, path: String, quarantinePath: String,
       partitionCols: Seq[String] = Nil): (Long, Long) = {
     val spark = df.sparkSession
@@ -1771,29 +1819,33 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     val m = latestVersion(spark, path).map(v => readManifestFull(spark, path, v))
     val cs: Map[String, String] = m.map(_.constraints).getOrElse(Map.empty)
     if (cs.isEmpty) return (append(df, path, partitionCols), 0L)
-    // int flag, not boolean: partition-column type inference on the
-    // staging re-read covers numerics but not booleans. The probe
-    // derives omitted GENERATED columns so constraints over them
-    // split correctly, then drops them (the write funnel re-derives).
-    val (probe, genAdded) = constraintProbe(df, m.flatMap(_.schema), cs)
-    val tagged = probe
-      .withColumn("_violated", violatedArray(cs))
-      .withColumn("__q_bad", when(size(col("_violated")) > 0, 1).otherwise(0))
-      .drop(genAdded: _*)
+    val tagged = tagViolations(df, m.flatMap(_.schema), cs)
     val staging = s"${realPathOf(path)}/_staging/q-" +
       java.util.UUID.randomUUID.toString.take(12)
     tagged.write.mode("errorifexists").option("compression", "zstd")
       .partitionBy("__q_bad").parquet(staging)
     try {
-      val staged = spark.read.parquet(staging)
-      val bad = staged.filter(col("__q_bad") === 1).drop("__q_bad")
-      val nBad = bad.count()
-      if (nBad > 0) append(bad, quarantinePath)
-      val clean = staged.filter(col("__q_bad") === 0).drop("__q_bad", "_violated")
-      (append(clean, path, partitionCols), nBad)
+      val staged = spark.read.schema(tagged.schema).parquet(staging)
+      val nBad = staged.filter(col("__q_bad") === 1).count()
+      (commitSplit(staged, nBad, path, quarantinePath, partitionCols,
+        "append", None).version, nBad)
     } finally {
       fs(spark, path).delete(new Path(staging), true); ()
     }
+  }
+
+  /** `df` tagged for the quarantine split: `_violated` names the CHECK
+    * constraints of `cs` each row violates, and the int flag `__q_bad`
+    * (int, not boolean: the staging write partitions on it) marks the
+    * violators. The probe derives omitted GENERATED columns so
+    * constraints over them split correctly, then drops them (the
+    * write funnel re-derives). */
+  private def tagViolations(df: DataFrame, schema: Option[StructType],
+      cs: Map[String, String]): DataFrame = {
+    val (probe, genAdded) = constraintProbe(df, schema, cs)
+    probe.withColumn("_violated", violatedArray(cs))
+      .withColumn("__q_bad", when(size(col("_violated")) > 0, 1).otherwise(0))
+      .drop(genAdded: _*)
   }
 
   /** One branch per constraint, evaluated inside the row: emits the
@@ -1806,32 +1858,49 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         .otherwise(lit(null).cast("string"))
     }: _*), c => c.isNotNull)
 
+  /** The split both divert-mode writers share: of `tagged`'s rows
+    * ([[tagViolations]]), `nBad` violators commit to `quarantinePath`
+    * with their `_violated` diagnosis, then the compliant rows to
+    * `path`, each through [[commit]] with `op` and `txn`. Quarantine
+    * commits FIRST: a crash between the two leaves diverted rows
+    * visible in quarantine and the main table unadvanced — never a
+    * violating row silently dropped, never a partial batch in the
+    * table. NULL evaluations PASS (the reject guard's tri-valued
+    * semantics). A side whose write funnel changed concurrently
+    * re-runs from the tagged rows. Returns the main table's commit. */
+  private def commitSplit(tagged: DataFrame, nBad: Long, path: String,
+      quarantinePath: String, partitionCols: Seq[String], op: String,
+      txn: Option[(String, Long)]): Committed = {
+    def side(df: DataFrame, p: String, pcs: Seq[String]): Committed =
+      rerunOnFunnelChange(20)(commit(Left(df), p, pcs, identity, op = op, txn = txn))
+    if (nBad > 0L)
+      side(tagged.filter(col("__q_bad") === 1).drop("__q_bad"), quarantinePath, Nil)
+    side(tagged.filter(col("__q_bad") === 0).drop("__q_bad", "_violated"),
+      path, partitionCols)
+  }
+
+  /** `run`, re-run while [[WriteFunnelChanged]] says its identity or
+    * generated values went stale under a concurrent writer — at most
+    * `attempts` runs, the last failure surfacing. */
+  private def rerunOnFunnelChange[A](attempts: Int)(run: => A): A =
+    try run
+    catch { case _: WriteFunnelChanged if attempts > 1 =>
+      rerunOnFunnelChange(attempts - 1)(run) }
+
   /** Quarantine fail-mode variant of [[commitStreamEpoch]] — the
     * streaming sink's divert mode (`.option("failMode",
-    * "quarantine")`): when the epoch's files violate a recorded CHECK
-    * constraint, the batch is split instead of rejected — violators
-    * land in `quarantinePath` with the `_violated` diagnosis column,
-    * compliant rows commit to the table, and the original mixed files
-    * are dropped. A fully-compliant epoch takes [[commitStreamEpoch]]'s
-    * fast path untouched (no rewrite, the executor-written files
-    * publish as-is).
+    * "quarantine")`): the epoch's files, read back as logical rows
+    * under `writtenColmap`, are tagged and split exactly like
+    * [[appendQuarantine]]'s batch ([[commitSplit]]), and the mixed
+    * files are dropped. A fully compliant epoch takes
+    * [[commitStreamEpoch]] and its files publish as written.
     *
     * Exactly-once holds PER TABLE via the same (txnAppId, epoch)
     * watermark, carried by both commits: quarantine commits first, so
     * a crash between the two leaves the violators visible and the
     * main table unadvanced; the engine's replay re-splits the epoch,
-    * the quarantine commit skips on its watermark (fresh duplicate
-    * files deleted), and the clean side commits — every row lands
-    * exactly once on exactly one side.
-    *
-    * COLUMN-MAPPED targets compose: the epoch's files carry PHYSICAL
-    * names (`writtenColmap`, captured by the sink when the epoch
-    * started — same contract as [[commitStreamEpoch]]); the split
-    * reads them back under the physical schema, evaluates constraints
-    * over LOGICAL names, and re-writes each side under ITS table's
-    * mapping — the clean side under `writtenColmap` (a mid-epoch
-    * rename still fails the epoch via commitStreamEpoch's check), the
-    * quarantine side under the quarantine table's own current mapping.
+    * the quarantine commit skips on its watermark, and the clean side
+    * commits — every row lands exactly once on exactly one side.
     *
     * Returns (main-table version — None when the whole epoch was a
     * replay, rows quarantined THIS call). */
@@ -1842,373 +1911,56 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       writtenColmap: Map[String, String] = Map.empty): (Option[Long], Long) = {
     if (streamTxnVersion(spark, path, txnAppId).exists(_ >= txnVersion))
       return (None, 0L)
-    val mPrev = latestVersion(spark, path)
-      .map(v => readManifestFull(spark, path, v))
-    mPrev.foreach(requireWriterFeatures(_, path))
-    val cs: Map[String, String] = mPrev.map(_.constraints).getOrElse(Map.empty)
-    // epoch files are physical; constraints and the split are logical.
-    // The probe derives omitted GENERATED columns so a constraint over
-    // one splits correctly (the epoch enrichment re-derives them on
-    // whichever side commits); identity-referencing constraints are
-    // refused inside constraintProbe — assignment happens at commit.
-    val staged =
-      if (files.isEmpty || cs.isEmpty) None
-      else Some(constraintProbe(toLogical(
-        spark.read.schema(physicalSchema(writeSchema, writtenColmap))
-          .parquet(files.map(_._2): _*), writeSchema, writtenColmap),
-        mPrev.flatMap(_.schema), cs))
-    val anyBad = staged.exists { case (df, _) =>
-      val violated = cs.values
-        .map(e => !coalesce(expr(e), lit(true))).reduce(_ || _)
-      df.filter(violated).limit(1).count() > 0L
-    }
-    if (!anyBad)
+    val m = latestVersion(spark, path).map(v => readManifestFull(spark, path, v))
+    m.foreach(requireWriterFeatures(_, path))
+    val cs: Map[String, String] = m.map(_.constraints).getOrElse(Map.empty)
+    val tagged = if (files.isEmpty || cs.isEmpty) None
+      else Some(tagViolations(readLogical(spark, files.map(_._2), writeSchema,
+        writtenColmap), m.flatMap(_.schema), cs))
+    val nBad = tagged.fold(0L)(_.filter(col("__q_bad") === 1).count())
+    if (nBad == 0L)
       return (commitStreamEpoch(spark, path, files, writeSchema,
         txnAppId, txnVersion, writtenColmap = writtenColmap), 0L)
-
-    def freshDir(table: String): String =
-      s"${dataDirOf(table)}/c-${java.util.UUID.randomUUID.toString.take(12)}"
-    def triplesOf(dir: String): Seq[(String, String, Long)] =
-      commitEntries(spark, dir, Nil).map(e => (e.commitDir, e.filePath, e.rows))
-    def toPhysical(df: DataFrame, cm: Map[String, String]): DataFrame =
-      if (cm.isEmpty) df
-      else df.select(df.columns.toSeq.map(c => col(c).as(cm.getOrElse(c, c))): _*)
-
-    val (probeDf, genAdded) = staged.get
-    val tagged = probeDf.withColumn("_violated", violatedArray(cs))
-      .drop(genAdded: _*)
-    // quarantine first (its watermark makes a replay skip and clean
-    // up): a crash window never silently drops a violating row
-    // the quarantine table may carry its OWN mapping — write under it
-    // (with fresh names minted for columns IT has dropped/renamed)
-    val qSchema = StructType(writeSchema.fields :+
-      StructField("_violated", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType)))
-    val qcm = streamWriteMapping(spark, quarantinePath, qSchema)
-    val badDir = freshDir(quarantinePath)
-    toPhysical(tagged.filter(size(col("_violated")) > 0), qcm)
-      .write.mode("errorifexists").option("compression", "zstd").parquet(badDir)
-    val badFiles = triplesOf(badDir)
-    val nBad = badFiles.map(_._3).sum
-    if (commitStreamEpoch(spark, quarantinePath, badFiles, qSchema,
-        txnAppId, txnVersion, writtenColmap = qcm).isEmpty)
-      fs(spark, quarantinePath).delete(new Path(badDir), true): Unit
-    // then the compliant side; an EMPTY clean side still publishes a
-    // zero-file commit so the main watermark advances (idempotence)
-    val cleanDir = freshDir(path)
-    toPhysical(tagged.filter(size(col("_violated")) === 0).drop("_violated"),
-      writtenColmap)
-      .write.mode("errorifexists").option("compression", "zstd").parquet(cleanDir)
-    val v = commitStreamEpoch(spark, path, triplesOf(cleanDir), writeSchema,
-      txnAppId, txnVersion, writtenColmap = writtenColmap)
-    if (v.isEmpty) fs(spark, path).delete(new Path(cleanDir), true): Unit
-    // the original mixed epoch files are superseded by the split
-    files.map(_._1).distinct.foreach { d =>
-      fs(spark, path).delete(new Path(d), true): Unit
-    }
-    (v, nBad)
+    val c = commitSplit(tagged.get, nBad, path, quarantinePath, Nil,
+      "streamAppend", Some(txnAppId -> txnVersion))
+    files.map(_._1).distinct.foreach(d => fs(spark, path).delete(new Path(d), true): Unit)
+    (Option.unless(c.replay)(c.version), nBad)
   }
 
   /** Exactly-once streaming append (the manifest half of the
     * `writeStream.format("graft-snapshot")` sink): publish `files` —
     * (commitDir, path, footer rows) triples already written by
-    * executor-side epoch writers — as ONE commit that also advances
-    * the `(txnAppId → txnVersion)` watermark in the manifest header.
-    * If the table has already committed `txnVersion` (or later) for
-    * this app id, returns None WITHOUT committing: the caller is
-    * replaying an epoch whose rows are already live (engine restart
-    * between sink commit and checkpoint write — the Delta idempotent-
-    * writer/SetTransaction pattern), and should discard its files.
-    * The check and the publish ride the same CAS loop, so a replayed
-    * epoch can never double-commit even under concurrent writers.
+    * executor-side epoch writers under `writtenColmap` — as ONE
+    * [[commit]] that also advances the `(txnAppId → txnVersion)`
+    * watermark in the manifest header. If the table has already
+    * committed `txnVersion` (or later) for this app id, returns None
+    * WITHOUT committing: the caller is replaying an epoch whose rows
+    * are already live (engine restart between sink commit and
+    * checkpoint write — the Delta idempotent-writer/SetTransaction
+    * pattern), and should discard its files. The check and the
+    * publish ride the same CAS loop, so a replayed epoch can never
+    * double-commit even under concurrent writers.
     *
-    * CHECK constraints are enforced on the written files BEFORE any
-    * publish (one bounded scan of only the new files) — a violating
-    * microbatch fails the query with zero manifest change, the
-    * reject-mode write gate. */
+    * On a table without identity or generated columns or partition
+    * transforms the files publish as written, and every recorded CHECK
+    * constraint is checked with one scan of them before any publish —
+    * a violating microbatch fails the query with zero manifest change.
+    * Otherwise the epoch's rows are read back once and written once
+    * through the batch write funnel (identity values from the
+    * pre-publish watermark, generated columns, the transform layout),
+    * and the flat files are dropped after the publish. A concurrent
+    * identity or generated-column change re-runs the commit from the
+    * epoch's files rather than failing the query. */
   def commitStreamEpoch(spark: SparkSession, path: String,
       files: Seq[(String, String, Long)], writeSchema: StructType,
       txnAppId: String, txnVersion: Long, maxAttempts: Int = 20,
       writtenColmap: Map[String, String] = Map.empty): Option[Long] = {
     require(txnAppId.nonEmpty, "txnAppId must be nonempty")
-    var added = files.map { case (dir, f, rows) => Entry(dir, f, rows) }
-    // hidden-partitioned target: the epoch's flat files are re-laid
-    // into the transform layout below, tracked here so a CAS retry
-    // only re-derives when the spec itself changed concurrently
-    var layoutSpecs: Seq[String] = Nil
-    var layoutDir: Option[String] = None
-    // the schema this epoch records: the re-laid frame's schema when
-    // a transform layout applies (it carries the derived __p columns
-    // — without them the recorded schema never learns the partition
-    // column and readWhere's projection cannot prune), else the
-    // writer's flat schema
-    var layoutSchema: StructType = writeSchema
-    var validatedCs: Set[String] = Set.empty
-    var bloomed = false
-    // IDENTITY / GENERATED columns on the sink target: the epoch's
-    // flat files are ENRICHED by one distributed read+write (the same
-    // never-table-sized shape as the transform re-lay below) through
-    // the exact batch funnel — withIdentityColumns assigns
-    // `high + step * ordinal` from the pre-publish watermark,
-    // withGeneratedColumns derives/validates expressions — so epoch
-    // rows get the same values a batch append of the same frame would.
-    // Exactly-once holds because the txn watermark is checked BEFORE
-    // any enrichment (a replayed epoch never re-assigns), and the
-    // identity watermark bump publishes atomically with the epoch's
-    // manifest; a CAS retry that finds the watermark moved re-enriches
-    // from the new high (`enrichSig`), never publishing stale values.
-    var effFiles: Seq[String] = files.map(_._2) // current flat payload
-    var effSchema: StructType = writeSchema     // its LOGICAL schema
-    var effColmap: Map[String, String] = writtenColmap
-    var identBumps: Map[String, (Long, Long)] = Map.empty
-    var enrichSig: Option[(Seq[(String, Long, Long, Boolean)],
-      Seq[(String, String)])] = None
-    var enrichDir: Option[String] = None
-    def dropDir(d: Option[String]): Unit =
-      d.foreach(x => fs(spark, path).delete(new Path(x), true): Unit)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val version = latestVersion(spark, path).getOrElse(0L) + 1
-      val prev =
-        if (version == 1L) Manifest(None, Nil, None)
-        else readManifestFull(spark, path, version - 1)
-      requireWriterFeatures(prev, path)
-      // same guard as commit(): a first commit creates a TABLE, never
-      // a branch — a stale handle after dropBranch must fail loudly
-      require(branchOf(path).isEmpty || version > 1L,
-        s"no branch '${branchOf(path).get}' at ${realPathOf(path)} — " +
-          "createBranch first; a write through a dropped or unknown " +
-          "branch handle does not re-create the branch")
-      // COLUMN MAPPING: the epoch's files were written under the
-      // mapping the sink read when the epoch STARTED (the factory
-      // renames logical -> physical before the executor writers run).
-      // Entries for columns the table KNOWS must equal the current
-      // colmap — a rename landing mid-epoch would make the written
-      // physical names stale, so fail the epoch (the engine retries
-      // the batch, and the retry's fresh factory picks up the new
-      // mapping). Entries for columns the table does NOT know are
-      // MINTED re-add names ([[streamWriteMapping]]): revalidate at
-      // CAS time that each minted physical is still free — a
-      // concurrent drop/add/rename racing the epoch fails it loudly
-      // rather than letting two logical columns share on-disk bytes.
-      val prevCols: Set[String] =
-        prev.schema.map(_.fieldNames.toSet).getOrElse(Set.empty)
-      val (minted, inherited) =
-        writtenColmap.partition { case (l, _) => !prevCols.contains(l) }
-      require(prev.colmap == inherited,
-        s"column mapping of $path changed during streaming epoch " +
-          s"$txnVersion of '$txnAppId' — the retry will re-write the " +
-          "batch under the current mapping")
-      if (minted.nonEmpty) {
-        val taken = prev.droppedPhys.toSet ++ prev.colmap.values ++
-          prevCols.map(prev.phys)
-        minted.foreach { case (l, p) => require(!taken(p),
-          s"cannot stream new column '$l' into $path as '$p': a " +
-            "concurrent schema change took that physical name mid-epoch " +
-            "— restart the query to re-mint against the current schema") }
-      }
-      if (prev.txns.get(txnAppId).exists(_ >= txnVersion)) {
-        // a replay detected mid-retry abandons any rewrite dirs too
-        dropDir(layoutDir); dropDir(enrichDir)
-        return None
-      }
-      // IDENTITY / GENERATED enrichment (see the header comment): one
-      // distributed rewrite of the EPOCH's rows through the batch
-      // funnel, re-done only when the identity/generated signature
-      // (incl. the watermark) changed since the last attempt
-      val identColsE = prev.schema.map(identityColumnsOf).getOrElse(Nil)
-      val genColsE = prev.schema.map(generatedColumnsOf(_)
-        .map { case (f, e) => (f.name, e) }).getOrElse(Nil)
-      if ((identColsE.nonEmpty || genColsE.nonEmpty) && files.nonEmpty) {
-        val sig = (identColsE.map(t => (t._1.name, t._2, t._3, t._4)), genColsE)
-        if (!enrichSig.contains(sig)) {
-          dropDir(enrichDir)
-          val flat = toLogical(
-            spark.read.schema(physicalSchema(writeSchema, writtenColmap))
-              .parquet(files.map(_._2): _*), writeSchema, writtenColmap)
-          val (dfI, bumps) = withIdentityColumns(flat, prev.schema, "append")
-          val dfG = withGeneratedColumns(dfI, prev.schema)
-          // enriched NEW columns (identity/generated) write under the
-          // table's recorded physical names; the writer's own columns
-          // keep the epoch mapping (inherited == prev.colmap there)
-          val cmE = prev.colmap ++ writtenColmap
-          val physE =
-            if (cmE.isEmpty) dfG
-            else dfG.select(dfG.columns.toSeq.map(c =>
-              col(c).as(cmE.getOrElse(c, c))): _*)
-          val dir =
-            s"${dataDirOf(path)}/c-${java.util.UUID.randomUUID.toString.take(12)}"
-          physE.write.mode("errorifexists").option("compression", "zstd")
-            .parquet(dir)
-          added = commitEntries(spark, dir, Nil)
-          enrichDir = Some(dir); enrichSig = Some(sig)
-          identBumps = bumps
-          effFiles = added.map(_.filePath)
-          effSchema = dfG.schema
-          effColmap = cmE
-          layoutSchema = dfG.schema
-          layoutSpecs = Nil     // transform re-lay must re-run off these
-          bloomed = false
-          validatedCs = Set.empty // CHECKs may reference enriched columns
-        }
-      }
-      // HIDDEN-PARTITIONED tables take the epoch too: the flat files
-      // the executor-side epoch writers produced are re-laid into the
-      // transform layout with the SAME derivation every batch write
-      // path uses (PartitionTransform.apply + partitionBy), so dir
-      // values, pruning stats, and overwritePartitions matching are
-      // identical by construction. Cost: one distributed read+write
-      // of the EPOCH's rows (never table-sized) — the price of
-      // layout parity without a custom per-partition task writer;
-      // the rewrite happens before any publish, so the crash-replay
-      // contract is unchanged (an orphaned re-laid dir is the same
-      // class as any crashed commit's dir). The exactly-once
-      // watermark above is checked first, so a replayed epoch never
-      // pays the rewrite.
-      if (prev.transforms.nonEmpty && files.nonEmpty &&
-          prev.transforms.map(_.spec) != layoutSpecs) {
-        dropDir(layoutDir)
-        // the flat files carry PHYSICAL names; transforms derive from
-        // LOGICAL sources — rename in, derive, rename back for the
-        // re-laid write (hidden __p_ columns are never mapped). The
-        // payload may already be the ENRICHED rewrite (eff*), so a
-        // transform may partition on an identity or generated column.
-        val flat = toLogical(
-          spark.read.schema(physicalSchema(effSchema, effColmap))
-            .parquet(effFiles: _*), effSchema, effColmap)
-        val data = PartitionTransform.apply(flat, prev.transforms)
-        val physData =
-          if (effColmap.isEmpty) data
-          else data.select(data.columns.toSeq.map(c =>
-            col(c).as(effColmap.getOrElse(c, c))): _*)
-        val dir = s"${dataDirOf(path)}/c-${java.util.UUID.randomUUID.toString.take(12)}"
-        physData.write.mode("errorifexists").option("compression", "zstd")
-          .partitionBy(prev.transforms.map(_.pcol): _*).parquet(dir)
-        added = commitEntries(spark, dir, Nil)
-        bloomed = false // re-laid files need their blooms rebuilt
-        layoutSpecs = prev.transforms.map(_.spec)
-        layoutDir = Some(dir)
-        layoutSchema = data.schema
-      }
-      // write-path CHECK gate: validate the epoch's files against the
-      // current constraint set before anything publishes; re-validated
-      // only for constraints added since the last attempt
-      val toCheck = prev.constraints -- validatedCs
-      if (toCheck.nonEmpty && added.nonEmpty) {
-        // validated over the EFFECTIVE payload (post-enrichment), so
-        // a CHECK over an identity/generated column sees real values
-        val written0 = spark.read.parquet(effFiles: _*)
-        // constraint exprs are over LOGICAL names
-        val revCm = effColmap.map(_.swap)
-        val written =
-          if (effColmap.isEmpty) written0
-          else written0.select(written0.columns.toSeq.map(c =>
-            col(c).as(revCm.getOrElse(c, c))): _*)
-        toCheck.foreach { case (name, e) =>
-          val bad = written.filter(!coalesce(expr(e), lit(true))).limit(1).count()
-          require(bad == 0L,
-            s"CHECK constraint '$name' ($e) is violated by streaming epoch " +
-              s"$txnVersion of '$txnAppId' at $path — batch rejected, no commit")
-        }
-        validatedCs = validatedCs ++ toCheck.keySet
-      }
-      if (!bloomed && prev.bloomCols.nonEmpty && added.nonEmpty) {
-        added = withBlooms(spark, added, physicalSchema(effSchema, effColmap),
-          prev.bloomCols.map(c => writtenColmap.getOrElse(c, c)))
-        bloomed = true
-      }
-      val merged = mergeSchemas(prev.schema, layoutSchema, path)
-      // same two-sided guard as commit() and evolveSchema: a streamed
-      // new column without a minted mapping writes under its IDENTITY
-      // physical name, which may neither resurrect a dropped column's
-      // bytes nor collide with a still-mapped column's PHYSICAL name
-      // (two logical columns resolving to one physical field would
-      // corrupt every subsequent read). Minted columns were
-      // revalidated above.
-      merged.fieldNames
-        .filterNot(c => prevCols.contains(c) || minted.contains(c))
-        .foreach(c => require(!prev.droppedPhys.contains(c) &&
-            !prev.colmap.values.toSet.contains(c),
-          s"cannot stream column '$c' into $path: its physical name " +
-            "collides with a dropped or renamed column's on-disk data"))
-      // IDENTITY watermark bump, batch-parity (see commit()): the
-      // enrichment assigned values from `prev`'s watermark THIS
-      // attempt (enrichSig re-derives on any change), so the bump is
-      // step × rows written, published atomically with the epoch
-      val identRows =
-        if (identBumps.isEmpty) 0L
-        else {
-          added.foreach(e => require(e.rows >= 0L,
-            s"identity assignment at $path needs a footer row count " +
-              s"for every epoch file — ${e.filePath} has none"))
-          added.map(_.rows).sum
-        }
-      val published =
-        if (identBumps.isEmpty) merged
-        else StructType(merged.fields.map { f =>
-          identBumps.get(f.name) match {
-            case None => f
-            case Some((high, step)) => f.copy(metadata =
-              new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-                .putLong(IdentityHighKey, high + step * identRows).build())
-          }
-        })
-      // ROW TRACKING: stream epochs are appends — bases assigned here
-      // at CAS time from the watermark + footer row counts (the sink
-      // records per-file rows), zero data-path cost, replay-safe (a
-      // replayed epoch returns above before reaching this)
-      val (addedOut, ridHighOut) = prev.rowIdHigh match {
-        case None => (added, None)
-        case Some(high) =>
-          var b = high
-          (added.map { e =>
-            require(e.rows >= 0L,
-              s"row tracking at $path needs a footer row count for every " +
-                s"epoch file — ${e.filePath} has none")
-            val x = e.copy(rid = Some(b)); b += e.rows; x
-          }, Some(b))
-      }
-      if (publishManifest(spark, path, version, prev.copy(
-          schema = Some(published), entries = prev.entries ++ addedOut,
-          op = Some("streamAppend"),
-          txns = mergeTxns(prev.txns, Map(txnAppId -> txnVersion)),
-          opKeys = Nil,
-          colmap = prev.colmap ++ minted,
-          rowIdHigh = ridHighOut.orElse(prev.rowIdHigh)))) {
-        // whichever rewrite the manifest references supersedes the
-        // stages before it: original flat files under a re-lay or an
-        // enrichment; the enriched dir too when a re-lay followed it
-        if (layoutDir.isDefined || enrichDir.isDefined)
-          files.map(_._1).distinct.foreach { d =>
-            fs(spark, path).delete(new Path(d), true): Unit
-          }
-        if (layoutDir.isDefined) dropDir(enrichDir)
-        // streaming microbatches are the classic small-file source —
-        // BOTH commit-time policies fire here too (best-effort, same
-        // as commit()'s non-policy path): compaction merges the small
-        // epoch files, and the cluster policy re-marks the unmarked
-        // backlog — without it an AUTOCLUSTER table fed only by the
-        // streaming sink would accumulate unmarked files unboundedly
-        // and skipping would decay to full scans
-        if (prev.autoCompact.isDefined)
-          try maybeAutoCompact(spark, path)
-          catch { case scala.util.control.NonFatal(e) =>
-            logWarning(s"auto-compaction skipped at $path: ${e.getMessage}") }
-        if (prev.autoCluster.isDefined)
-          try maybeAutoCluster(spark, path)
-          catch { case scala.util.control.NonFatal(e) =>
-            logWarning(s"auto-clustering skipped at $path: ${e.getMessage}") }
-        return Some(version)
-      }
-      attempt += 1
-      Thread.sleep(scala.util.Random.nextInt(50).toLong + 10)
-    }
-    // no manifest ever referenced the rewrite dirs, so vacuum could
-    // never reclaim them — clean up before surfacing the failure,
-    // mirroring the replay-detected path
-    dropDir(layoutDir); dropDir(enrichDir)
-    throw new ConcurrentCommitException(path, maxAttempts)
+    val written = Written(spark, files.map { case (d, f, n) => Entry(d, f, n) },
+      writeSchema, writtenColmap)
+    val c = rerunOnFunnelChange(maxAttempts)(commit(Right(written), path, Nil,
+      identity, maxAttempts, op = "streamAppend", txn = Some(txnAppId -> txnVersion)))
+    Option.unless(c.replay)(c.version)
   }
 
   /** Highest committed txn version for `txnAppId` (Delta's
@@ -2314,15 +2066,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       : Manifest => Manifest = { m =>
     if (m.rowIdHigh.isDefined) m
     else {
-      var b = 0L
-      val entries = m.entries.map { e =>
-        require(e.rows >= 0L,
-          s"row tracking at $path needs a footer row count for every " +
-            s"live file — ${e.filePath} has none")
-        val x = e.copy(rid = Some(b))
-        b += e.rows
-        x
-      }
+      val (entries, b) = assignRowIds(m.entries, 0L)(e =>
+        s"row tracking at $path needs a footer row count for every " +
+          s"live file — ${e.filePath} has none")
       m.copy(entries = entries, rowIdHigh = Some(b))
     }
   }
@@ -2376,8 +2122,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * metadata pass: list the parquet files, read footer row counts +
     * min/max stats for `statsCols` on the bounded pool (hive
     * partition-dir values become stats for free, so partition-style
-    * pruning works immediately), record the inferred schema, publish
-    * version 1 referencing the files where they sit. From then on the
+    * pruning works immediately), record the schema — the first file's
+    * footer schema plus the partition columns Spark's discovery infers
+    * from the dirs, no inference job — and publish version 1
+    * referencing the files where they sit. From then on the
     * directory IS the table: `readWhere` prunes through the recorded
     * stats, appends land under the managed `data/c-*` layout, DML
     * rewrites only touched files, `compact` migrates data fully into
@@ -2390,13 +2138,19 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     require(branchOf(dir).isEmpty, "adopt targets a plain directory, not a branch handle")
     require(latestVersion(spark, dir).isEmpty,
       s"$dir is already a snapshot table")
-    val schema = spark.read.parquet(dir).schema
+    val footers = commitFooters(spark, dir, statsCols)
+    require(footers.nonEmpty, s"no parquet files to adopt under $dir")
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val fileSchema = ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(new Path(footers.head._1.filePath),
+        new org.apache.parquet.hadoop.metadata.ParquetMetadata(footers.head._2,
+          java.util.Collections.emptyList())),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    val schema = spark.read.schema(fileSchema).parquet(dir).schema
     require(schema.fieldNames.forall(!_.startsWith("__p_")),
       "column prefix '__p_' is reserved for hidden partition columns")
-    val entries = commitEntries(spark, dir, statsCols)
-    require(entries.nonEmpty, s"no parquet files to adopt under $dir")
     require(publishManifest(spark, dir, 1L,
-      Manifest(Some(schema), entries, Some("adopt"))),
+      Manifest(Some(schema), footers.map(_._1), Some("adopt"))),
       s"concurrent writer created a table at $dir during adopt")
     1L
   }
@@ -2406,7 +2160,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * readable (time travel); the table's partition transforms and
     * constraints carry forward like any other commit. */
   def overwrite(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Long =
-    commit(df, path, partitionCols, _ => Nil, op = "overwrite")
+    commit(Left(df), path, partitionCols, _ => Nil, op = "overwrite").version
 
   /** Create a HIDDEN-PARTITIONED table (Iceberg partition-spec
     * shape): `transformSpecs` — e.g. `Seq("days(ts)")`,
@@ -2426,7 +2180,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     val dups = ts.groupBy(_.pcol).collect { case (c, xs) if xs.size > 1 => c }
     require(dups.isEmpty,
       s"partition transforms derive colliding columns: ${dups.mkString(", ")}")
-    commit(df, path, Nil, identity, statsCols = statsCols, newTransforms = ts)
+    commit(Left(df), path, Nil, identity, statsCols = statsCols, newTransforms = ts).version
   }
 
   /** The table's recorded partition transform specs (empty for plain
@@ -2867,9 +2621,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   // Delta-style table invariants (`ALTER TABLE ... ADD CONSTRAINT ...
   // CHECK (expr)` semantics): stored in the manifest header, carried
   // forward by every commit, enforced on EVERY write path (append /
-  // clustered / z-ordered / overwrite / merge / update / delete all
-  // funnel through commit()). SQL-standard tri-valued logic: a NULL
-  // evaluation PASSES — only an explicit FALSE violates.
+  // clustered / z-ordered / overwrite / merge / update / delete and
+  // the streaming sink's epochs all funnel through commit(): a
+  // guard on the frame it writes, one scan of files written
+  // elsewhere). SQL-standard tri-valued logic: a NULL evaluation
+  // PASSES — only an explicit FALSE violates.
 
   /** Wrap the first output column in a per-constraint raise_error
     * CaseWhen: zero extra jobs (the guard rides the write projection),
@@ -3177,7 +2933,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     }
     val fillOnly = op == "merge"
     val ingest = Set("append", "overwrite", "append_clustered",
-      "append_zordered", "overwrite_partitions")(op)
+      "append_zordered", "overwrite_partitions", "streamAppend")(op)
     if (!ingest && !fillOnly) return (df, Map.empty) // rewrite: preserve
     val ord = "__identity_ord"
     require(!df.columns.contains(ord), s"column name '$ord' is reserved")
@@ -3575,27 +3331,20 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * current one (constraint/transform changes keep entries+schema;
     * [[restore]] swaps in a prior version's whole state). */
   private[lake] def publishMetadataCommit(spark: SparkSession, path: String,
-      op: String)(mutate: Manifest => Manifest): Long = {
-    var attempt = 0
-    while (attempt < 20) {
-      val base = latestVersion(spark, path)
-        .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
-      val cur = readManifestFull(spark, path, base)
-      requireWriterFeatures(cur, path)
-      val m = mutate(cur)
-      // txn watermarks are monotonic even across restore (which swaps
-      // in an old manifest wholesale): an idempotent streaming writer
-      // must never re-commit an epoch the table has already seen —
-      // Delta's restore keeps SetTransaction identities the same way
-      // metadata commits are never keyed rewrites — opKeys cleared
-      // rather than inherited from the previous commit's label
-      if (publishManifest(spark, path, base + 1, m.copy(op = Some(op),
-          txns = mergeTxns(cur.txns, m.txns), opKeys = Nil)))
-        return base + 1
-      attempt += 1
-      Thread.sleep(scala.util.Random.nextInt(50).toLong + 10)
-    }
-    throw new ConcurrentCommitException(path, 20)
+      op: String)(mutate: Manifest => Manifest): Long = casRetry(path) {
+    val base = latestVersion(spark, path)
+      .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
+    val cur = readManifestFull(spark, path, base)
+    requireWriterFeatures(cur, path)
+    val m = mutate(cur)
+    // txn watermarks are monotonic even across restore (which swaps
+    // in an old manifest wholesale): an idempotent streaming writer
+    // must never re-commit an epoch the table has already seen —
+    // Delta's restore keeps SetTransaction identities the same way
+    // metadata commits are never keyed rewrites — opKeys cleared
+    // rather than inherited from the previous commit's label
+    Option.when(publishManifest(spark, path, base + 1, m.copy(op = Some(op),
+      txns = mergeTxns(cur.txns, m.txns), opKeys = Nil)))(base + 1)
   }
 
   /** TRUNCATE TABLE: remove every row as ONE metadata-only commit —
@@ -3650,9 +3399,12 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   /** One footer open per committed file: the row count plus (min,
     * max) of each requested numeric column — read driver-side at
     * commit time, exactly how Iceberg/Delta collect file stats.
-    * Non-numeric / stats-less columns simply contribute no range. */
+    * Non-numeric / stats-less columns simply contribute no range. The
+    * footer's file metadata (schema, key-values) comes back with the
+    * entry. */
   private def footerEntry(spark: SparkSession, commitDir: String, file: String,
-      statsCols: Seq[String]): Entry = {
+      statsCols: Seq[String])
+      : (Entry, org.apache.parquet.hadoop.metadata.FileMetaData) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.column.statistics._
@@ -3758,7 +3510,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           else None)
           .map(ns => (column, ns.sum))
       }
-      Entry(commitDir, file, rows, stats, sstats = sstats, nulls = nulls.toSeq)
+      (Entry(commitDir, file, rows, stats, sstats = sstats, nulls = nulls.toSeq),
+        reader.getFooter.getFileMetaData)
     } finally reader.close()
   }
 
@@ -4331,16 +4084,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       val (entriesOut, ridHighOut) = (cur.rowIdHigh, target.rowIdHigh) match {
         case (None, t) => (target.entries, t)
         case (Some(c), t) =>
-          var b = math.max(c, t.getOrElse(0L))
-          val es = target.entries.map { e =>
-            if (e.rid.isDefined) e
-            else {
-              require(e.rows >= 0L,
-                s"row tracking at $path needs a footer row count for " +
-                  s"${e.filePath} to restore across the enablement boundary")
-              val x = e.copy(rid = Some(b)); b += e.rows; x
-            }
-          }
+          val (es, b) = assignRowIds(target.entries, math.max(c, t.getOrElse(0L)),
+            keepAssigned = true)(e =>
+            s"row tracking at $path needs a footer row count for " +
+              s"${e.filePath} to restore across the enablement boundary")
           (es, Some(b))
       }
       cur.copy(entries = entriesOut, rowIdHigh = ridHighOut,
@@ -4658,13 +4405,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
               s"the branch (e.g. ${mat.head.filePath}) — those ids may " +
               "collide with main's; compact the branch commit or merge by " +
               "fast-forward instead")
-          var b = high
-          (added.map { e =>
-            require(e.rows >= 0L,
-              s"row tracking at $path needs a footer row count for " +
-                s"cherry-picked file ${e.filePath}")
-            val x = e.copy(rid = Some(b)); b += e.rows; x
-          }, Some(b))
+          val (es, b) = assignRowIds(added, high)(e =>
+            s"row tracking at $path needs a footer row count for " +
+              s"cherry-picked file ${e.filePath}")
+          (es, Some(b))
       }
       m.copy(entries = m.entries.filterNot(e => removedKeys(key(e))) ++ addedOut,
         rowIdHigh = ridHighOut.orElse(m.rowIdHigh),
@@ -4784,8 +4528,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     val clustered = df
       .repartitionByRange(numFiles, col(clusterCol))
       .sortWithinPartitions(clusterCol)
-    commit(clustered, path, Nil, identity, statsCols = Seq(clusterCol),
-      op = "append_clustered", clusterTag = Some(clusterTagOf(Seq(clusterCol))))
+    commit(Left(clustered), path, Nil, identity, statsCols = Seq(clusterCol),
+      op = "append_clustered", clusterTag = Some(clusterTagOf(Seq(clusterCol)))).version
   }
 
   /** Bits per dimension for the z-curve: capped at 16 and bounded so
@@ -4857,9 +4601,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * z-stats narrow further). */
   def appendZOrdered(df: DataFrame, path: String, clusterCols: Seq[String],
       numFiles: Int = 8, partitionCols: Seq[String] = Nil): Long =
-    commit(zShape(df, clusterCols, numFiles, partitionCols), path, partitionCols,
+    commit(Left(zShape(df, clusterCols, numFiles, partitionCols)), path, partitionCols,
       identity, statsCols = clusterCols, op = "append_zordered",
-      clusterTag = Some(clusterTagOf(clusterCols)))
+      clusterTag = Some(clusterTagOf(clusterCols))).version
 
   /** Range read with file-level data skipping: only files whose
     * recorded [min, max] intersects [lo, hi] are opened (files with
@@ -5328,9 +5072,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           s"${ExternalCatalogUtils.escapePathName(cmOw.getOrElse(c, c))}=$escaped"
         }.mkString("/")
       }.toSet
-    commit(df, path, partitionCols,
+    commit(Left(df), path, partitionCols,
       prev => prev.filterNot(e => touched.exists(t => e.filePath.contains(s"/$t/"))),
-      op = "overwrite_partitions")
+      op = "overwrite_partitions").version
   }
 
   /** Most distinct source key tuples [[keyRewriteSet]]'s driver tier
@@ -5615,11 +5359,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       def raisedDup(t: Throwable): Boolean =
         t != null && (Option(t.getMessage).exists(_.contains("duplicate keys")) ||
           raisedDup(t.getCause))
-      try SnapshotTable.commit(df, path, partCols,
+      try SnapshotTable.commit(Left(df), path, partCols,
         rebasingCarryOver(path, op, entries, rewritten.map(_.filePath).toSet),
         statsCols = statsOut, op = op, opKeys = opKeys,
         ridCarried = ridTracked && rewritten.nonEmpty, txn = txn,
-        clusterTag = clusterTag, newClusterCols = newClusterCols)
+        clusterTag = clusterTag, newClusterCols = newClusterCols).version
       catch {
         case e: Throwable if dupKeys.nonEmpty && raisedDup(e) =>
           throw new IllegalArgumentException(dupKeysMessage(dupKeys), e)
@@ -5707,8 +5451,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val spark = source.sparkSession
     val rw = rewriteAt(spark, path) match {
-      case None => return commit(source, path, partitionCols, identity,
-        statsCols = keyCols, op = "merge", opKeys = keyCols, txn = txn)
+      case None => return commit(Left(source), path, partitionCols, identity,
+        statsCols = keyCols, op = "merge", opKeys = keyCols, txn = txn).version
       case Some(rw) => rw
     }
     // the source is the new row image: a generated column in it is
@@ -6301,8 +6045,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // only OTHER files composes — rebuild the entry list from the new
     // head and retry; a removal or DV change of a file this delete
     // targets aborts loudly (our positions would be stale)
-    var attempt = 0
-    while (attempt < 20) {
+    casRetry(path) {
       val v = latestVersion(spark, path).get
       val cur = if (v == base) m else readManifestFull(spark, path, v)
       val lost = claimed.diff(guardState(cur.entries))
@@ -6316,13 +6059,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           case Some(dv) => e.copy(dv = Some(dv))
         }
       }
-      if (publishManifest(spark, path, v + 1, cur.copy(
-          entries = newEntries, op = Some("delete_dv"), opKeys = Nil)))
-        return v + 1
-      attempt += 1
-      Thread.sleep(scala.util.Random.nextInt(50).toLong + 10)
+      Option.when(publishManifest(spark, path, v + 1, cur.copy(
+        entries = newEntries, op = Some("delete_dv"), opKeys = Nil)))(v + 1)
     }
-    throw new ConcurrentCommitException(path, 20)
   }
 
   /** Auto-tiered DELETE (Delta's behavior): probe the matched-row

@@ -47,27 +47,28 @@ import graft.lake.SnapshotTable
   * writers stream rows straight to parquet (zstd, same codec as the
   * batch writer); the driver's share is one manifest CAS per epoch
   * plus footer-free row counts carried in the commit messages.
-  * CHECK constraints are enforced on the epoch's files before any
-  * publish. Default is reject mode: a violating batch fails the
-  * query with zero manifest change. `.option("failMode",
-  * "quarantine")` + `.option("quarantinePath", ...)` switches to
-  * divert mode (the dead-letter pattern, mirroring
-  * [[graft.lake.SnapshotTable.appendQuarantine]]): the epoch splits —
-  * violators land in the quarantine snapshot table with a
-  * `_violated` diagnosis column, compliant rows commit, and BOTH
-  * commits carry the epoch watermark so exactly-once holds per
-  * table across crash replays. A fully-compliant epoch keeps the
-  * no-rewrite fast path. Hidden-partitioned tables are first-class
-  * targets: the epoch's flat files are re-laid into the transform
-  * layout at commit time with the same derivation the batch writer
-  * uses (one distributed read+write of the EPOCH, never the table —
-  * see [[SnapshotTable.commitStreamEpoch]]), so `readWhere` pruning
-  * and `overwritePartitions` matching hold on streamed data too.
+  *
+  * One commit loop: an epoch publishes through the same
+  * `SnapshotTable.commit` as every batch write. On a table without
+  * identity or generated columns or partition transforms its files
+  * publish as written, after one scan checks every CHECK constraint;
+  * otherwise its rows are read back once and written once through the
+  * batch write funnel (identity values, generated columns, the
+  * transform layout), so `readWhere` pruning and `overwritePartitions`
+  * matching hold on streamed data too. Default is reject mode: a
+  * violating batch fails the query with zero manifest change.
+  * `.option("failMode", "quarantine")` + `.option("quarantinePath",
+  * ...)` switches to divert mode (the dead-letter pattern, the same
+  * split as [[graft.lake.SnapshotTable.appendQuarantine]]): violators
+  * land in the quarantine snapshot table with a `_violated` diagnosis
+  * column, compliant rows commit, and BOTH commits carry the epoch
+  * watermark so exactly-once holds per table across crash replays. A
+  * fully compliant epoch publishes its files as written.
   *
   * Reference basis: the reference lands its streaming-shaped loads
   * through batch Glue jobs + Iceberg commits
-  * (jobs/ev_sessions_gold_etl.py:106-156); this closes the same
-  * exactly-once gap natively, Delta-sink style.
+  * (jobs/ev_sessions_gold_etl.py:106-156); this sends them through
+  * the batch commit too, exactly-once natively, Delta-sink style.
   */
 private[sources] class SnapshotStreamingWrite(path: String, schema: StructType,
     queryId: String, failMode: String = "reject",

@@ -55,6 +55,32 @@ class AdoptSpec extends SparkTestBase {
     assert(SnapshotTable.count(spark, dir) === 300L) // metadata-only count
   }
 
+  test("adopt records the schema a plain read infers, partition column types " +
+      "included, and runs no Spark job for it") {
+    val dir = Files.createTempDirectory("graft-adopt-schema").toString + "/t"
+    (1 to 40).map(i => (i.toLong, s"s$i", i % 4, java.sql.Date.valueOf(
+        s"2024-01-0${1 + i % 2}"), if (i % 5 == 0) null else s"p${i % 3}"))
+      .toDF("k", "s", "n", "d", "p")
+      .write.partitionBy("n", "d", "p").parquet(dir)
+    val inferred = spark.read.parquet(dir).schema
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Thread.sleep(1000) // events of earlier jobs post asynchronously
+    spark.sparkContext.addSparkListener(listener)
+    try SnapshotTable.adopt(spark, dir, statsCols = Seq("k"))
+    finally {
+      Thread.sleep(1000)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get === 0, "adopt must take the schema from a footer it already read")
+    assert(SnapshotTable.read(spark, dir).schema === inferred)
+    assert(SnapshotTable.read(spark, dir).count() === 40L)
+  }
+
   test("adopted table takes the full lifecycle: append, file-pruned merge, compact, vacuum reclaims originals") {
     val dir = Files.createTempDirectory("graft-adopt-life").toString + "/t"
     // three range-clustered files so the merge can prove file pruning

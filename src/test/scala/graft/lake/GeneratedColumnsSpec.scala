@@ -16,8 +16,8 @@ import graft.SparkTestBase
   * null-filled) generated column and validates a provided non-null
   * value against the expression row-by-row; merge/update recompute;
   * DDL that would orphan the expression is refused; the streaming
-  * sink derives generated columns through the epoch enrichment
-  * rewrite (batch parity). */
+  * sink derives generated columns through the batch write funnel
+  * (batch parity). */
 class GeneratedColumnsSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -171,7 +171,7 @@ class GeneratedColumnsSpec extends SparkTestBase {
     val got = SnapshotTable.read(spark, path)
       .select("id", "v", "y").as[(Long, Double, Double)].collect().sorted
     assert(got === Array((1L, 2.0, 4.0), (9L, 9.0, 18.0)),
-      "the epoch enrichment must derive y = v * 2 exactly like a batch write")
+      "the epoch's commit must derive y = v * 2 exactly like a batch write")
     // a stream PROVIDING the generated column validates row-by-row:
     // a wrong value fails the epoch before anything publishes
     val src2 = s"$dir/src2"

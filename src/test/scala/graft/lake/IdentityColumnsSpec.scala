@@ -135,8 +135,8 @@ class IdentityColumnsSpec extends SparkTestBase {
     SnapshotTable.append(Seq(1.0).toDF("v"), path)
     assert(intercept[Exception](SnapshotTable.addColumns(spark, path,
       Seq(idField("id2")))).getMessage.contains("creation"))
-    // streaming sink ASSIGNS identity values through the epoch
-    // enrichment (exactly-once coverage: SnapshotStreamSinkSpec)
+    // streaming sink ASSIGNS identity values through the batch write
+    // funnel (exactly-once coverage: SnapshotStreamSinkSpec)
     val src = s"$dir/src"
     SnapshotTable.append(Seq(9.0).toDF("v"), src)
     val q = spark.readStream.format("graft-snapshot").load(src)

@@ -407,7 +407,33 @@ class SnapshotStreamSinkSpec extends SparkTestBase {
       s"expected b->a and a minted name for 'a', got $cm")
   }
 
-  // ---- IDENTITY / GENERATED targets: the epoch enrichment rewrite ----
+  test("an epoch written under a mapping a concurrent DROP made stale fails " +
+      "and publishes nothing — the dropped column's bytes never get a name back") {
+    val base = Files.createTempDirectory("graft-sink-staleMap").toString
+    val t = s"$base/t"
+    SnapshotTable.append(Seq((1L, "x")).toDF("k", "tag"), t)
+    SnapshotTable.renameColumn(spark, t, "tag", "label")        // label -> physical 'tag'
+    // the epoch starts: its writers capture the mapping, then a DROP lands
+    val schema = Seq(2L).toDF("k").schema
+    val cm = SnapshotTable.streamWriteMapping(spark, t, schema)
+    assert(cm === Map("label" -> "tag"))
+    SnapshotTable.dropColumn(spark, t, "label")                 // tombstones 'tag'
+    val dir = s"$t/data/c-stale"
+    Seq(2L).toDF("k").coalesce(1).write.parquet(dir)
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => (dir, f.getAbsolutePath, 1L)).toSeq
+    val v = SnapshotTable.latestVersion(spark, t)
+    intercept[IllegalArgumentException] {
+      SnapshotTable.commitStreamEpoch(spark, t, files, schema, "app", 0L, writtenColmap = cm)
+    }
+    assert(SnapshotTable.latestVersion(spark, t) === v)
+    // a later ADD of the same name must read NULL, not the dropped bytes
+    SnapshotTable.addColumns(spark, t, Seq(org.apache.spark.sql.types.StructField(
+      "label", org.apache.spark.sql.types.StringType)))
+    assert(SnapshotTable.read(spark, t).filter(col("label").isNotNull).count() === 0L)
+  }
+
+  // ---- IDENTITY / GENERATED targets: the batch write funnel ----
 
   import org.apache.spark.sql.types._
   import org.apache.spark.sql.catalyst.util.IdentityColumn
@@ -473,8 +499,8 @@ class SnapshotStreamSinkSpec extends SparkTestBase {
       "(enrichment feeds the transform re-lay; rid bases ride the same CAS)") {
     val base = Files.createTempDirectory("graft-sink-identbucket").toString
     val (src, dst, ckpt) = (s"$base/src", s"$base/dst", s"$base/ckpt")
-    // partition ON the identity column: the re-lay must see assigned
-    // values, which only works if enrichment runs first
+    // partition ON the identity column: the transform layout must see
+    // assigned values, which only works if identity assignment runs first
     SnapshotTable.create(spark, dst, StructType(Seq(
       idField("sid"), StructField("k", LongType), StructField("s", StringType))),
       transformSpecs = Seq("bucket(4, sid)"), rowTracking = true)
