@@ -2238,57 +2238,28 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     if (m.entries.isEmpty)
       return sqlAlias.foldLeft(withNullRid(emptyFrame(spark, path, v, m)))(
         (df, a) => df.alias(a)).filter(predicate)
-    // Predicate ANALYSIS runs against a zero-row frame in the
-    // recorded schema — resolving the user predicate must not build a
-    // file index over every live file (at 10⁶ files that listing
-    // dwarfs the query); the real scan is constructed below over the
-    // PRUNED entry subset only. Pre-schema-recording manifests (rare,
-    // legacy) fall back to the footer-derived frame.
-    // `translate`'s output and `skipIntervals` are both name-based,
+    // predicate ANALYSIS runs on [[analyzeOn]]'s zero-row frame; the
+    // real scan is constructed below over the PRUNED entry subset only.
+    // `translate`'s output and the skip compiler are both name-based,
     // so conditions analyzed here apply cleanly to the scan frame.
-    // sqlAlias: the SQL path may qualify predicate columns with the
-    // table (or AS) name — aliasing lets both forms resolve
-    val analysisFrame0 = m.schema match {
-      case Some(s) => spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-      case None => readGroups(spark, m.entries, m.schema, m.colmap)
-    }
-    // tracked reads may predicate on `_row_id` itself — it resolves
-    // here and the skip compiler treats it as an unknown leaf
-    // (conservatively matchable)
-    val analysisFrame =
-      if (withRowIds) withNullRid(analysisFrame0) else analysisFrame0
-    val raw = sqlAlias.foldLeft(analysisFrame)((df, a) => df.alias(a))
+    val (raw, analyzedCond) = analyzeOn(spark, m, predicate, withRowIds, sqlAlias)
     val hiddenCols = raw.columns.filter(_.startsWith("__p_")).toSeq
-    // resolve the user predicate against the table frame, then
     // project the ANALYZED condition (see PartitionTransform.translate)
     // onto the CURRENT and RETIRED specs — each era's files prune by
     // the layout they were written under (null-safe projections make
-    // cross-era conjunction inclusive)
-    val analyzedCond = raw.filter(predicate).queryExecution.analyzed
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    // a spec evolved onto before any new write has no column in the
-    // recorded schema yet — only project specs whose column exists
+    // cross-era conjunction inclusive). A spec evolved onto before any
+    // new write has no column in the recorded schema yet — only
+    // project specs whose column exists
     val known = raw.columns.toSet
     val projectable =
       (m.transforms ++ m.retiredTransforms).filter(t => known(t.pcol))
     val ppred = analyzedCond
       .map(c => PartitionTransform.translate(c, projectable))
       .getOrElse(lit(true))
-    // manifest-stats file skipping (the Delta/Iceberg data-skipping
-    // half of pruning): the analyzed condition compiles ONCE into an
-    // Entry => Boolean over the stats triple (numeric/string bounds,
-    // blooms, null counts) — AND combines per-branch verdicts, and
-    // OR branches prune too (a file is skipped when NO branch can
-    // match it, e.g. `k = 5 OR k = 900` opens two files of a
-    // clustered table). Files without a stat on a constrained column
-    // stay readable; unknown leaves are conservatively matchable.
-    val useBlooms = m.entries.exists(_.blooms.nonEmpty)
-    val canMatch: Option[Entry => Boolean] =
-      analyzedCond.map(c => compileSkipPredicate(c, m.phys, useBlooms))
-    val live = canMatch.fold(m.entries)(f => m.entries.filter(f))
+    // manifest-stats file skipping: the analyzed condition compiles
+    // ONCE into an Entry => Boolean (see FileSkipping)
+    val live = analyzedCond.fold(m.entries)(c =>
+      m.entries.filter(FileSkipping.compile(c, m.phys)))
     val base =
       if (live.isEmpty)
         return sqlAlias.foldLeft(withNullRid(emptyFrame(spark, path, v, m)))(
@@ -2304,317 +2275,28 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     base.filter(ppred && predicate).drop(hiddenCols: _*)
   }
 
-  /** Compile a predicate into a conservative per-file matchability
-    * test over the manifest's stats triple. The boolean structure is
-    * honored recursively: `And` requires both branches matchable,
-    * `Or` either branch — so `k = 5 OR k = 900` prunes to the union
-    * of each point's candidate files, and a cross-family
-    * `k = 5 OR v IS NULL` combines bounds with null counts. Each
-    * LEAF compiles once through the four extractors
-    * ([[skipIntervals]], [[skipStringBounds]], [[skipNullPredicates]],
-    * [[skipPointHashes]]) and evaluates per entry; a leaf none of
-    * them understands compiles to constant-true, so skipping can
-    * only ever be conservative. `phys` bridges renamed columns to
-    * the physical stat keys. */
-  private[lake] def compileSkipPredicate(
-      cond: org.apache.spark.sql.catalyst.expressions.Expression,
-      phys: String => String,
-      useBlooms: Boolean): Entry => Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{And, Or}
-    cond match {
-      case And(l, r) =>
-        val a = compileSkipPredicate(l, phys, useBlooms)
-        val b = compileSkipPredicate(r, phys, useBlooms)
-        e => a(e) && b(e)
-      case Or(l, r) =>
-        val a = compileSkipPredicate(l, phys, useBlooms)
-        val b = compileSkipPredicate(r, phys, useBlooms)
-        e => a(e) || b(e)
-      case leaf =>
-        val intervals = skipIntervals(leaf)
-        val sbounds = skipStringBounds(leaf)
-        val nullReqs = skipNullPredicates(leaf)
-        val pointKeys = if (useBlooms) skipPointHashes(leaf) else Nil
-        if (intervals.isEmpty && sbounds.isEmpty && nullReqs.isEmpty &&
-            pointKeys.isEmpty) _ => true
-        else e =>
-          // stat families are keyed by PHYSICAL (on-disk) names
-          pointKeys.forall { case (c, hs) =>
-            e.blooms.find(_._1 == phys(c)) match {
-              case Some((_, payload)) =>
-                val bf = decodeBloom(payload)
-                hs.exists(bf.mightContainLong)
-              case None => true
-            }
-          } &&
-          nullReqs.forall { case (c, needsNull) =>
-            e.nulls.find(_._1 == phys(c)) match {
-              // needsNull: the file must HOLD a null; else it must
-              // hold a non-null (count < footer rows — unknowable
-              // when the row count is unrecorded, so those stay
-              // readable). DV-safe both ways: deleted rows only ever
-              // SHRINK the live set, and "no null present" / "no
-              // non-null present" remain true of any subset.
-              case Some((_, n)) =>
-                if (needsNull) n > 0 else e.rows < 0 || n < e.rows
-              case None => true
-            }
-          } &&
-          intervals.forall { case (c, lo, hi) =>
-            e.stats.find(_._1 == phys(c)) match {
-              // NaN-poisoned footer stats (a double/float file
-              // containing NaN can record NaN min/max) compare false
-              // to everything, which would silently SKIP a file that
-              // holds matching real rows — treat NaN stats as absent.
-              case Some((_, mn, mx)) if !mn.isNaN && !mx.isNaN =>
-                mx >= lo && mn <= hi
-              case _ => true
-            }
-          } &&
-          sbounds.forall { case (c, lo, hi) =>
-            e.sstats.find(_._1 == phys(c)) match {
-              case Some((_, mn, mx)) =>
-                lo.forall(l => utf8Cmp(mx, l) >= 0) &&
-                  hi.forall(h => utf8Cmp(mn, h) <= 0)
-              case None => true
-            }
-          }
+  /** `predicate` analyzed against a zero-row frame in `m`'s recorded
+    * schema: resolving it must not build a file index over every live
+    * file (at 10⁶ files that listing dwarfs the query). Pre-schema-
+    * recording manifests (rare, legacy) fall back to the footer-derived
+    * frame. `withRowIds` adds the `_row_id` column, which resolves but
+    * no stat covers (the skip compiler keeps its leaves matchable);
+    * `sqlAlias` lets SQL-path predicates qualify columns with the
+    * table (or AS) name. Returns the frame and the analyzed condition. */
+  private def analyzeOn(spark: SparkSession, m: Manifest, predicate: Column,
+      withRowIds: Boolean, sqlAlias: Option[String] = None)
+      : (DataFrame, Option[org.apache.spark.sql.catalyst.expressions.Expression]) = {
+    val schemaFrame = m.schema match {
+      case Some(s) => spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
+      case None => readGroups(spark, m.entries, m.schema, m.colmap)
     }
-  }
-
-  /** Conservative per-column numeric intervals implied by a predicate,
-    * for manifest-stats file skipping. Only top-level conjuncts of
-    * simple shape (attr ⟨cmp⟩ literal, attr IN (literals…)) contribute;
-    * anything else — casts, functions, non-numeric literals —
-    * contributes nothing, so skipping can only ever be conservative
-    * (a file is dropped only when NO row in it can satisfy the
-    * conjunct); OR structure is handled above this extractor by
-    * [[compileSkipPredicate]]. Wide-integer literals are widened by
-    * one ulp after the Double conversion so the same rounding the
-    * footer stats went through can never skip a boundary file. */
-  private[lake] def skipIntervals(
-      cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[(String, Double, Double)] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.NumericType
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
-    // the attribute side may carry a WIDENING numeric cast inserted by
-    // type coercion (int column vs double literal). Only guaranteed
-    // lossless widenings (Cast.canUpCast) are order-preserving AND
-    // invertible, so only those let the literal's interval transfer to
-    // the base column's stats. A narrowing/truncating cast — e.g.
-    // CAST(doubleCol AS INT) = 5, satisfied by 5.7 — would let a file
-    // holding only (5.2, 5.9) be skipped; such casts contribute no
-    // interval and the file stays readable (skipping may only prune).
-    def attrOf(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case Cast(a: AttributeReference, dt, _, _)
-          if a.dataType.isInstanceOf[NumericType] &&
-            dt.isInstanceOf[NumericType] && Cast.canUpCast(a.dataType, dt) =>
-        Some(a.name)
-      case _ => None
-    }
-    // exact-in-Double values pass through; wide integers/decimals get
-    // the one-ulp widening (their footer stats took the same lossy
-    // Double path)
-    def numLo(l: Literal): Option[Double] = num(l).map {
-      case (d, true)  => d
-      case (d, false) => Math.nextDown(d)
-    }
-    def numHi(l: Literal): Option[Double] = num(l).map {
-      case (d, true)  => d
-      case (d, false) => Math.nextUp(d)
-    }
-    def num(l: Literal): Option[(Double, Boolean)] = l.value match {
-      case null => None
-      case b: Byte   => Some((b.toDouble, true))
-      case s: Short  => Some((s.toDouble, true))
-      case i: Int    => Some((i.toDouble, true))
-      case j: Long   => Some((j.toDouble, math.abs(j) <= (1L << 52)))
-      case f: Float  => Some((f.toDouble, true))
-      case d: Double => Some((d, true))
-      case d: org.apache.spark.sql.types.Decimal =>
-        val v = d.toDouble
-        Some((v, java.math.BigDecimal.valueOf(v).compareTo(d.toJavaBigDecimal) == 0))
-      case _ => None
-    }
-    // the value side of a SQL comparison is often not a bare Literal —
-    // a DECIMAL literal under a coercion Cast is typical — so accept
-    // any foldable expression and evaluate it to a constant
-    object Lit {
-      def unapply(e: Expression): Option[Literal] = e match {
-        case l: Literal => Some(l)
-        case c if c.foldable =>
-          scala.util.Try(Literal.create(c.eval(), c.dataType)).toOption
-        case _ => None
-      }
-    }
-    val inf = Double.PositiveInfinity
-    val raw: Seq[(String, Double, Double)] = conjuncts(cond).flatMap {
-      case EqualTo(a, Lit(l)) if attrOf(a).isDefined =>
-        attrOf(a).flatMap(n => for (lo <- numLo(l); hi <- numHi(l)) yield (n, lo, hi))
-      case EqualTo(Lit(l), a) =>
-        attrOf(a).flatMap(n => for (lo <- numLo(l); hi <- numHi(l)) yield (n, lo, hi))
-      case GreaterThan(a, Lit(l)) if attrOf(a).isDefined =>
-        attrOf(a).flatMap(n => numLo(l).map(v => (n, v, inf)))
-      case GreaterThanOrEqual(a, Lit(l)) if attrOf(a).isDefined =>
-        attrOf(a).flatMap(n => numLo(l).map(v => (n, v, inf)))
-      case LessThan(a, Lit(l)) if attrOf(a).isDefined =>
-        attrOf(a).flatMap(n => numHi(l).map(v => (n, -inf, v)))
-      case LessThanOrEqual(a, Lit(l)) if attrOf(a).isDefined =>
-        attrOf(a).flatMap(n => numHi(l).map(v => (n, -inf, v)))
-      // literal-on-the-left comparisons flip the direction
-      case GreaterThan(Lit(l), a) =>
-        attrOf(a).flatMap(n => numHi(l).map(v => (n, -inf, v)))
-      case GreaterThanOrEqual(Lit(l), a) =>
-        attrOf(a).flatMap(n => numHi(l).map(v => (n, -inf, v)))
-      case LessThan(Lit(l), a) =>
-        attrOf(a).flatMap(n => numLo(l).map(v => (n, v, inf)))
-      case LessThanOrEqual(Lit(l), a) =>
-        attrOf(a).flatMap(n => numLo(l).map(v => (n, v, inf)))
-      case In(a, vs) if vs.nonEmpty =>
-        attrOf(a).flatMap { n =>
-          val lits = vs.flatMap(Lit.unapply)
-          val los = lits.flatMap(numLo)
-          val his = lits.flatMap(numHi)
-          if (los.size == vs.size && his.size == vs.size)
-            Some((n, los.min, his.max))
-          else None
-        }
-      case _ => None
-    }
-    // several conjuncts on one column intersect
-    raw.groupBy(_._1).map { case (c, xs) =>
-      (c, xs.map(_._2).max, xs.map(_._3).min)
-    }.toSeq
-  }
-
-  /** Conservative per-column STRING bounds implied by a predicate's
-    * top-level conjuncts — the string half of manifest-stats file
-    * skipping ([[skipIntervals]] covers numerics). Only bare
-    * StringType attributes compared/IN'd against foldable string
-    * literals contribute (a cast changes the comparison space and
-    * contributes nothing); bounds are inclusive even for strict
-    * comparisons (slightly less pruning, never wrong) and compare
-    * under unsigned UTF-8 byte order ([[utf8Cmp]]), the ordering both
-    * parquet BINARY footer stats and Spark string comparisons use.
-    * Each element is (column, lower, upper) with None = unbounded;
-    * conjuncts on one column apply independently (forall =
-    * intersection). */
-  private[lake] def skipStringBounds(
-      cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[(String, Option[String], Option[String])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
-    def attr(e: Expression): Option[String] = e match {
-      case a: AttributeReference if a.dataType == StringType => Some(a.name)
-      case _ => None
-    }
-    object SLit {
-      def unapply(e: Expression): Option[String] = e match {
-        case c if c.foldable && c.dataType == StringType =>
-          scala.util.Try(Option(c.eval()).map(_.toString)).toOption.flatten
-        case _ => None
-      }
-    }
-    conjuncts(cond).flatMap {
-      case EqualTo(a, SLit(v)) if attr(a).isDefined =>
-        attr(a).map(n => (n, Some(v), Some(v)))
-      case EqualTo(SLit(v), a) if attr(a).isDefined =>
-        attr(a).map(n => (n, Some(v), Some(v)))
-      case GreaterThan(a, SLit(v)) if attr(a).isDefined =>
-        attr(a).map(n => (n, Some(v), None))
-      case GreaterThanOrEqual(a, SLit(v)) if attr(a).isDefined =>
-        attr(a).map(n => (n, Some(v), None))
-      case LessThan(a, SLit(v)) if attr(a).isDefined =>
-        attr(a).map(n => (n, None, Some(v)))
-      case LessThanOrEqual(a, SLit(v)) if attr(a).isDefined =>
-        attr(a).map(n => (n, None, Some(v)))
-      // literal-on-the-left comparisons flip the direction
-      case GreaterThan(SLit(v), a) if attr(a).isDefined =>
-        attr(a).map(n => (n, None, Some(v)))
-      case GreaterThanOrEqual(SLit(v), a) if attr(a).isDefined =>
-        attr(a).map(n => (n, None, Some(v)))
-      case LessThan(SLit(v), a) if attr(a).isDefined =>
-        attr(a).map(n => (n, Some(v), None))
-      case LessThanOrEqual(SLit(v), a) if attr(a).isDefined =>
-        attr(a).map(n => (n, Some(v), None))
-      case In(a, ls) if attr(a).isDefined && ls.nonEmpty =>
-        val vs = ls.map(SLit.unapply)
-        if (vs.exists(_.isEmpty)) None
-        else {
-          val sorted = vs.flatten.sortWith(utf8Cmp(_, _) < 0)
-          attr(a).map(n => (n, Some(sorted.head), Some(sorted.last)))
-        }
-      case _ => None
-    }
-  }
-
-  /** Per-column nullability REQUIREMENTS implied by a predicate's
-    * top-level conjuncts, for null-count file skipping. Each element
-    * is (column, needsNull): `true` — the conjunct is satisfiable
-    * only by a NULL in the column (`IS NULL`, `<=> NULL`), so a file
-    * whose recorded null count is 0 is skipped; `false` — only by a
-    * NON-null (`IS NOT NULL`, and every comparison / IN conjunct,
-    * since SQL comparisons never evaluate TRUE on NULL input), so an
-    * all-null file (count = footer rows) is skipped. This is the
-    * case bounds can't serve: an all-null chunk records NO min/max,
-    * so interval skipping keeps the file. Only BARE attributes
-    * contribute — a cast or function can manufacture or absorb
-    * nulls (`try_cast`, `coalesce`) and contributes nothing; files
-    * without a recorded count stay readable either way. */
-  private[lake] def skipNullPredicates(
-      cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[(String, Boolean)] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
-    def attr(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    // both sides of a comparison must be non-NULL for it to be TRUE
-    // — `a < b` needs a non-null in a AND in b
-    def cmpSides(l: Expression, r: Expression): Seq[(String, Boolean)] =
-      (attr(l).toSeq ++ attr(r).toSeq).map(_ -> false)
-    // `<=> NULL` in the ANALYZED (unoptimized) plan carries the NULL
-    // under a coercion Cast — fold it, like the other skippers do
-    object FoldLit {
-      def unapply(e: Expression): Option[Literal] = e match {
-        case l: Literal => Some(l)
-        case c if c.foldable =>
-          scala.util.Try(Literal.create(c.eval(), c.dataType)).toOption
-        case _ => None
-      }
-    }
-    conjuncts(cond).flatMap {
-      case IsNull(a)          => attr(a).map(_ -> true)
-      case IsNotNull(a)       => attr(a).map(_ -> false)
-      case Not(IsNull(a))     => attr(a).map(_ -> false)
-      case Not(IsNotNull(a))  => attr(a).map(_ -> true)
-      case EqualNullSafe(a, FoldLit(l)) if attr(a).isDefined =>
-        attr(a).map(_ -> (l.value == null))
-      case EqualNullSafe(FoldLit(l), a) if attr(a).isDefined =>
-        attr(a).map(_ -> (l.value == null))
-      case EqualTo(l, r)            => cmpSides(l, r)
-      case GreaterThan(l, r)        => cmpSides(l, r)
-      case GreaterThanOrEqual(l, r) => cmpSides(l, r)
-      case LessThan(l, r)           => cmpSides(l, r)
-      case LessThanOrEqual(l, r)    => cmpSides(l, r)
-      // IN is TRUE only when the attribute equals SOME branch — a
-      // NULL attribute yields NULL/UNKNOWN, never TRUE
-      case In(a, _)      => attr(a).map(_ -> false).toSeq
-      case InSet(a, _)   => attr(a).map(_ -> false).toSeq
-      case _ => Nil
-    }.distinct
+    val frame = sqlAlias.foldLeft(
+      if (withRowIds) schemaFrame.withColumn(RowIdCol, lit(null).cast(LongType))
+      else schemaFrame)((df, a) => df.alias(a))
+    (frame, frame.filter(predicate).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    })
   }
 
   // ---- CHECK constraints -------------------------------------------
@@ -3568,7 +3250,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   /** Column types blooms support: hashed as UTF8 bytes (strings) or
     * as a long (integrals) — both via Spark's codegen'd xxhash64 on
     * the build side and XXH64 statics on the probe side (seed 42). */
-  private def bloomEligible(dt: DataType): Boolean = dt match {
+  private[lake] def bloomEligible(dt: DataType): Boolean = dt match {
     case StringType | LongType | IntegerType | ShortType | ByteType => true
     case _ => false
   }
@@ -3717,21 +3399,6 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     readManifestFull(spark, path, v).bloomCols
   }
 
-  /** Probe-side hash of a key value, matching the build side's
-    * `xxhash64(col)` / `xxhash64(cast(col as long))` exactly
-    * (XXH64, seed 42). None = unprobeable value (never prune). */
-  private def bloomProbeHash(v: Any): Option[Long] = v match {
-    case s: String => Some(org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashUTF8String(org.apache.spark.unsafe.types.UTF8String.fromString(s), 42L))
-    case u: org.apache.spark.unsafe.types.UTF8String =>
-      Some(org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(u, 42L))
-    case l: Long  => Some(org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(l, 42L))
-    case i: Int   => Some(org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(i.toLong, 42L))
-    case s: Short => Some(org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(s.toLong, 42L))
-    case b: Byte  => Some(org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(b.toLong, 42L))
-    case _ => None
-  }
-
   // Decoded blooms are pure functions of their base64 payload, and
   // the same payload string rides every manifest that lists the file
   // — memoized, so repeated point lookups / merge probes over a
@@ -3749,7 +3416,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       bloomDecodeCache.clear(); bloomDecodeCacheBytes = 0L
     }
 
-  private def decodeBloom(payload: String)
+  private[lake] def decodeBloom(payload: String)
       : org.apache.spark.util.sketch.BloomFilter =
     bloomDecodeCache.synchronized {
       Option(bloomDecodeCache.get(payload)).getOrElse {
@@ -3767,73 +3434,6 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         bf
       }
     }
-
-  /** Per-conjunct point-lookup hash sets implied by a predicate, for
-    * bloom file skipping: `attr = literal` and `attr IN (literals…)`
-    * over bare string/integral attributes (plus lossless integral
-    * upcasts — the build side hashed `cast(col as long)`, so the
-    * upcast literal probes the same domain). Each element is
-    * (column, candidate hashes): a file survives a conjunct iff SOME
-    * candidate might be contained; conjuncts apply independently
-    * (intersection). Anything else contributes nothing — skipping
-    * stays strictly conservative. */
-  private[lake] def skipPointHashes(
-      cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[(String, Seq[Long])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
-    def attrOf(e: Expression): Option[AttributeReference] = e match {
-      case a: AttributeReference if bloomEligible(a.dataType) => Some(a)
-      case Cast(a: AttributeReference, dt, _, _)
-          if a.dataType != StringType && bloomEligible(a.dataType) &&
-            bloomEligible(dt) && dt != StringType &&
-            Cast.canUpCast(a.dataType, dt) => Some(a)
-      case _ => None
-    }
-    def hashLit(a: AttributeReference, l: Literal): Option[Long] =
-      (a.dataType, l.value) match {
-        case (_, null) => None // col = NULL never matches; no pruning claim
-        case (StringType, v) => bloomProbeHash(v)
-        case (_, v: Byte)  => bloomProbeHash(v.toLong)
-        case (_, v: Short) => bloomProbeHash(v.toLong)
-        case (_, v: Int)   => bloomProbeHash(v.toLong)
-        case (_, v: Long)  => bloomProbeHash(v)
-        case _ => None
-      }
-    object Lit {
-      def unapply(e: Expression): Option[Literal] = e match {
-        case l: Literal => Some(l)
-        case c if c.foldable =>
-          scala.util.Try(Literal.create(c.eval(), c.dataType)).toOption
-        case _ => None
-      }
-    }
-    conjuncts(cond).flatMap {
-      case EqualTo(a, Lit(l)) if attrOf(a).isDefined =>
-        attrOf(a).flatMap(ar => hashLit(ar, l).map(h => (ar.name, Seq(h))))
-      case EqualTo(Lit(l), a) if attrOf(a).isDefined =>
-        attrOf(a).flatMap(ar => hashLit(ar, l).map(h => (ar.name, Seq(h))))
-      case In(a, vs) if attrOf(a).isDefined && vs.nonEmpty =>
-        attrOf(a).flatMap { ar =>
-          val hs = vs.map {
-            case Lit(l) => hashLit(ar, l)
-            case _      => None
-          }
-          // every branch must be probeable or the conjunct is unusable
-          // (an unprobeable branch could match rows in any file); a
-          // NULL branch simply never matches and drops out
-          val nonNull = vs.zip(hs).filterNot { case (v, _) =>
-            Lit.unapply(v).exists(_.value == null) }
-          if (nonNull.forall(_._2.isDefined))
-            Some((ar.name, nonNull.flatMap(_._2)))
-          else None
-        }
-      case _ => None
-    }
-  }
 
   /** Live data-file paths at `version` (default latest) — the Delta
     * `inputFiles` analogue; lets callers and scale smokes observe a
@@ -4614,8 +4214,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       lo: Double, hi: Double, version: Option[Long] = None): (DataFrame, Int) =
     readBox(spark, path, Seq((clusterCol, lo, hi)), version)
 
-  /** Multi-dimensional box read: prune with every (col, lo, hi)
-    * predicate a file has stats for, then apply the full filter. */
+  /** Multi-dimensional box read: the box predicate prunes through the
+    * skip compiler ([[candidateEntries]]), then filters the rows. */
   def readBox(spark: SparkSession, path: String,
       box: Seq[(String, Double, Double)],
       version: Option[Long] = None): (DataFrame, Int) = {
@@ -4623,19 +4223,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     val v = version.orElse(latestVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
     val m = readManifestFull(spark, path, v)
-    val live = m.entries.filter { e =>
-      box.forall { case (c, lo, hi) =>
-        e.stats.find(_._1 == m.phys(c)) match {
-          // NaN min/max (file contained NaN doubles) → stats unusable;
-          // treat as absent so the file is still read, never skipped.
-          case Some((_, mn, mx)) if !mn.isNaN && !mx.isNaN =>
-            mx >= lo && mn <= hi
-          case _ => true // no usable stats → must read
-        }
-      }
-    }
     val pred = box.map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }
       .reduce(_ && _)
+    val live = candidateEntries(spark, m, pred)
     if (live.isEmpty)
       return (read(spark, path, Some(v)).filter(pred).limit(0), 0)
     val df = readGroups(spark, live, m.schema, m.colmap)
@@ -5128,7 +4718,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     *    is analyzed once against the table's schema and the source's
     *    key types, so cross-typed keys compile to Spark's own casts.
     *    Each tuple binds it to literals and compiles through
-    *    [[readWhere]]'s skip compiler ([[compileSkipPredicate]]): one
+    *    [[readWhere]]'s skip compiler ([[FileSkipping.compile]]): one
     *    predicate checks bounds, null counts and blooms together, and
     *    a file is kept when some tuple's predicate can match it.
     *  - Range-join tier, more tuples or a derived source on a bloomless
@@ -5179,14 +4769,14 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         }
         val canMatch = ts.map { t =>
           val bind = sIds.zip(t).toMap
-          compileSkipPredicate(cond.transform {
+          FileSkipping.compile(cond.transform {
             case a: AttributeReference if bind.contains(a.exprId) => bind(a.exprId)
-          }, m.phys, bloomed)
+          }, m.phys)
         }
         rw.entries.filter(e => canMatch.exists(_(e)))
       case None =>
-        val entries = rw.entries.filterNot(e => e.rows >= 0 && tKeys.flatten.exists(f =>
-          e.nulls.find(_._1 == m.phys(f.name)).exists(_._2 == e.rows)))
+        val entries = rw.entries.filterNot(e =>
+          tKeys.flatten.exists(f => FileSkipping.allNull(e, m.phys(f.name))))
         def integral(t: DataType): Boolean =
           Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
         // (key index, physical column, type) of the keys a bound can prune
@@ -5195,14 +4785,14 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
               integral(f.dataType) && integral(keyAttrs(i).dataType))
             .map(f => (i, m.phys(f.name), f.dataType)))
         val num = ranged.filter { case (_, p, t) =>
-          t.isInstanceOf[NumericType] && entries.exists(_.stats.exists(_._1 == p)) }
+          t.isInstanceOf[NumericType] && entries.exists(FileSkipping.numBound(_, p).isDefined) }
         val str = ranged.filter { case (_, p, t) =>
-          t == StringType && entries.exists(_.sstats.exists(_._1 == p)) }
-        // NaN bounds compare false to everything: such a file is unprunable
+          t == StringType && entries.exists(FileSkipping.strBound(_, p).isDefined) }
+        // a file without a usable bound on some ranged key is unprunable
         val (prunable, unprunable) = entries.partition(e =>
           (num.nonEmpty || str.nonEmpty) &&
-            num.forall(r => e.stats.exists(s => s._1 == r._2 && !s._2.isNaN && !s._3.isNaN)) &&
-            str.forall(r => e.sstats.exists(_._1 == r._2)))
+            num.forall(r => FileSkipping.numBound(e, r._2).isDefined) &&
+            str.forall(r => FileSkipping.strBound(e, r._2).isDefined))
         if (prunable.isEmpty) unprunable
         else {
           val schema = StructType(StructField("_file", StringType) +:
@@ -5212,10 +4802,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
                 StructField(s"_mx${r._1}", StringType)))))
           val ranges = spark.createDataFrame(prunable.map(e => Row.fromSeq(e.filePath +:
             (num.flatMap { r =>
-              val (_, mn, mx) = e.stats.find(_._1 == r._2).get
+              val (mn, mx) = FileSkipping.numBound(e, r._2).get
               Seq(mn, mx)
             } ++ str.flatMap { r =>
-              val (_, mn, mx) = e.sstats.find(_._1 == r._2).get
+              val (mn, mx) = FileSkipping.strBound(e, r._2).get
               Seq(mn, mx)
             }))).asJava, schema)
           val srcKeys = source.select(
@@ -6155,28 +5745,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * skip compiler can't evaluate keeps its files (conservative),
     * and a tracked table's `_row_id` resolves as such a leaf. */
   private[lake] def candidateEntries(spark: SparkSession, m: Manifest,
-      predicate: Column): Seq[Entry] = {
-    if (m.entries.isEmpty) return Nil
-    val analysisFrame0 = m.schema match {
-      case Some(s) => spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-      case None => readGroups(spark, m.entries, m.schema, m.colmap)
-    }
-    val analysisFrame =
-      if (m.rowIdHigh.isDefined)
-        analysisFrame0.withColumn(RowIdCol, lit(null).cast(LongType))
-      else analysisFrame0
-    val analyzedCond = analysisFrame.filter(predicate)
-      .queryExecution.analyzed
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    val useBlooms = m.entries.exists(_.blooms.nonEmpty)
-    analyzedCond match {
-      case Some(c) => m.entries.filter(compileSkipPredicate(c, m.phys, useBlooms))
-      case None    => m.entries
-    }
-  }
+      predicate: Column): Seq[Entry] =
+    if (m.entries.isEmpty) Nil
+    else analyzeOn(spark, m, predicate, withRowIds = m.rowIdHigh.isDefined)._2
+      .fold(m.entries)(c => m.entries.filter(FileSkipping.compile(c, m.phys)))
 
   /** Maintenance compaction: rewrite the CURRENT table state into
     * `numFiles` files — optionally range-clustered on `clusterCol`,

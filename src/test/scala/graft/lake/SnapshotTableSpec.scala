@@ -250,63 +250,92 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(none.columns.toSeq === Seq("l_orderkey", "l_quantity", "l_returnflag"))
   }
 
-  test("skipIntervals: conservative numeric envelopes from top-level conjuncts only") {
+  // the skip compiler ([[FileSkipping]]) over hand-built entries: an
+  // entry with bound [lo, hi] on a column is kept iff some value in it
+  // can satisfy the predicate
+  private lazy val skipFrame = {
     import spark.implicits._
-    val df = Seq((1L, 2.0, "a")).toDF("x", "v", "s")
-    def condOf(c: org.apache.spark.sql.Column) =
-      df.filter(c).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }.get
-    def iv(c: org.apache.spark.sql.Column): Map[String, (Double, Double)] =
-      SnapshotTable.skipIntervals(condOf(c))
-        .map { case (n, lo, hi) => n -> ((lo, hi)) }.toMap
+    Seq((1L, 2.0, "a")).toDF("x", "v", "s")
+  }
+  private def skipCond(c: org.apache.spark.sql.Column) =
+    skipFrame.filter(c).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }.get
+  private def keeps(c: org.apache.spark.sql.Column,
+      stats: Seq[(String, Double, Double)] = Nil,
+      sstats: Seq[(String, String, String)] = Nil): Boolean =
+    FileSkipping.compile(skipCond(c), identity)(
+      SnapshotTable.Entry("d", "f", stats = stats, sstats = sstats))
 
-    assert(iv(col("x") >= 5L && col("x") < 10L)("x") === ((5.0, 10.0)))
-    assert(iv(col("x") === 7L)("x") === ((7.0, 7.0)))
-    assert(iv(lit(3L) <= col("x"))("x") === ((3.0, Double.PositiveInfinity)))
-    assert(iv(col("x").isin(4L, 9L, 2L))("x") === ((2.0, 9.0)))
-    // OR poisons nothing else but contributes nothing itself
-    val m = iv((col("x") === 1L || col("x") === 99L) && col("v") <= 0.5)
-    assert(!m.contains("x") && m("v") === ((Double.NegativeInfinity, 0.5)))
-    // non-numeric comparisons contribute nothing
-    assert(iv(col("s") === "q").isEmpty)
+  test("skipIntervals: conservative numeric envelopes from top-level conjuncts only") {
+    def kx(c: org.apache.spark.sql.Column, lo: Double, hi: Double) =
+      keeps(c, stats = Seq(("x", lo, hi)))
+    // x >= 5 AND x < 10: the envelope is [5, 10)
+    val r = col("x") >= 5L && col("x") < 10L
+    assert(kx(r, 5, 5) && kx(r, 9.5, 9.5) && kx(r, 0, 5) && kx(r, 9, 20))
+    assert(!kx(r, 0, 4.9) && !kx(r, 10, 20))
+    // x = 7: [7, 7]
+    assert(kx(col("x") === 7L, 7, 7) && kx(col("x") === 7L, 6, 8))
+    assert(!kx(col("x") === 7L, 0, 6.9) && !kx(col("x") === 7L, 7.1, 9))
+    // a literal on the left flips: 3 <= x is [3, +inf)
+    assert(kx(lit(3L) <= col("x"), 3, 3) && kx(lit(3L) <= col("x"), 1e300, 1e300))
+    assert(!kx(lit(3L) <= col("x"), 0, 2.9))
+    // IN: within the envelope [2, 9] of its literals, never outside
+    val in = col("x").isin(4L, 9L, 2L)
+    assert(kx(in, 2, 2) && kx(in, 9, 9) && kx(in, 4, 4) && kx(in, 0, 2) && kx(in, 9, 12))
+    assert(!kx(in, 0, 1.9) && !kx(in, 9.1, 20))
+    // OR is not a leaf: the normalizer gives it nothing, and the
+    // conjunct beside it still prunes on its own
+    val or = col("x") === 1L || col("x") === 99L
+    assert(FileSkipping.normalize(skipCond(or)).isEmpty)
+    val withOr = or && col("v") <= 0.5
+    assert(keeps(withOr, stats = Seq(("x", 1, 1), ("v", 0, 0.5))))
+    assert(!keeps(withOr, stats = Seq(("x", 1, 1), ("v", 0.6, 1))))
+    // non-numeric comparisons read no numeric bound
+    assert(keeps(col("s") === "q", stats = Seq(("s", 0, 0))))
     // a huge long literal is widened by an ulp, never narrowed
-    val (lo, hi) = iv(col("x") === Long.MaxValue)("x")
+    val Seq(big) = FileSkipping.normalize(skipCond(col("x") === Long.MaxValue))
+    val Some((lo, hi)) = FileSkipping.numeric(big.lits.head)
     assert(lo < Long.MaxValue.toDouble && hi > 0 && lo <= hi)
+    assert(kx(col("x") === Long.MaxValue, lo, lo))
 
     // a lossless WIDENING cast on the column transfers the interval…
-    assert(iv(col("x").cast("double") === lit(7.0))("x") === ((7.0, 7.0)))
+    assert(FileSkipping.normalize(skipCond(col("x").cast("double") === lit(7.0)))
+      .map(l => (l.attr.name, l.op)) === Seq(("x", FileSkipping.Eq)))
+    assert(kx(col("x").cast("double") === lit(7.0), 7, 7))
+    assert(!kx(col("x").cast("double") === lit(7.0), 8, 9))
     // …but a narrowing/truncating cast is not order-preserving-
     // invertible: CAST(v AS INT) = 5 is satisfied by v = 5.7, so
     // transferring [5, 5] to v's stats could skip a file holding only
     // (5.2, 5.9). Such casts must contribute NO interval.
-    assert(iv(col("v").cast("int") === lit(5)).isEmpty)
-    assert(iv(col("x").cast("int") === lit(5)).isEmpty) // long→int wraps
+    assert(FileSkipping.normalize(skipCond(col("v").cast("int") === lit(5))).isEmpty)
+    assert(keeps(col("v").cast("int") === lit(5), stats = Seq(("v", 5.2, 5.9))))
+    assert(FileSkipping.normalize(skipCond(col("x").cast("int") === lit(5))).isEmpty) // long→int wraps
   }
 
   test("skipStringBounds: conservative string envelopes; casts and non-strings contribute nothing") {
-    import spark.implicits._
-    val df = Seq((1L, 2.0, "a")).toDF("x", "v", "s")
-    def condOf(c: org.apache.spark.sql.Column) =
-      df.filter(c).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }.get
-    def sb(c: org.apache.spark.sql.Column)
-        : Map[String, (Option[String], Option[String])] =
-      SnapshotTable.skipStringBounds(condOf(c))
-        .map { case (n, lo, hi) => n -> ((lo, hi)) }.toMap
-
-    assert(sb(col("s") === "q")("s") === ((Some("q"), Some("q"))))
-    assert(sb(col("s") >= "b" && col("s") < "m")("s") === ((Some("b"), None)) ||
-      SnapshotTable.skipStringBounds(condOf(col("s") >= "b" && col("s") < "m"))
-        .toSet === Set(("s", Some("b"), None), ("s", None, Some("m"))))
-    assert(sb(lit("k") <= col("s"))("s") === ((Some("k"), None)))
-    assert(sb(col("s").isin("m", "b", "x"))("s") === ((Some("b"), Some("x"))))
+    def ks(c: org.apache.spark.sql.Column, lo: String, hi: String) =
+      keeps(c, sstats = Seq(("s", lo, hi)))
+    // s = 'q': [q, q]
+    assert(ks(col("s") === "q", "q", "q") && ks(col("s") === "q", "a", "z"))
+    assert(!ks(col("s") === "q", "r", "z") && !ks(col("s") === "q", "a", "p"))
+    // s >= 'b' AND s < 'm': [b, m)
+    val r = col("s") >= "b" && col("s") < "m"
+    assert(ks(r, "b", "b") && ks(r, "l", "l") && ks(r, "a", "b") && ks(r, "lz", "z"))
+    assert(!ks(r, "a", "az") && !ks(r, "m", "z"))
+    // a literal on the left flips: 'k' <= s is [k, ∞)
+    assert(ks(lit("k") <= col("s"), "k", "k") && ks(lit("k") <= col("s"), "z", "z"))
+    assert(!ks(lit("k") <= col("s"), "a", "j"))
+    // IN: within the envelope [b, x] of its literals, never outside
+    val in = col("s").isin("m", "b", "x")
+    assert(ks(in, "b", "b") && ks(in, "x", "x") && ks(in, "a", "c") && ks(in, "w", "z"))
+    assert(!ks(in, "a", "az") && !ks(in, "y", "z"))
     // numeric comparisons and casts contribute nothing on the string side
-    assert(sb(col("x") === 5L).isEmpty)
-    assert(sb(col("x").cast("string") === "5").isEmpty)
-    // OR contributes nothing
-    assert(sb(col("s") === "a" || col("s") === "z").isEmpty)
+    assert(keeps(col("x") === 5L, sstats = Seq(("x", "a", "a"))))
+    assert(FileSkipping.normalize(skipCond(col("x").cast("string") === "5")).isEmpty)
+    assert(keeps(col("x").cast("string") === "5", sstats = Seq(("x", "6", "6"))))
+    // OR contributes nothing as a leaf
+    assert(FileSkipping.normalize(skipCond(col("s") === "a" || col("s") === "z")).isEmpty)
   }
 
   test("string stats skip files on SQL-path reads; absent stats stay readable") {
