@@ -213,15 +213,14 @@ private[lake] object FileSkipping {
     case (d, false) => (Math.nextDown(d), Math.nextUp(d))
   }
 
-  /** Probe-side bloom hash of a literal, matching the build side's
-    * `xxhash64(col)` (strings) / `xxhash64(cast(col as long))`
-    * (integrals) with seed 42; None when the value is not in the
-    * column's bloom domain. */
+  /** Probe-side bloom item of a literal, the item the writer hashed
+    * for the same value ([[WriterBlooms.item]]); None when the value is
+    * not in the column's bloom domain. */
   private def bloomHash(t: DataType, v: Any): Option[Long] = (t, v) match {
-    case (StringType, s: UTF8String) => Some(XXH64.hashUTF8String(s, 42L))
+    case (StringType, s: UTF8String) => Some(WriterBlooms.item(s))
     case (ByteType | ShortType | IntegerType | LongType,
         n @ (_: Byte | _: Short | _: Int | _: Long)) =>
-      Some(XXH64.hashLong(n.asInstanceOf[Number].longValue, 42L))
+      Some(WriterBlooms.item(n.asInstanceOf[Number].longValue))
     case _ => None
   }
 

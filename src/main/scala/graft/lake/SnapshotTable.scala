@@ -1233,11 +1233,12 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
 
   /** Manifest entries for a freshly written commit dir, each with the
     * footer metadata it was read from. Footer reads (row count +
-    * per-column min/max) are driver-side metadata IO (the table-format
-    * norm), but SEQUENTIAL opens would bottleneck a many-file commit —
-    * one open per file, on [[footerPool]]. */
+    * per-column min/max, the blooms of `bloomCols`) are driver-side
+    * metadata IO (the table-format norm), but SEQUENTIAL opens would
+    * bottleneck a many-file commit — one open per file, on
+    * [[footerPool]]. */
   private def commitFooters(spark: SparkSession, commitDir: String,
-      statsCols: Seq[String])
+      statsCols: Seq[String], bloomCols: Seq[String] = Nil)
       : Seq[(Entry, org.apache.parquet.hadoop.metadata.FileMetaData)] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -1249,19 +1250,20 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // ids monotone in its sort key, deterministically
     val files = listParquet(fs(spark, commitDir), new Path(commitDir)).sorted
     Await.result(Future.traverse(files)(f => Future {
-      val (e, meta) = footerEntry(spark, commitDir, f, statsCols)
+      val (e, meta) = footerEntry(spark, commitDir, f, statsCols, bloomCols)
       (withPartitionStats(e), meta)
     }), Duration.Inf)
   }
 
   private def commitEntries(spark: SparkSession, commitDir: String,
-      statsCols: Seq[String]): Seq[Entry] =
-    commitFooters(spark, commitDir, statsCols).map(_._1)
+      statsCols: Seq[String], bloomCols: Seq[String]): Seq[Entry] =
+    commitFooters(spark, commitDir, statsCols, bloomCols).map(_._1)
 
   /** Files a writer already put on disk, for [[commit]] to publish:
-    * the entries it reported (footer row counts at least; no footer is
-    * re-opened), the LOGICAL schema of their rows and the
-    * logical→physical column mapping they were written under. */
+    * the entries it reported (footer row counts at least, and the
+    * blooms the writer built; no footer is re-opened), the LOGICAL
+    * schema of their rows and the logical→physical column mapping they
+    * were written under. */
   private case class Written(spark: SparkSession, entries: Seq[Entry],
       schema: StructType, colmap: Map[String, String])
 
@@ -1308,6 +1310,15 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       }
     }, b)
   }
+
+  /** The writer of every table data file: zstd parquet whose footers
+    * carry the blooms of the physical columns `bloomCols`
+    * ([[BloomParquetFileFormat]]). */
+  private def dataWriter(df: DataFrame,
+      bloomCols: Seq[String]): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+    df.write.mode("errorifexists").option("compression", "zstd")
+      .format(classOf[BloomParquetFileFormat].getName)
+      .option(WriterBlooms.ColumnsOption, WriterBlooms.encodeColumns(bloomCols))
 
   /** Reads `paths` as logical rows of `schema`, stored under `colmap`. */
   private def readLogical(spark: SparkSession, paths: Seq[String],
@@ -1378,6 +1389,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     // frame — are checked on the written files inside the CAS loop.
     val guardedCs: Map[String, String] =
       prevMeta.map(_.constraints).getOrElse(Map.empty)
+    val bloomCols = prevMeta.map(_.bloomCols).getOrElse(Nil)
     // identity/generated-column signature of the schema this write
     // derived its values from (or didn't: a pre-create read sees
     // none). A CREATE or concurrent evolution landing between this
@@ -1458,9 +1470,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           else guarded.select(guarded.columns.toSeq.map(c =>
             col(c).as(cm.getOrElse(c, c))): _*)
         val physPartCols = partCols.map(c => cm.getOrElse(c, c))
-        val writer = physData.write.mode("errorifexists").option("compression", "zstd")
+        val physBloomCols = bloomCols.map(c => cm.getOrElse(c, c))
+        val writer = dataWriter(physData, physBloomCols)
         (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*) else writer)
-          .parquet(commitDir)
+          .save(commitDir)
         // files materializing __rid record its footer min/max too, so
         // id-addressed maintenance (deleteRowIds) range-prunes rewritten
         // files from the manifest alone, same as position-derived ranges
@@ -1468,12 +1481,13 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           (if (ridCarried && physData.columns.contains(RidCol)) Seq(RidCol)
            else Nil)).distinct
         (data.schema, partCols, cm, bumps,
-          commitEntries(spark, commitDir, physStatsCols))
+          commitEntries(spark, commitDir, physStatsCols, physBloomCols))
     }
-    val physPartCols = partCols.map(c => cm.getOrElse(c, c))
-    val added: Seq[Entry] = withBlooms(spark, files,
-      physicalSchema(dataSchema, cm).filterNot(f => physPartCols.contains(f.name)),
-      prevMeta.map(_.bloomCols.map(c => cm.getOrElse(c, c))).getOrElse(Nil))
+    // the writer hashed each file's blooms; files written elsewhere
+    // keep only those of the columns the table still names
+    val physBlooms = bloomCols.map(c => cm.getOrElse(c, c)).toSet
+    val added: Seq[Entry] =
+      files.map(e => e.copy(blooms = e.blooms.filter(b => physBlooms(b._1))))
     // written here: our dir (hive discovery yields the partition
     // columns); passed through: the writer's files
     val writtenPaths =
@@ -1731,11 +1745,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     val real = realPathOf(path)
     val staging =
       s"$real/data/b-${java.util.UUID.randomUUID.toString.take(12)}"
-    dfs.zipWithIndex
+    val bloomCols = prevMeta.map(_.bloomCols).getOrElse(Nil)
+    dataWriter(dfs.zipWithIndex
       .map { case (df, i) => df.withColumn(disc, lit(i)) }
-      .reduce(_.unionByName(_))
-      .write.mode("errorifexists").option("compression", "zstd")
-      .partitionBy(disc).parquet(staging)
+      .reduce(_.unionByName(_)), bloomCols)
+      .partitionBy(disc).save(staging)
     val f = fs(spark, path)
     val versions = dfs.zipWithIndex.map { case (df, i) =>
       val commitDir =
@@ -1745,8 +1759,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         require(f.rename(src, new Path(commitDir)),
           s"could not move batch partition $i into $commitDir")
       } else f.mkdirs(new Path(commitDir)) // empty frame: fileless commit
-      commit(Right(Written(spark, commitEntries(spark, commitDir, Nil), df.schema,
-        Map.empty)), path, Nil, identity).version
+      commit(Right(Written(spark, commitEntries(spark, commitDir, Nil, bloomCols),
+        df.schema, Map.empty)), path, Nil, identity).version
     }
     f.delete(new Path(staging), true)
     versions
@@ -1908,7 +1922,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
       quarantinePath: String, files: Seq[(String, String, Long)],
       writeSchema: StructType, txnAppId: String,
       txnVersion: Long,
-      writtenColmap: Map[String, String] = Map.empty): (Option[Long], Long) = {
+      writtenColmap: Map[String, String] = Map.empty,
+      blooms: Map[String, Seq[(String, String)]] = Map.empty): (Option[Long], Long) = {
     if (streamTxnVersion(spark, path, txnAppId).exists(_ >= txnVersion))
       return (None, 0L)
     val m = latestVersion(spark, path).map(v => readManifestFull(spark, path, v))
@@ -1920,7 +1935,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     val nBad = tagged.fold(0L)(_.filter(col("__q_bad") === 1).count())
     if (nBad == 0L)
       return (commitStreamEpoch(spark, path, files, writeSchema,
-        txnAppId, txnVersion, writtenColmap = writtenColmap), 0L)
+        txnAppId, txnVersion, writtenColmap = writtenColmap, blooms = blooms), 0L)
     val c = commitSplit(tagged.get, nBad, path, quarantinePath, Nil,
       "streamAppend", Some(txnAppId -> txnVersion))
     files.map(_._1).distinct.foreach(d => fs(spark, path).delete(new Path(d), true): Unit)
@@ -1930,7 +1945,8 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   /** Exactly-once streaming append (the manifest half of the
     * `writeStream.format("graft-snapshot")` sink): publish `files` —
     * (commitDir, path, footer rows) triples already written by
-    * executor-side epoch writers under `writtenColmap` — as ONE
+    * executor-side epoch writers under `writtenColmap`, with the
+    * blooms each writer built (`blooms`, by file path) — as ONE
     * [[commit]] that also advances the `(txnAppId → txnVersion)`
     * watermark in the manifest header. If the table has already
     * committed `txnVersion` (or later) for this app id, returns None
@@ -1954,10 +1970,11 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   def commitStreamEpoch(spark: SparkSession, path: String,
       files: Seq[(String, String, Long)], writeSchema: StructType,
       txnAppId: String, txnVersion: Long, maxAttempts: Int = 20,
-      writtenColmap: Map[String, String] = Map.empty): Option[Long] = {
+      writtenColmap: Map[String, String] = Map.empty,
+      blooms: Map[String, Seq[(String, String)]] = Map.empty): Option[Long] = {
     require(txnAppId.nonEmpty, "txnAppId must be nonempty")
-    val written = Written(spark, files.map { case (d, f, n) => Entry(d, f, n) },
-      writeSchema, writtenColmap)
+    val written = Written(spark, files.map { case (d, f, n) =>
+      Entry(d, f, n, blooms = blooms.getOrElse(f, Nil)) }, writeSchema, writtenColmap)
     val c = rerunOnFunnelChange(maxAttempts)(commit(Right(written), path, Nil,
       identity, maxAttempts, op = "streamAppend", txn = Some(txnAppId -> txnVersion)))
     Option.unless(c.replay)(c.version)
@@ -2204,13 +2221,6 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     readWhereImpl(spark, path, predicate, version, sqlAlias,
       withRowIds = false)
 
-  /** [[readWhere]] composed with row tracking: the pruned scan (both
-    * pruning families — partition-transform projection and manifest-
-    * stats skipping) carries the stable `_row_id` column, so an
-    * incremental consumer reads ONLY the files its predicate can
-    * match while still keying state by row identity. Without this
-    * seam the consumer's only tracked read was the full-table
-    * [[readWithRowIds]] — the wrong plan at 10^6 files. */
   /** Does a (possibly unresolved) predicate/expression reference the
     * `_row_id` metadata column? Drives the tracked-frame routing of
     * DML: `DELETE FROM t WHERE _row_id IN (...)` must find files and
@@ -2219,6 +2229,13 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     org.apache.spark.sql.graftbridge.ColumnBridge
       .referencesName(c, RowIdCol)
 
+  /** [[readWhere]] composed with row tracking: the pruned scan (both
+    * pruning families — partition-transform projection and manifest-
+    * stats skipping) carries the stable `_row_id` column, so an
+    * incremental consumer reads ONLY the files its predicate can
+    * match while still keying state by row identity. Without this
+    * seam the consumer's only tracked read was the full-table
+    * [[readWithRowIds]] — the wrong plan at 10^6 files. */
   def readWhereWithRowIds(spark: SparkSession, path: String,
       predicate: Column, version: Option[Long] = None,
       sqlAlias: Option[String] = None): DataFrame =
@@ -3082,17 +3099,22 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * max) of each requested numeric column — read driver-side at
     * commit time, exactly how Iceberg/Delta collect file stats.
     * Non-numeric / stats-less columns simply contribute no range. The
-    * footer's file metadata (schema, key-values) comes back with the
-    * entry. */
+    * blooms the writer stored for `bloomCols` ([[WriterBlooms]]) and
+    * the footer's file metadata (schema, key-values) come back with
+    * the entry. */
   private def footerEntry(spark: SparkSession, commitDir: String, file: String,
-      statsCols: Seq[String])
+      statsCols: Seq[String], bloomCols: Seq[String])
       : (Entry, org.apache.parquet.hadoop.metadata.FileMetaData) = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.column.statistics._
-    val in = HadoopInputFile.fromPath(new Path(file),
-      spark.sparkContext.hadoopConfiguration)
-    val reader = ParquetFileReader.open(in)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // read options from the session's loaded configuration: the
+    // one-argument open builds a fresh Configuration, which re-parses
+    // Hadoop's XML defaults on every footer
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf),
+      HadoopReadOptions.builder(conf).build())
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
@@ -3192,8 +3214,10 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
           else None)
           .map(ns => (column, ns.sum))
       }
-      (Entry(commitDir, file, rows, stats, sstats = sstats, nulls = nulls.toSeq),
-        reader.getFooter.getFileMetaData)
+      val meta = reader.getFooter.getFileMetaData
+      (Entry(commitDir, file, rows, stats, sstats = sstats,
+        blooms = WriterBlooms.fromFooter(meta.getKeyValueMetaData, bloomCols),
+        nulls = nulls.toSeq), meta)
     } finally reader.close()
   }
 
@@ -3236,100 +3260,9 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
   }
 
   // ---- per-file bloom filters --------------------------------------
-  // Point-lookup data skipping for high-cardinality keys: min/max
-  // bounds prune NOTHING when every file's range spans the key space
-  // (a uniformly distributed natural key like the reference's
-  // sessionId — reference jobs/ev_sessions_gold_etl.py:139 — is
-  // exactly this shape), so a point MERGE/DELETE/WHERE reads the
-  // whole table. An opt-in per-file bloom over xxhash64(column)
-  // closes it: `WHERE key = x` and point MERGE consult the manifest's
-  // blooms driver-side and drop every file whose bloom excludes the
-  // key. Files without a bloom (pre-opt-in, zero-row, or ineligible
-  // type) stay conservatively readable.
-
-  /** Column types blooms support: hashed as UTF8 bytes (strings) or
-    * as a long (integrals) — both via Spark's codegen'd xxhash64 on
-    * the build side and XXH64 statics on the probe side (seed 42). */
-  private[lake] def bloomEligible(dt: DataType): Boolean = dt match {
-    case StringType | LongType | IntegerType | ShortType | ByteType => true
-    case _ => false
-  }
-
-  private val BloomMaxBits: Long = 1L << 19 // 64 KiB/file/column at the cap
-
-  /** Attach per-file blooms for `bloomCols` to freshly committed
-    * entries, whose files hold the physical columns `written`: ONE
-    * distributed job reading only the bloom columns of the new files
-    * (columnar, projection-pruned, with the known schema — no
-    * schema-inference job), grouped by
-    * `input_file_name()`, aggregated by [[graft.functions
-    * .BloomBitsAggregator]]. Sized for the commit's largest file at
-    * ~1% FPR, capped by [[BloomMaxBits]]. The driver
-    * receives files × columns × ≤cap bytes — bounded by the COMMIT's
-    * file count, never the table's.
-    *
-    * MEASURED CHOICES (the same append of 2M rows × 8 files with
-    * blooms off vs on, medians of 5 interleaved rounds):
-    *  - Why a SECOND read of files the commit just wrote, rather
-    *    than fusing the aggregation into the input: per-file blooms
-    *    need the file split, which only exists after the write — and
-    *    the input frame's lineage is arbitrary (a merge's whole
-    *    join), so a pre-write aggregation re-runs the full upstream
-    *    plan, while this re-read costs one bloom-column scan of
-    *    page-cached parquet (0.10s of the 0.42s total bloom
-    *    overhead).
-    *  - A mapPartitions fold into live BloomFilters was built to
-    *    beat the udaf-groupBy machinery and TIED it exactly (0.254s
-    *    vs 0.255s): the cost is per-row materialization of the
-    *    (file, hash) pair, which both formulations pay — refuted,
-    *    so the simpler declarative form ships. */
-  private def withBlooms(spark: SparkSession, entries: Seq[Entry],
-      written: Seq[StructField], bloomCols: Seq[String]): Seq[Entry] = {
-    val types = written.map(f => f.name -> f.dataType).toMap
-    val eligible = bloomCols.filter(c => types.get(c).exists(bloomEligible))
-    if (eligible.isEmpty || entries.isEmpty) return entries
-    val df = spark.read.schema(StructType(eligible.map(c => StructField(c, types(c)))))
-      .parquet(entries.map(_.filePath): _*)
-    val maxRows = math.max(1L, entries.map(_.rows).max)
-    val agg = udaf(new graft.functions.BloomBitsAggregator(maxRows,
-      math.min(BloomMaxBits, optimalBloomBits(maxRows, 0.01))))
-    val hashed = eligible.map { c =>
-      val h = types(c) match {
-        case StringType => xxhash64(col(c))
-        case _          => xxhash64(col(c).cast("long"))
-      }
-      agg(h).as(c)
-    }
-    val perFile = df.select(input_file_name().as("_graft_file") +:
-        eligible.map(col): _*)
-      .groupBy("_graft_file").agg(hashed.head, hashed.tail: _*)
-      .collect()
-    val byFile: Map[String, Map[String, String]] = perFile.map { r =>
-      normInputFile(r.getString(0)) -> eligible.zipWithIndex.map { case (c, i) =>
-        c -> java.util.Base64.getEncoder.encodeToString(r.getAs[Array[Byte]](i + 1))
-      }.toMap
-    }.toMap
-    // every non-empty file MUST have produced an aggregation group —
-    // a miss means the input_file_name/manifest path identities
-    // drifted, which would silently leave files bloom-less (pruning
-    // quietly defeated, never wrong results). Fail loudly instead.
-    val missing = entries.filter(e =>
-      e.rows > 0 && !byFile.contains(normFile(e.filePath)))
-    require(missing.isEmpty,
-      s"bloom build matched no aggregation group for ${missing.size} " +
-        s"non-empty file(s) (e.g. ${missing.head.filePath}) — " +
-        "input_file_name/manifest path normalization drift")
-    entries.map { e =>
-      byFile.get(normFile(e.filePath)) match {
-        case Some(m) => e.copy(blooms = eligible.flatMap(c => m.get(c).map(c -> _)))
-        case None    => e // zero-row file: no group, conservatively bloom-less
-      }
-    }
-  }
-
-  /** Standard bloom sizing: m = -n·ln(p)/ln(2)², rounded up. */
-  private def optimalBloomBits(n: Long, p: Double): Long =
-    math.ceil(-n * math.log(p) / (math.log(2) * math.log(2))).toLong
+  // Built by the writer ([[WriterBlooms]]): each file's footer carries
+  // the blooms of the table's bloom columns, and the commit's footer
+  // read records them with the entry.
 
   /** Opt columns into per-file bloom recording (metadata-only
     * commit). Applies to files written AFTER this commit — existing
@@ -3348,7 +3281,7 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
         cols.foreach { c =>
           val f = s.fields.find(_.name.equalsIgnoreCase(c))
           require(f.nonEmpty, s"bloom column '$c' not in the table schema")
-          require(bloomEligible(f.get.dataType),
+          require(WriterBlooms.eligible(f.get.dataType),
             s"bloom column '$c' has type ${f.get.dataType.simpleString}; " +
               "only string and integral columns are supported")
         }
@@ -3379,17 +3312,19 @@ object SnapshotTable extends org.apache.spark.internal.Logging {
     * make ([[freshPhysicalNames]]), computed at epoch start so the
     * executor writers emit the minted names directly.
     * [[commitStreamEpoch]] revalidates the minted entries at CAS
-    * time and publishes them into the manifest's colmap. */
+    * time and publishes them into the manifest's colmap. Returned with
+    * the physical columns the epoch's writers hash into each file's
+    * blooms: the table's bloom columns at epoch start. */
   private[graft] def streamWriteMapping(spark: SparkSession, path: String,
-      querySchema: StructType): Map[String, String] =
+      querySchema: StructType): (Map[String, String], Seq[String]) =
     latestVersion(spark, path) match {
-      case None => Map.empty
+      case None => (Map.empty, Nil)
       case Some(v) =>
         val m = readManifestFull(spark, path, v)
         val existing = m.schema.map(_.fieldNames.toSet).getOrElse(Set.empty)
         val fresh = querySchema.fieldNames.toSeq
           .filterNot(c => existing(c) || c.startsWith("__p_"))
-        m.colmap ++ freshPhysicalNames(m, fresh)
+        (m.colmap ++ freshPhysicalNames(m, fresh), m.bloomCols.map(m.phys))
     }
 
   /** Current bloom columns (empty when the feature is off). */

@@ -18,7 +18,7 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 
-import graft.lake.SnapshotTable
+import graft.lake.{RowBlooms, SnapshotTable}
 
 /** Structured Streaming SINK half of the snapshot table (the
   * `writeStream.format("graft-snapshot")` counterpart of
@@ -101,7 +101,7 @@ private[sources] class SnapshotStreamingWrite(path: String, schema: StructType,
     // taken (re-add after drop, or the freed side of a rename) gets a
     // freshly MINTED name here, the same move the batch write paths
     // make; the commit revalidates and publishes the minted entries.
-    val cm = SnapshotTable.streamWriteMapping(spark, path, schema)
+    val (cm, bloomCols) = SnapshotTable.streamWriteMapping(spark, path, schema)
     epochColmap = cm
     val physSchema =
       if (cm.isEmpty) schema
@@ -113,6 +113,7 @@ private[sources] class SnapshotStreamingWrite(path: String, schema: StructType,
     val commitDir = s"${SnapshotTable.dataDirOf(path)}/c-" +
       java.util.UUID.randomUUID.toString.take(12)
     new SnapshotStreamWriterFactory(commitDir, physSchema,
+      bloomCols,
       new SerializableWriterConf(spark.sessionState.newHadoopConf()))
   }
 
@@ -125,6 +126,7 @@ private[sources] class SnapshotStreamingWrite(path: String, schema: StructType,
     // needs no watermark advance for it
     val commitDirs = files.map(_.commitDir).distinct.toSeq
     val triples = files.map(m => (m.commitDir, m.filePath, m.rows)).toSeq
+    val blooms = files.map(m => m.filePath -> m.blooms).toMap
     val committed =
       if (failMode == "quarantine")
         // the split path deletes the mixed dirs itself when it
@@ -132,10 +134,10 @@ private[sources] class SnapshotStreamingWrite(path: String, schema: StructType,
         // dirs survive to the cleanup below
         SnapshotTable.commitStreamEpochQuarantine(spark, path,
           quarantinePath.get, triples, schema, txnAppId, epochId,
-          writtenColmap = epochColmap)._1
+          writtenColmap = epochColmap, blooms = blooms)._1
       else
         SnapshotTable.commitStreamEpoch(spark, path, triples, schema,
-          txnAppId, epochId, writtenColmap = epochColmap)
+          txnAppId, epochId, writtenColmap = epochColmap, blooms = blooms)
     if (committed.isEmpty) {
       // replayed epoch: rows are already live from the pre-crash
       // commit — drop the duplicates this attempt wrote
@@ -158,9 +160,10 @@ private[sources] class SnapshotStreamingWrite(path: String, schema: StructType,
 }
 
 /** Commit dirs with >1 distinct dir would break [[SnapshotTable]]'s
-  * Entry(commitDir, file) pairing; keep each file with ITS dir. */
+  * Entry(commitDir, file) pairing; keep each file with ITS dir.
+  * `blooms`: the file's (physical column, payload) blooms. */
 private case class SnapshotWriteMessage(commitDir: String, filePath: String,
-    rows: Long) extends WriterCommitMessage
+    rows: Long, blooms: Seq[(String, String)] = Nil) extends WriterCommitMessage
 
 /** Minimal serializable Hadoop-conf carrier for the epoch writers
   * (same concern as the source's reader conf: object-store creds and
@@ -179,10 +182,12 @@ private class SerializableWriterConf(
 }
 
 private class SnapshotStreamWriterFactory(commitDir: String, schema: StructType,
-    conf: SerializableWriterConf) extends StreamingDataWriterFactory {
+    bloomCols: Seq[String], conf: SerializableWriterConf)
+    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new SnapshotParquetDataWriter(commitDir, schema, conf, partitionId, taskId)
+    new SnapshotParquetDataWriter(commitDir, schema, bloomCols, conf,
+      partitionId, taskId)
 }
 
 /** One task's epoch output → one zstd parquet file under the epoch's
@@ -191,10 +196,12 @@ private class SnapshotStreamWriterFactory(commitDir: String, schema: StructType,
   * (taskId suffix) and only the committed attempt's message reaches
   * the driver — the loser's file is removed by abort(), or at worst
   * left as an unreferenced orphan (vacuum's concern, same class as a
-  * crashed batch commit). */
+  * crashed batch commit). Each row is hashed into the file's blooms
+  * over `bloomCols` as it is written, exactly like the batch writer
+  * ([[graft.lake.RowBlooms]]); the message carries them. */
 private class SnapshotParquetDataWriter(commitDir: String, schema: StructType,
-    conf: SerializableWriterConf, partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
+    bloomCols: Seq[String], conf: SerializableWriterConf, partitionId: Int,
+    taskId: Long) extends DataWriter[InternalRow] {
 
   private val filePath =
     f"$commitDir/part-$partitionId%05d-$taskId-stream.parquet"
@@ -202,6 +209,7 @@ private class SnapshotParquetDataWriter(commitDir: String, schema: StructType,
   private lazy val factory = new SimpleGroupFactory(msgType)
   private var writer: ParquetWriter[Group] = _
   private var rows = 0L
+  private val blooms = new RowBlooms(schema, bloomCols)
 
   override def write(row: InternalRow): Unit = {
     if (writer == null) {
@@ -214,13 +222,14 @@ private class SnapshotParquetDataWriter(commitDir: String, schema: StructType,
         .build()
     }
     writer.write(SnapshotParquetCodec.toGroup(factory, schema, row))
+    blooms.add(row)
     rows += 1L
   }
 
   override def commit(): WriterCommitMessage = {
     if (writer != null) writer.close()
     if (rows == 0L) SnapshotWriteMessage(commitDir, "", 0L)
-    else SnapshotWriteMessage(commitDir, filePath, rows)
+    else SnapshotWriteMessage(commitDir, filePath, rows, blooms.payloads)
   }
 
   override def abort(): Unit = {

@@ -177,10 +177,9 @@ class BloomSkippingSpec extends SparkTestBase {
   }
 
   test("blooms attach under paths with URL-encodable characters (space in dir name)") {
-    // input_file_name() returns a URI-ESCAPED string while manifest
-    // paths carry literal characters — withBlooms must normalize both
-    // sides or these files silently stay bloom-less (and its internal
-    // every-non-empty-file-got-a-bloom require would throw here)
+    // the blooms ride each file's footer, which the commit opens under
+    // the listed (literal-character) path: files under a path with
+    // URL-encodable characters must not end up bloom-less
     val path = Files.createTempDirectory("graft bloom sp").toString + "/t a ble"
     buildTable(path, 300, 3)
     val v = SnapshotTable.latestVersion(spark, path).get

@@ -2,7 +2,8 @@ package graft.lake
 
 import org.apache.spark.sql.types._
 
-import SnapshotTable.{Entry, bloomEligible, decodeBloom, utf8Cmp}
+import SnapshotTable.{Entry, decodeBloom, utf8Cmp}
+import WriterBlooms.{eligible => bloomEligible}
 
 /** The skip compiler as it stood before [[FileSkipping]]: one
   * compiler over four per-family extractors, each with its own

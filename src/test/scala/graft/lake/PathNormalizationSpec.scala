@@ -18,11 +18,13 @@ class PathNormalizationSpec extends SparkTestBase {
   test("bloom build, UPDATE and DELETE work in a directory literally named 'a%20b'") {
     val base = Files.createTempDirectory("graft-pct").toString
     val path = s"$base/a%20b/t"
-    // bloom build fuses into the commit and its loud-fail require
-    // trips on any input_file_name/manifest identity drift
+    // the blooms are written into each file's footer and read back
+    // by the commit's footer open under the listed path
     SnapshotTable.append(Seq((1L, "x"), (2L, "y")).toDF("k", "s").coalesce(1), path)
     SnapshotTable.setBloomColumns(spark, path, Seq("k"))
     SnapshotTable.append(Seq((3L, "z")).toDF("k", "s").coalesce(1), path)
+    assert(SnapshotTable.readManifest(spark, path, SnapshotTable.latestVersion(spark, path).get)
+      .exists(_.blooms.nonEmpty))
     assert(SnapshotTable.read(spark, path).count() === 3L)
     // UPDATE and DELETE map input_file_name back to manifest entries
     SnapshotTable.update(spark, path, Seq("s" -> lit("upd")), col("k") === 2L)

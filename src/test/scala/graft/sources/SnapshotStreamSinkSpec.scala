@@ -415,7 +415,7 @@ class SnapshotStreamSinkSpec extends SparkTestBase {
     SnapshotTable.renameColumn(spark, t, "tag", "label")        // label -> physical 'tag'
     // the epoch starts: its writers capture the mapping, then a DROP lands
     val schema = Seq(2L).toDF("k").schema
-    val cm = SnapshotTable.streamWriteMapping(spark, t, schema)
+    val (cm, _) = SnapshotTable.streamWriteMapping(spark, t, schema)
     assert(cm === Map("label" -> "tag"))
     SnapshotTable.dropColumn(spark, t, "label")                 // tombstones 'tag'
     val dir = s"$t/data/c-stale"
